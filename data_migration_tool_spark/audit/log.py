@@ -7,8 +7,9 @@ follow FIXTURES.md §5 (derived from ``terraform/**/bq_schemas/*.json``).
 
 Scale: audit rows are tiny; each insert is one small parquet file.
 At fleet scale you'd point ``root`` at object storage and compact
-periodically — the read path (``table``) is schema-merged parquet either
-way.
+periodically. Every append to a table carries that table's one schema,
+so the read path (``table``) takes it from one part file's footer — no
+schema merge and no inference job.
 """
 
 from __future__ import annotations
@@ -17,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from data_migration_tool_spark.tables import parquet_schema
 
 _S = T.StructField
 
@@ -231,7 +234,9 @@ class AuditLog:
 
     def table(self, table: str) -> DataFrame:
         if self.exists(table):
-            return self.spark.read.parquet(self.path(table))
+            path = self.path(table)
+            schema, _ = parquet_schema(self.spark, path)
+            return self.spark.read.schema(schema).parquet(path)
         schema = KNOWN_SCHEMAS.get(table)
         if schema is None:
             raise FileNotFoundError(f"audit table {table} has no rows and no known schema")

@@ -27,9 +27,27 @@ from contextlib import contextmanager
 
 
 @contextmanager
+def scoped_conf(spark, conf: dict[str, str]):
+    """Set session SQL conf for the block, then put each key back as it
+    was: its old value, or unset if the session never set it. Restoring
+    an unset key by ``get``/``set`` would pin the current default into a
+    session that never chose it, such as a fresh SparkSession built
+    without ``session.py``'s defaults."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def scoped_shuffle_partitions(spark, n: int):
-    """Temporarily size ``spark.sql.shuffle.partitions``; restores the
-    session value on exit.
+    """Temporarily size ``spark.sql.shuffle.partitions`` (``scoped_conf``).
 
     For ITERATIVE operators whose loop state is dimension-scale (a
     parts catalog's ranks, a vocabulary's counts): the loop's per-round
@@ -39,18 +57,11 @@ def scoped_shuffle_partitions(spark, n: int):
     loop (materialize fact-scale inputs before entering), and only when
     they can argue the state is small; results must be
     partition-count-independent (the exact-integer lanes are)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
-@contextmanager
 def scoped_static_plans(spark):
-    """Temporarily disable adaptive query execution; restores the
-    session value on exit.
+    """Temporarily disable adaptive query execution (``scoped_conf``).
 
     For ITERATIVE operators whose per-round plan shape is FULLY KNOWN
     (broadcast hint explicit, shuffle partitions pinned to the state
@@ -58,15 +69,9 @@ def scoped_static_plans(spark):
     re-planning, but inside such a loop there is nothing left to
     re-plan, and its cost is real — every exchange materializes as its
     own stage-job plus a re-optimization round, multiplying the
-    driver-scheduled job count (r14, VERDICT r13 #2: the exact
-    PageRank loop ran 36 jobs with AQE vs 16 without, 4.5 s vs 3.7 s
-    at sf0.1, identical fixed-point results). Scope ONLY loop
-    execution whose results are plan-independent; leave fact-scale
-    scans (which want AQE coalescing/skew handling) outside."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    driver-scheduled job count (the exact PageRank loop ran 36 jobs
+    with AQE vs 16 without, 4.5 s vs 3.7 s at sf0.1, identical
+    fixed-point results). Scope ONLY loop execution whose results are
+    plan-independent; leave fact-scale scans (which want AQE
+    coalescing/skew handling) outside."""
+    return scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"})

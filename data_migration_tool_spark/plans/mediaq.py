@@ -33,7 +33,7 @@ from data_migration_tool_spark.operators.multimodal import (
     frame_sample_plan,
     sample_frames,
 )
-from data_migration_tool_spark.tables import load_table
+from data_migration_tool_spark.tables import load_table, parquet_schema
 
 def _spread_seed(d: DataFrame) -> DataFrame:
     """Round-robin the generator seed frame across the cluster before a
@@ -1108,7 +1108,7 @@ def media_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(work, "landing")
     media.repartition(3).write.parquet(landing)
 
-    schema = spark.read.parquet(landing).schema
+    schema, _ = parquet_schema(spark, landing)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

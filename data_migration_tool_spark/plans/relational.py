@@ -1012,20 +1012,24 @@ def price_dispersion_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 PRICE_DISPERSION_SQL = """
 WITH partials AS (
   SELECT l_returnflag, COUNT(*) AS n,
-         SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS sx_d,
+         SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS sx,
          SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-             * CAST(l_extendedprice AS DECIMAL(12,2))) AS sxx_d
+             * CAST(l_extendedprice AS DECIMAL(12,2))) AS sxx
   FROM lineitem GROUP BY l_returnflag
+),
+d AS (
+  -- VARCHAR-routed: DuckDB's wide DECIMAL -> DOUBLE cast is not
+  -- correctly rounded (1 ulp off on sf0.001's flag-A sxx); Spark's is
+  SELECT l_returnflag, n,
+         CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS sx_d,
+         CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS sxx_d
+  FROM partials
 )
 SELECT l_returnflag, n,
-       CAST(sx_d AS DOUBLE) / n AS mean_price,
-       (CAST(sxx_d AS DOUBLE)
-          - CAST(sx_d AS DOUBLE) * CAST(sx_d AS DOUBLE) / n)
-         / (n - 1) AS var_price,
-       sqrt((CAST(sxx_d AS DOUBLE)
-          - CAST(sx_d AS DOUBLE) * CAST(sx_d AS DOUBLE) / n)
-         / (n - 1)) AS stddev_price
-FROM partials
+       sx_d / n AS mean_price,
+       (sxx_d - sx_d * sx_d / n) / (n - 1) AS var_price,
+       sqrt((sxx_d - sx_d * sx_d / n) / (n - 1)) AS stddev_price
+FROM d
 """
 
 

@@ -18,15 +18,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_migration_tool_spark.partitioning import scoped_conf
 from data_migration_tool_spark.streaming.file_stream import windowed_event_counts
 from data_migration_tool_spark.tables import (
-    _nanos_timestamp_cols,
     load_table,
     normalize_timestamps,
+    stream_table,
     table_path,
 )
-
-from contextlib import contextmanager
 
 
 def _stage_events(src: str, landing: str) -> None:
@@ -87,54 +86,53 @@ def _par_jobs(*thunks) -> list:
         return [f.result() for f in futs]
 
 
-@contextmanager
 def _no_data_batches_off(spark: SparkSession):
     """Skip the trailing NO-DATA micro-batch for drains whose sink
-    content cannot depend on it (r14, VERDICT r13 #3 — drain fixed
-    cost). After the last data batch, the engine normally runs one
-    empty batch for eager state maintenance (watermark-driven eviction
-    + emission); a profiled inner interval join spent 0.8 s of its
-    2.4 s drain there (state commit + re-planning) producing ZERO
-    output rows — inner-join matches emit in the data batch itself,
-    and an AvailableNow drain tears the state down right after. Apply
-    ONLY where the no-data batch provably cannot add sink rows: inner
-    stream-stream joins (no watermark-gated emission), complete-mode
-    aggregates (the batch re-emits the identical aggregate from
-    unchanged state), and NoTimeout stateful processors (all emission
-    is data-driven). The left-outer join MUST keep it — its NULL
-    emissions fire exactly in that watermark-advancing batch (the
-    oracle pins this: removing them hash-fails) — and any future
-    timeout/timer-driven processor would too. Restores the session
-    value afterwards."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    content cannot depend on it. After the last data batch, the engine
+    normally runs one empty batch for eager state maintenance
+    (watermark-driven eviction + emission); a profiled inner interval
+    join spent 0.8 s of its 2.4 s drain there (state commit +
+    re-planning) producing ZERO output rows — inner-join matches emit
+    in the data batch itself, and an AvailableNow drain tears the state
+    down right after. Apply ONLY where the no-data batch provably cannot
+    add sink rows: inner stream-stream joins (no watermark-gated
+    emission), complete-mode aggregates (the batch re-emits the
+    identical aggregate from unchanged state), and NoTimeout stateful
+    processors (all emission is data-driven). The left-outer join MUST
+    keep it — its NULL emissions fire exactly in that
+    watermark-advancing batch (the oracle pins this: removing them
+    hash-fails) — and any future timeout/timer-driven processor would
+    too. Scoped by ``scoped_conf``."""
+    return scoped_conf(
+        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    )
 
 
-@contextmanager
-def _stream_shuffle(spark: SparkSession, n: int = 8):
-    """Size the state-store partition count for a test-scale drain.
+def _stream_shuffle(spark: SparkSession, landing: str):
+    """Size the state-store partition count from the landed input.
 
     Structured Streaming fixes its state partitioning to
-    ``spark.sql.shuffle.partitions`` at the first micro-batch. These
-    registry queries drain ONE landed file, where 32 state partitions
-    mean 32 state-store instances of per-partition overhead for a few
-    thousand rows — pure fixed cost. At production volume the same
-    queries want the cluster-sized default (state partitioning scales
-    with stream volume; semantics are partition-count-independent,
-    which is also why this knob cannot change results). Restores the
-    session value afterwards."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
+    ``spark.sql.shuffle.partitions`` at the first micro-batch, and every
+    state partition is one state store to commit per trigger. The count
+    follows the batch-AQE sizing rule, applied once to the AvailableNow
+    drain: ceil(landed bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``),
+    clamped to [1, the session's ``spark.sql.shuffle.partitions``]. A
+    one-file test landing gets one store instead of a fixed fan-out of
+    per-store overhead for a few thousand rows; a large landing still
+    gets many. Semantics are partition-count-independent, so the count
+    cannot change results. Scoped by ``scoped_conf``; it also sizes the
+    batch shuffles a foreachBatch sink runs inside the drain."""
+    landed = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(landing)
+        for f in files
+    )
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = min(max(-(-landed // advisory), 1), cap)
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def events_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,19 +149,12 @@ def events_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(landing)
     _stage_events(src, landing)
 
-    ns_cols = _nanos_timestamp_cols(src)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(landing).schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    stream = normalize_timestamps(stream)
+    stream = stream_table(spark, landing)
 
     sink = f"events_daily_{uuid.uuid4().hex[:8]}"
     # complete-mode agg: the no-data maintenance batch recomputes the
     # identical aggregate from unchanged state — skip it (r14)
-    with _stream_shuffle(spark), _no_data_batches_off(spark):
+    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
         q = (
             windowed_event_counts(stream, window="1 day", watermark="1 day")
             .writeStream.outputMode("complete")
@@ -201,19 +192,12 @@ def events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(landing)
     _stage_events(src, landing)
 
-    ns_cols = _nanos_timestamp_cols(src)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(landing).schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    stream = normalize_timestamps(stream)
+    stream = stream_table(spark, landing)
 
     sink = f"events_sessions_{uuid.uuid4().hex[:8]}"
     # NoTimeout stateful processor: emission is data-driven only, the
     # no-data batch cannot add sink rows — skip it (r14)
-    with _stream_shuffle(spark), _no_data_batches_off(spark):
+    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
         q = (
             sessionize_stream(stream)
             .writeStream.outputMode("update")
@@ -329,19 +313,12 @@ def events_stream_user_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(landing)
     _stage_events(src, landing)
 
-    ns_cols = _nanos_timestamp_cols(src)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(landing).schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    stream = normalize_timestamps(stream)
+    stream = stream_table(spark, landing)
 
     sink = f"events_quota_{uuid.uuid4().hex[:8]}"
     # NoTimeout stateful processor: emission is data-driven only, the
     # no-data batch cannot add sink rows — skip it (r14)
-    with _stream_shuffle(spark), _no_data_batches_off(spark):
+    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
         q = (
             quota_stream(stream)
             .writeStream.outputMode("update")
@@ -397,19 +374,8 @@ def events_stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFr
     os.makedirs(landing)
     _stage_events(src, landing)
 
-    ns_cols = _nanos_timestamp_cols(src)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(landing).schema
-
-    def _stream():
-        s = spark.readStream.schema(schema).parquet(landing)
-        for c in ns_cols:
-            s = s.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-        return normalize_timestamps(s)
-
     views = (
-        _stream()
+        stream_table(spark, landing)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
@@ -419,7 +385,7 @@ def events_stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFr
         .withWatermark("v_ts", "2 hours")
     )
     purchases = (
-        _stream()
+        stream_table(spark, landing)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -441,7 +407,7 @@ def events_stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFr
     # trailing no-data state-maintenance batch adds nothing to the
     # sink — skip it (r14; the left-outer twin keeps it, its NULL
     # rows emit exactly there)
-    with _stream_shuffle(spark), _no_data_batches_off(spark):
+    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
         q = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -536,14 +502,7 @@ def events_stream_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     os.makedirs(landing)
     _stage_events(src, landing)
 
-    ns_cols = _nanos_timestamp_cols(src)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(landing).schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    stream = normalize_timestamps(stream)
+    stream = stream_table(spark, landing)
 
     cust = _lt(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = stream.join(F.broadcast(cust), stream.user_id == cust.c_custkey)
@@ -551,7 +510,7 @@ def events_stream_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     sink = f"events_seg_{uuid.uuid4().hex[:8]}"
     # complete-mode agg: the no-data maintenance batch recomputes the
     # identical aggregate from unchanged state — skip it (r14)
-    with _stream_shuffle(spark), _no_data_batches_off(spark):
+    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
         q = (
             joined.groupBy("c_mktsegment", "event_type")
             .agg(
@@ -623,7 +582,7 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = f"events_dedup_{uuid.uuid4().hex[:8]}"
     # complete-mode agg over watermark-deduped input: the no-data batch
     # only evicts expired dedup state, emission is unchanged — skip (r14)
-    with _stream_shuffle(spark), _no_data_batches_off(spark):
+    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -766,7 +725,7 @@ def events_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFr
             "append"
         ).parquet(state)
 
-    with _stream_shuffle(spark):
+    with _stream_shuffle(spark, landing):
         q = (
             stream.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", os.path.join(work, "ckpt"))
@@ -840,19 +799,8 @@ def events_stream_view_purchase_left(spark: SparkSession, sf_dir: str) -> DataFr
     os.makedirs(landing)
     _stage_events(src, landing)
 
-    ns_cols = _nanos_timestamp_cols(src)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(landing).schema
-
-    def _stream():
-        s = spark.readStream.schema(schema).parquet(landing)
-        for c in ns_cols:
-            s = s.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-        return normalize_timestamps(s)
-
     views = (
-        _stream()
+        stream_table(spark, landing)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
@@ -862,7 +810,7 @@ def events_stream_view_purchase_left(spark: SparkSession, sf_dir: str) -> DataFr
         .withWatermark("v_ts", "2 hours")
     )
     purchases = (
-        _stream()
+        stream_table(spark, landing)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -880,7 +828,7 @@ def events_stream_view_purchase_left(spark: SparkSession, sf_dir: str) -> DataFr
     ).select(F.col("v_user").alias("user_id"), "view_id", "purchase_id")
 
     sink = f"events_ssleft_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
+    with _stream_shuffle(spark, landing):
         q = (
             joined.writeStream.outputMode("append")
             .format("memory")
@@ -1046,7 +994,7 @@ def orders_stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
     )
-    with _stream_shuffle(spark):
+    with _stream_shuffle(spark, landing):
         q = (
             stream.writeStream.foreachBatch(_apply)
             .option("checkpointLocation", os.path.join(work, "ckpt"))
@@ -1270,7 +1218,7 @@ def orders_stream_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(landing)
     )
-    with _stream_shuffle(spark):
+    with _stream_shuffle(spark, landing):
         q = (
             stream.writeStream.foreachBatch(_apply)
             .option("checkpointLocation", os.path.join(work, "ckpt"))

@@ -33,6 +33,7 @@ from data_migration_tool_spark.audit.queries import (
     files_in_window,
 )
 from data_migration_tool_spark.sources.readers import read_table
+from data_migration_tool_spark.tables import parquet_schema
 
 # db/table from "<prefix>/<db>/<table>/<file>" (reference parses GCS
 # object names the same way, hive_bq_load_utils_inc.py:82-115)
@@ -138,10 +139,17 @@ def incremental_append(
         ]
         if not paths:
             continue
-        df = read_table(
-            spark, paths[0] if len(paths) == 1 else os.path.dirname(paths[0]),
-            fmt=fmt, delimiter=delimiter, schema_ddl=schema_ddl,
-        ) if len(paths) == 1 else spark.read.format(fmt).load(paths)
+        if len(paths) == 1:
+            df = read_table(
+                spark, paths[0], fmt=fmt, delimiter=delimiter, schema_ddl=schema_ddl
+            )
+        else:
+            reader = spark.read.format(fmt)
+            if fmt == "parquet":
+                # Spark infers from one file too: the staged files of a
+                # table share its schema
+                reader = reader.schema(parquet_schema(spark, paths[0])[0])
+            df = reader.load(paths)
         df.write.mode("append").parquet(os.path.join(warehouse, db, tbl))
         loaded[f"{db}.{tbl}"] = len(paths)
     return loaded

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_migration_tool_spark.tables import parquet_schema
+
 SUPPORTED_FORMATS = ("parquet", "csv", "json", "orc", "avro", "text", "xml")
 
 
@@ -76,6 +78,10 @@ def read_table(
     reader = spark.read
     if schema_ddl:
         reader = reader.schema(schema_ddl)
+    elif fmt == "parquet" and not options:
+        # the footer schema spares Spark's inference job; reader options
+        # (mergeSchema, recursiveFileLookup, ...) keep Spark's inference
+        reader = reader.schema(parquet_schema(spark, path)[0])
     if fmt == "csv":
         reader = reader.option("sep", delimiter or ",").option(
             "header", str(header).lower()

@@ -112,19 +112,9 @@ def run_events_stream_demo(
     os.makedirs(landing, exist_ok=True)
     shutil.copy(source_parquet, os.path.join(landing, "events.parquet"))
 
-    from data_migration_tool_spark.tables import (
-        _nanos_timestamp_cols,
-        normalize_timestamps,
-    )
+    from data_migration_tool_spark.tables import stream_table
 
-    ns_cols = _nanos_timestamp_cols(source_parquet)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(os.path.join(landing, "events.parquet")).schema
-    stream = spark.readStream.schema(batch_schema).parquet(landing)
-    for c in ns_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    stream = normalize_timestamps(stream)
+    stream = stream_table(spark, landing)
 
     agg = windowed_event_counts(stream)
     q = (

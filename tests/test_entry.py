@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as ent
+from conftest import SF_DIR
 
 
 def test_entry_smoke(spark):
@@ -21,9 +23,38 @@ def test_queries_and_oracles_aligned():
 
 
 def test_all_queries_run_sf0001(spark):
+    """Every lane runs at sf0.001, and every oracle-backed lane matches
+    its DuckDB oracle on rows, columns and the order-insensitive digest:
+    the gate of ``tools/check_correctness.py``, through its own
+    ``table_digest`` and ``oracle_rows_via_pandas``."""
+    import duckdb
+
+    from data_migration_tool_spark.tables import TPCH_TABLES, table_path
+    from tools.check_correctness import oracle_rows_via_pandas, table_digest
+
+    oracles = ent.oracle_sql()
+    con = duckdb.connect()
+    for t in TPCH_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(SF_DIR, t)}'")
+    bad = []
     for name, builder in ent.queries().items():
-        df = builder(spark, "/root/testdata/sf0.001")
-        assert df.count() >= 0, name
+        try:
+            df = builder(spark, SF_DIR)
+            cols = [c.lower() for c in df.columns]
+            rows = [tuple(r) for r in df.collect()]
+        except Exception as exc:  # noqa: BLE001
+            bad.append((name, f"spark error: {str(exc)[:200]}"))
+            continue
+        if name not in oracles:
+            continue
+        rel = con.sql(oracles[name])
+        ocols = [c.lower() for c in rel.columns]
+        orows = oracle_rows_via_pandas(rel, [str(t).upper() for t in rel.types])
+        if sorted(cols) != sorted(ocols):
+            bad.append((name, f"columns {sorted(cols)} != {sorted(ocols)}"))
+        elif table_digest(cols, rows) != table_digest(ocols, orows):
+            bad.append((name, f"rows/digest: {len(rows)} vs oracle {len(orows)}"))
+    assert not bad, bad
 
 
 def test_every_oracle_parses_in_duckdb():

@@ -16,12 +16,13 @@ from __future__ import annotations
 import datetime
 import hashlib
 import json
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_migration_tool_spark.session import get_spark  # noqa: E402
 from data_migration_tool_spark.tables import TPCH_TABLES, table_path  # noqa: E402

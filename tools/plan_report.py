@@ -14,10 +14,12 @@ logical description instead of being run.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_migration_tool_spark.session import get_spark  # noqa: E402
 from data_migration_tool_spark.plans.registry import QUERIES  # noqa: E402
@@ -96,10 +98,10 @@ def main() -> None:
         n_wsc = len(set(re.findall(r"codegen id : (\d+)", plan)))
         rows.append((name, str(n_ex), ",".join(j.replace("Join", "") for j in joins) or "—", pushed, py, str(n_wsc)))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan audit of the query registry\n\n"
-            + suspect_banner("/root/repo/BENCH.json")
+            + suspect_banner(os.path.join(REPO, "BENCH.json"))
             + f"Generated by `tools/plan_report.py` at sf0.001 ({len(rows)} queries).\n"
             "Columns: shuffle exchanges in the plan; join strategies Catalyst\n"
             "chose; whether parquet scan pushdown fired; Python node kind\n"
