@@ -125,16 +125,13 @@ def bpe_train(
     Ties at equal pair frequency break lexicographically on
     (left, right) so the learned merge sequence is deterministic at any
     parallelism and any engine."""
-    from data_migration_tool_spark.partitioning import (
-        scoped_shuffle_partitions,
-        scoped_static_plans,
-    )
+    from data_migration_tool_spark.partitioning import scoped_loop
 
     spark = df.sparkSession
     # The corpus-scale vocab derivation materializes EAGERLY at session
     # parallelism (AQE on — it wants the coalescing), so the merge loop
-    # below can run under pinned partitions + static plans (r14, the
-    # pagerank_exact rationale): each round is a vocabulary-grain
+    # below can run under pinned partitions + static plans
+    # (``scoped_loop``): each round is a vocabulary-grain
     # explode + argmax whose plan is fully known, and AQE only added
     # per-exchange stage-jobs and re-planning to every round's first()
     # (interleaved mins on doc_bpe_encoded_lengths at sf0.1: 2.61-3.08
@@ -146,7 +143,7 @@ def bpe_train(
     # materialized checkpoint, so round N's plan stays O(1).
     vocab = word_freq_table(df, text_col).localCheckpoint(eager=True)
     merges: list[tuple[int, str, str, int]] = []
-    with scoped_shuffle_partitions(spark, 8), scoped_static_plans(spark):
+    with scoped_loop(spark, 8):
         for rank in range(1, num_merges + 1):
             pairs = vocab.select(
                 "cnt", F.explode(_adjacent_pairs(F.col("syms"))).alias("pair")

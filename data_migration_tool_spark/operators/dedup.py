@@ -322,28 +322,15 @@ def dup_clusters(
     # job boundary).
     # loop_shuffle_partitions: callers whose pair input is CANDIDATE-
     # scale by contract (every LSH/near-dup consumer) pin the loop's
-    # shuffle grain and freeze its plans (r14, the pagerank_exact
-    # rationale — scoped_static_plans docstring has the measurements):
-    # each round's join+groupBy plan is fully known, so AQE only adds
+    # shuffle grain and freeze its plans (``scoped_loop``): each
+    # round's join+groupBy plan is fully known, so AQE only adds
     # per-exchange stage-jobs and re-planning to every convergence
     # count (interleaved at sf0.1: part_entity_resolution 1.67-2.17 →
     # 1.39-1.55 s, doc_dup_clusters 1.94 → 1.47-1.49 s). Labels are
     # min-folds — partition-count-independent, oracle-proved.
-    from contextlib import ExitStack
+    from data_migration_tool_spark.partitioning import scoped_loop
 
-    from data_migration_tool_spark.partitioning import (
-        scoped_shuffle_partitions,
-        scoped_static_plans,
-    )
-
-    with ExitStack() as stack:
-        if loop_shuffle_partitions:
-            stack.enter_context(
-                scoped_shuffle_partitions(
-                    pairs.sparkSession, loop_shuffle_partitions
-                )
-            )
-            stack.enter_context(scoped_static_plans(pairs.sparkSession))
+    with scoped_loop(pairs.sparkSession, loop_shuffle_partitions):
         labels = (
             edges.groupBy(F.col("u").alias("id"))
             .agg(F.min("v").alias("_mv"))
@@ -405,24 +392,12 @@ def dup_clusters_two_star(
     # — 1 job per round instead of 2; the checkpointed blocks then
     # serve the round's two bidirectional references.
     # loop_shuffle_partitions: same candidate-scale pin + static plans
-    # as ``dup_clusters`` (r14; see that loop's comment for the
+    # as ``dup_clusters`` (see that loop's comment for the
     # measurements) — the star-collapse arithmetic is min-folds,
     # partition-count-independent.
-    from contextlib import ExitStack
+    from data_migration_tool_spark.partitioning import scoped_loop
 
-    from data_migration_tool_spark.partitioning import (
-        scoped_shuffle_partitions,
-        scoped_static_plans,
-    )
-
-    with ExitStack() as stack:
-        if loop_shuffle_partitions:
-            stack.enter_context(
-                scoped_shuffle_partitions(
-                    pairs.sparkSession, loop_shuffle_partitions
-                )
-            )
-            stack.enter_context(scoped_static_plans(pairs.sparkSession))
+    with scoped_loop(pairs.sparkSession, loop_shuffle_partitions):
         edges, fp, converged = _two_star_loop(pairs, max_iters)
     if not converged:
         # a non-fixpoint edge list is NOT a star forest — emitting

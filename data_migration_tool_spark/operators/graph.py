@@ -194,62 +194,36 @@ def pagerank_exact(
     # coalesce(NULL, 0) on rows that cannot exist. One node-grain
     # distinct count over the cached edges decides it up front;
     # results are bit-identical (the oracle proves it).
+    # Dangling-node short-circuit (don't compute what you can prove is
+    # zero): when EVERY node has an out-edge (symmetric graphs —
+    # co-occurrence, similarity — always qualify), the dangling mass m
+    # is identically 0 in every round, so the per-round anti-join +
+    # aggregate + 1-row broadcast subtree is dead weight. One
+    # node-grain anti-join count over the two cached frames decides it
+    # up front; the m ≡ 0 arithmetic is exactly the recurrence's
+    # (0·85) div (100·n) = 0 term, so results are bit-identical
+    # (oracle-proved).
     # Both probes read only the now-populated caches and are
-    # independent — submit them concurrently so the second back-fills
-    # the first's task tail (r14, guide §2.6; same _par_jobs pattern
-    # as the stream IVM setup writes).
-    from concurrent.futures import ThreadPoolExecutor
+    # independent — submitted concurrently so the second back-fills
+    # the first's task tail.
+    from data_migration_tool_spark.partitioning import par_jobs, scoped_loop
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cov_f = pool.submit(
-            lambda: ef.select("dst").distinct().count()
-        )
-        dang_f = pool.submit(
-            lambda: nodes.join(
-                out_deg, nodes.node == out_deg.src, "left_anti"
-            ).count()
-        )
-        full_coverage = cov_f.result() == n
-        # Dangling-node short-circuit (r13 opt, guide §1.2 — don't
-        # compute what you can prove is zero): when EVERY node has an
-        # out-edge (symmetric graphs — co-occurrence, similarity —
-        # always qualify), the dangling mass m is identically 0 in
-        # every round, so the per-round anti-join + aggregate + 1-row
-        # broadcast subtree is dead weight. One node-grain anti-join
-        # count over the two cached frames decides it up front; the
-        # m ≡ 0 arithmetic is exactly the recurrence's
-        # (0·85) div (100·n) = 0 term, so results are bit-identical
-        # (oracle-proved).
-        n_dangling = dang_f.result()
+    n_covered, n_dangling = par_jobs(
+        lambda: ef.select("dst").distinct().count(),
+        lambda: nodes.join(
+            out_deg, nodes.node == out_deg.src, "left_anti"
+        ).count(),
+    )
+    full_coverage = n_covered == n
     base = (scale * 15) // (100 * n)
 
-    from contextlib import ExitStack, nullcontext
-
-    from data_migration_tool_spark.partitioning import (
-        scoped_shuffle_partitions,
-        scoped_static_plans,
-    )
-
     # When the caller pins the loop's shuffle grain it has declared the
-    # round plans fully known — also freeze them (r14, VERDICT r13 #2):
-    # with the broadcast hint explicit and partitions pinned, AQE has
-    # nothing to re-plan per round but still materializes every
-    # exchange as its own stage-job plus a re-optimization pass
+    # round plans fully known — ``scoped_loop`` also freezes them
     # (measured at sf0.1: 36 jobs / 4.3-7.0 s with AQE vs 16 jobs /
-    # 3.5-3.9 s static, bit-identical ranks). The r14 eager final
-    # checkpoint makes the whole chain EXECUTE inside this scope —
-    # pre-r14 the lazy chain materialized at the caller's action,
-    # outside any scope, so this knob was unreachable.
-    stack = ExitStack()
-    if loop_shuffle_partitions:
-        stack.enter_context(
-            scoped_shuffle_partitions(
-                edges.sparkSession, loop_shuffle_partitions
-            )
-        )
-        stack.enter_context(scoped_static_plans(edges.sparkSession))
-    scope = stack if loop_shuffle_partitions else nullcontext()
-    # rank-init checkpoint LAZY (r14): it materializes inside the
+    # 3.5-3.9 s static, bit-identical ranks). The eager final
+    # checkpoint makes the whole chain EXECUTE inside this scope; a
+    # lazy chain would materialize at the caller's action, outside it.
+    # The rank-init checkpoint is LAZY: it materializes inside the
     # final eager chain job (in-scope, caches alive) — the former
     # eager form paid one extra driver-scheduled job for a node-grain
     # projection
@@ -257,7 +231,7 @@ def pagerank_exact(
         "node", F.lit(scale // n).cast("long").alias("rank")
     ).localCheckpoint(eager=False)
 
-    with scope:
+    with scoped_loop(edges.sparkSession, loop_shuffle_partitions):
         for it in range(iters):
             rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
             contribs = (

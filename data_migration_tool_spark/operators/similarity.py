@@ -781,10 +781,7 @@ def kmeans_fit_exact(
     scans of cache instead of iters parquet+quantize passes); shuffles
     are scoped to the state grain (cell × dim rows), not the session
     default."""
-    from data_migration_tool_spark.partitioning import (
-        scoped_shuffle_partitions,
-        scoped_static_plans,
-    )
+    from data_migration_tool_spark.partitioning import scoped_loop
 
     spark = corpus.sparkSession
     qv = (
@@ -793,14 +790,12 @@ def kmeans_fit_exact(
         .persist()
     )
     try:
-        # static plans inside the pinned-partition loop (r14, same
-        # rationale as pagerank_exact): the round plan is fully known
-        # (centroids are in-row literals, shuffles pinned to the
-        # cell×dim state grain), so AQE only adds per-exchange
-        # stage-jobs and re-planning to each Lloyd round's collect
-        with scoped_shuffle_partitions(spark, 8), scoped_static_plans(
-            spark
-        ):
+        # static plans inside the pinned-partition loop (``scoped_loop``):
+        # the round plan is fully known (centroids are in-row literals,
+        # shuffles pinned to the cell×dim state grain), so AQE only adds
+        # per-exchange stage-jobs and re-planning to each Lloyd round's
+        # collect
+        with scoped_loop(spark, 8):
             init = (
                 qv.withColumn("__h", F.md5(F.col("vec_id").cast("string")))
                 .orderBy("__h")

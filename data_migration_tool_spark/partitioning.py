@@ -6,9 +6,15 @@ inherits that parallelism until the first shuffle. ``spread`` round-robin
 repartitions such inputs up to cluster parallelism; on genuinely large
 inputs (≥ target partitions already) it is a no-op, so the 100 TB plan
 is unchanged while the small-file plan actually uses the cluster.
+
+The session-conf scopes (``scoped_conf``, ``scoped_loop``) and the
+overlap-jobs helper (``par_jobs``) live here too.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -21,9 +27,6 @@ def spread(df: DataFrame, factor: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -46,32 +49,36 @@ def scoped_conf(spark, conf: dict[str, str]):
                 spark.conf.set(k, v)
 
 
-def scoped_shuffle_partitions(spark, n: int):
-    """Temporarily size ``spark.sql.shuffle.partitions`` (``scoped_conf``).
+def scoped_loop(spark, partitions: int | None):
+    """Pin an iterative loop's shuffles to ``partitions`` and turn
+    adaptive query execution off for the block (``scoped_conf``); a
+    falsy count leaves the session as it is.
 
-    For ITERATIVE operators whose loop state is dimension-scale (a
-    parts catalog's ranks, a vocabulary's counts): the loop's per-round
-    shuffles should be sized to the STATE, not to the session default
-    that fact-scale scans want — 20 rounds x (default - needed)
-    partitions is pure scheduling overhead. Callers must scope ONLY the
-    loop (materialize fact-scale inputs before entering), and only when
-    they can argue the state is small; results must be
-    partition-count-independent (the exact-integer lanes are)."""
-    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
+    For loops whose state is dimension-scale (a parts catalog's ranks,
+    a vocabulary's counts, candidate pairs) and whose per-round plan is
+    fully known (broadcast hints explicit, partitions pinned to the
+    state grain): the session default that fact-scale scans want makes
+    every round pay for (default - needed) empty partitions, and AQE
+    has nothing left to re-plan but still materializes every exchange
+    as its own stage-job plus a re-optimization pass. The exact
+    PageRank loop ran 36 jobs with AQE against 16 without (4.5 s
+    against 3.7 s at sf0.1, identical fixed-point results). Callers
+    materialize fact-scale inputs before entering, so their scans keep
+    AQE's coalescing and skew handling, and scope only loops whose
+    results are partition-count- and plan-independent."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.adaptive.enabled": "false",
+    }
+    return scoped_conf(spark, conf if partitions else {})
 
 
-def scoped_static_plans(spark):
-    """Temporarily disable adaptive query execution (``scoped_conf``).
-
-    For ITERATIVE operators whose per-round plan shape is FULLY KNOWN
-    (broadcast hint explicit, shuffle partitions pinned to the state
-    grain by ``scoped_shuffle_partitions``): AQE's value is runtime
-    re-planning, but inside such a loop there is nothing left to
-    re-plan, and its cost is real — every exchange materializes as its
-    own stage-job plus a re-optimization round, multiplying the
-    driver-scheduled job count (the exact PageRank loop ran 36 jobs
-    with AQE vs 16 without, 4.5 s vs 3.7 s at sf0.1, identical
-    fixed-point results). Scope ONLY loop execution whose results are
-    plan-independent; leave fact-scale scans (which want AQE
-    coalescing/skew handling) outside."""
-    return scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"})
+def par_jobs(*thunks) -> list:
+    """Run independent driver actions concurrently. Spark's scheduler
+    runs several jobs at once, so independent outputs of one source
+    (setup writes, probe counts over the same caches) back-fill each
+    other's task tails instead of leaving executors idle between
+    sequential jobs. Results in thunk order; exceptions propagate."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futs = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futs]

@@ -1076,7 +1076,7 @@ GROUP BY doc_id, island
 
 
 def media_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING multimodal ingest under the exact-hash gate (r10):
+    """STREAMING multimodal ingest under the exact-hash gate:
     the media corpus lands as parquet blob files and a Structured
     Streaming query decodes it micro-batch by micro-batch —
     ``readStream(maxFilesPerTrigger=1)`` → ``foreachBatch``
@@ -1095,67 +1095,47 @@ def media_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-batch decode inherits the lane's dedup-before-decode and
     pinned-parallelism shape."""
     import os
-    import shutil
-    import tempfile
 
+    from data_migration_tool_spark.streaming.file_stream import (
+        drain,
+        stream_scratch,
+    )
     from data_migration_tool_spark.streaming.txn_sink import (
         append_batch_idempotent,
         read_appended,
     )
 
     media = media_from_documents(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="dmt_media_stream_")
-    landing = os.path.join(work, "landing")
-    media.repartition(3).write.parquet(landing)
-
-    schema, _ = parquet_schema(spark, landing)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    out = os.path.join(work, "out")
-
-    def _decode(batch_df: DataFrame, batch_id: int) -> None:
-        feats = extract_media_features(batch_df).select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            F.col("width").cast("long").alias("width"),
-            F.col("height").cast("long").alias("height"),
-            F.col("n_channels").cast("long").alias("n_channels"),
-            F.round("mean_luma", 6).alias("mean_luma"),
-            F.col("sample_rate").cast("long").alias("sample_rate"),
-            F.col("n_samples").cast("long").alias("n_samples"),
-            F.round("duration_ms", 6).alias("duration_ms"),
-            F.round("rms", 6).alias("rms"),
-            F.col("n_frames").cast("long").alias("n_frames"),
-            F.col("fps").cast("long").alias("fps"),
+    with stream_scratch() as (work, landing):
+        # landing/ already exists, empty: overwrite writes into it
+        media.repartition(3).write.mode("overwrite").parquet(landing)
+        schema, _ = parquet_schema(spark, landing)
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing)
         )
-        append_batch_idempotent(feats, batch_id, out)
+        out = os.path.join(work, "out")
 
-    q = (
-        stream.writeStream.foreachBatch(_decode)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        # AvailableNow hasn't drained: reading the sink now would return
-        # a silently partial result (the hash gate would catch it, but
-        # the API itself must be loud — ADVICE r10). Remove the scratch
-        # dir on this path too (ADVICE r11: the refusal raised before
-        # the success-path rmtree and leaked a full media-corpus copy
-        # per timed-out run).
-        q.stop()
-        shutil.rmtree(work, ignore_errors=True)
-        raise RuntimeError(
-            "media_stream_decode: stream did not drain within 300s; "
-            "sink is partially appended — refusing to read it."
-        )
-    # Materialize the drained sink into Spark storage so the scratch
-    # dir (full parquet copy of the media corpus) can be removed NOW
-    # instead of accumulating across bench/correctness runs.
-    result = read_appended(spark, out).drop("batch_id").localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
+        def _decode(batch_df: DataFrame, batch_id: int) -> None:
+            feats = extract_media_features(batch_df).select(
+                "media_id",
+                "kind",
+                "n_bytes",
+                F.col("width").cast("long").alias("width"),
+                F.col("height").cast("long").alias("height"),
+                F.col("n_channels").cast("long").alias("n_channels"),
+                F.round("mean_luma", 6).alias("mean_luma"),
+                F.col("sample_rate").cast("long").alias("sample_rate"),
+                F.col("n_samples").cast("long").alias("n_samples"),
+                F.round("duration_ms", 6).alias("duration_ms"),
+                F.round("rms", 6).alias("rms"),
+                F.col("n_frames").cast("long").alias("n_frames"),
+                F.col("fps").cast("long").alias("fps"),
+            )
+            append_batch_idempotent(feats, batch_id, out)
+
+        drain(stream, "media_stream_decode", work, landing, foreach_batch=_decode)
+        # Materialize the drained sink into Spark storage before the
+        # scratch dir (a full parquet copy of the media corpus) goes.
+        return read_appended(spark, out).drop("batch_id").localCheckpoint(eager=True)

@@ -12,14 +12,16 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_migration_tool_spark.partitioning import scoped_conf
-from data_migration_tool_spark.streaming.file_stream import windowed_event_counts
+from data_migration_tool_spark.partitioning import par_jobs
+from data_migration_tool_spark.streaming.file_stream import (
+    drain,
+    stream_scratch,
+    windowed_event_counts,
+)
 from data_migration_tool_spark.tables import (
     load_table,
     normalize_timestamps,
@@ -49,90 +51,19 @@ def _stage_events(src: str, landing: str) -> None:
         shutil.copy(src, os.path.join(landing, "events.parquet"))
 
 
-def _drain_or_raise(
-    q, name: str, timeout: int = 300, scratch: str | None = None
-) -> None:
-    """AvailableNow drain with a LOUD timeout: reading a sink before the
-    stream finishes returns silently partial rows (the hash gate would
-    catch it downstream, but the API must refuse on its own — the
-    ADVICE-r10 media_stream_decode lesson applied to every stream plan
-    here). ``scratch``: the caller's temp dir, removed on the REFUSAL
-    path too (ADVICE r11: raising before the success-path rmtree leaked
-    one dir per timed-out run — precisely the runs likely to repeat)."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        if scratch is not None:
-            import shutil as _sh
-
-            _sh.rmtree(scratch, ignore_errors=True)
-        raise RuntimeError(
-            f"{name}: stream did not drain within {timeout}s; "
-            f"refusing to read a partially-written sink."
+def _stage_cdc(ball: str, landing: str) -> None:
+    """Land the three buckets of a ``partitionBy("bi")`` CDC write as one
+    file each: bucket ``bi=<i>`` (one part file, since each bi value
+    hashes to one task) becomes ``cdc_<i>.parquet``, so a
+    ``maxFilesPerTrigger=1`` stream replays them as three micro-batches
+    in order."""
+    for i in range(3):
+        bdir = os.path.join(ball, f"bi={i}")
+        part = next(n for n in os.listdir(bdir) if n.endswith(".parquet"))
+        shutil.copy(
+            os.path.join(bdir, part),
+            os.path.join(landing, f"cdc_{i:02d}.parquet"),
         )
-
-
-def _par_jobs(*thunks) -> list:
-    """Run independent driver actions concurrently (guide §2.6 —
-    overlap independent jobs): Spark's scheduler happily runs several
-    jobs at once, and the IVM lanes' setup writes (base view, initial
-    state, CDC staging) are independent outputs of the same source
-    scan whose sequential tails each left the executors idle. FIFO
-    scheduling back-fills the later jobs into the earlier ones' task
-    gaps. Results in thunk order; exceptions propagate."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
-        return [f.result() for f in futs]
-
-
-def _no_data_batches_off(spark: SparkSession):
-    """Skip the trailing NO-DATA micro-batch for drains whose sink
-    content cannot depend on it. After the last data batch, the engine
-    normally runs one empty batch for eager state maintenance
-    (watermark-driven eviction + emission); a profiled inner interval
-    join spent 0.8 s of its 2.4 s drain there (state commit +
-    re-planning) producing ZERO output rows — inner-join matches emit
-    in the data batch itself, and an AvailableNow drain tears the state
-    down right after. Apply ONLY where the no-data batch provably cannot
-    add sink rows: inner stream-stream joins (no watermark-gated
-    emission), complete-mode aggregates (the batch re-emits the
-    identical aggregate from unchanged state), and NoTimeout stateful
-    processors (all emission is data-driven). The left-outer join MUST
-    keep it — its NULL emissions fire exactly in that
-    watermark-advancing batch (the oracle pins this: removing them
-    hash-fails) — and any future timeout/timer-driven processor would
-    too. Scoped by ``scoped_conf``."""
-    return scoped_conf(
-        spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    )
-
-
-def _stream_shuffle(spark: SparkSession, landing: str):
-    """Size the state-store partition count from the landed input.
-
-    Structured Streaming fixes its state partitioning to
-    ``spark.sql.shuffle.partitions`` at the first micro-batch, and every
-    state partition is one state store to commit per trigger. The count
-    follows the batch-AQE sizing rule, applied once to the AvailableNow
-    drain: ceil(landed bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``),
-    clamped to [1, the session's ``spark.sql.shuffle.partitions``]. A
-    one-file test landing gets one store instead of a fixed fan-out of
-    per-store overhead for a few thousand rows; a large landing still
-    gets many. Semantics are partition-count-independent, so the count
-    cannot change results. Scoped by ``scoped_conf``; it also sizes the
-    batch shuffles a foreachBatch sink runs inside the drain."""
-    landed = sum(
-        os.path.getsize(os.path.join(d, f))
-        for d, _, files in os.walk(landing)
-        for f in files
-    )
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    )
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = min(max(-(-landed // advisory), 1), cap)
-    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def events_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,30 +74,18 @@ def events_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch), the watermark bounds window state to ~2 days, and the
     windowed agg is the same map-side-combined shuffle as its batch
     twin — state size follows (windows × event_types), not row count."""
-    src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dmt_stream_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    _stage_events(src, landing)
-
-    stream = stream_table(spark, landing)
-
-    sink = f"events_daily_{uuid.uuid4().hex[:8]}"
-    # complete-mode agg: the no-data maintenance batch recomputes the
-    # identical aggregate from unchanged state — skip it (r14)
-    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
-        q = (
-            windowed_event_counts(stream, window="1 day", watermark="1 day")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    with stream_scratch() as (work, landing):
+        _stage_events(table_path(sf_dir, "events"), landing)
+        agg = windowed_event_counts(
+            stream_table(spark, landing), window="1 day", watermark="1 day"
         )
-        _drain_or_raise(q, "events_stream_daily_counts", scratch=work)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.table(sink).select(
+        # complete-mode agg: the no-data maintenance batch recomputes
+        # the identical aggregate from unchanged state — skip it
+        rows = drain(
+            agg, "events_stream_daily_counts", work, landing,
+            output_mode="complete", skip_no_data_batch=True,
+        )
+    return rows.select(
         F.date_format("window_start", "yyyy-MM-dd").alias("day"),
         "event_type",
         "n_events",
@@ -186,30 +105,15 @@ def events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB state-size argument."""
     from data_migration_tool_spark.streaming.stateful import sessionize_stream
 
-    src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dmt_sess_stream_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    _stage_events(src, landing)
-
-    stream = stream_table(spark, landing)
-
-    sink = f"events_sessions_{uuid.uuid4().hex[:8]}"
-    # NoTimeout stateful processor: emission is data-driven only, the
-    # no-data batch cannot add sink rows — skip it (r14)
-    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
-        q = (
-            sessionize_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    with stream_scratch() as (work, landing):
+        _stage_events(table_path(sf_dir, "events"), landing)
+        # NoTimeout stateful processor: emission is data-driven only,
+        # the no-data batch cannot add sink rows — skip it
+        return drain(
+            sessionize_stream(stream_table(spark, landing)),
+            "events_stream_sessions", work, landing,
+            output_mode="update", skip_no_data_batch=True,
         )
-        _drain_or_raise(q, "events_stream_sessions", scratch=work)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.table(sink)
 
 
 EVENTS_STREAM_SESSIONS_SQL = """
@@ -254,9 +158,7 @@ def events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: the hourly table is what you materialize incrementally
     (watermarked streaming agg); daily/weekly/monthly queries then
     scan hours, not events — (24×365) rows/year per group key."""
-    from data_migration_tool_spark.tables import load_table as _lt
-
-    e = _lt(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     hourly = (
         e.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("hour"),
@@ -307,30 +209,15 @@ def events_stream_user_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-cumsum oracle checks the stateful path end-to-end."""
     from data_migration_tool_spark.streaming.quota import quota_stream
 
-    src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dmt_quota_stream_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    _stage_events(src, landing)
-
-    stream = stream_table(spark, landing)
-
-    sink = f"events_quota_{uuid.uuid4().hex[:8]}"
-    # NoTimeout stateful processor: emission is data-driven only, the
-    # no-data batch cannot add sink rows — skip it (r14)
-    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
-        q = (
-            quota_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    with stream_scratch() as (work, landing):
+        _stage_events(table_path(sf_dir, "events"), landing)
+        # NoTimeout stateful processor: emission is data-driven only,
+        # the no-data batch cannot add sink rows — skip it
+        return drain(
+            quota_stream(stream_table(spark, landing)),
+            "events_stream_user_quota", work, landing,
+            output_mode="update", skip_no_data_batch=True,
         )
-        _drain_or_raise(q, "events_stream_user_quota", scratch=work)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.table(sink)
 
 
 EVENTS_STREAM_QUOTA_SQL = """
@@ -368,57 +255,47 @@ def events_stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFr
     (≤3 h of events), partitioned by the equi-key — the shape survives
     any stream volume whose 3-hour slice fits the cluster, which is the
     physical minimum for this semantics."""
-    src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dmt_ssjoin_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    _stage_events(src, landing)
-
-    views = (
-        stream_table(spark, landing)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    purchases = (
-        stream_table(spark, landing)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            "v_user = p_user AND p_ts > v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"
-        ),
-        "inner",
-    ).select(F.col("v_user").alias("user_id"), "view_id", "purchase_id")
-
-    sink = f"events_ssjoin_{uuid.uuid4().hex[:8]}"
     # inner join: matches emit in the data batch itself, so the
     # trailing no-data state-maintenance batch adds nothing to the
-    # sink — skip it (r14; the left-outer twin keeps it, its NULL
-    # rows emit exactly there)
-    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    # sink — skip it (the left-outer twin keeps it, its NULL rows emit
+    # exactly there)
+    return _view_purchase_stream(
+        spark, sf_dir, "inner", "events_stream_view_purchase_join",
+        skip_no_data_batch=True,
+    )
+
+
+def _view_purchase_stream(
+    spark: SparkSession, sf_dir: str, how: str, name: str,
+    skip_no_data_batch: bool,
+) -> DataFrame:
+    """Drain the view ⋈ purchase interval join (2 h watermarks, purchase
+    in (view_ts, view_ts + 1 h]) of the landed events, joined ``how``."""
+    with stream_scratch() as (work, landing):
+        _stage_events(table_path(sf_dir, "events"), landing)
+
+        def side(kind: str, p: str) -> DataFrame:
+            return (
+                stream_table(spark, landing)
+                .filter(F.col("event_type") == kind)
+                .select(
+                    F.col("user_id").alias(f"{p}_user"),
+                    F.col("event_id").alias(f"{kind}_id"),
+                    F.col("ts").alias(f"{p}_ts"),
+                )
+                .withWatermark(f"{p}_ts", "2 hours")
+            )
+
+        joined = side("view", "v").join(
+            side("purchase", "p"),
+            F.expr(
+                "v_user = p_user AND p_ts > v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"
+            ),
+            how,
+        ).select(F.col("v_user").alias("user_id"), "view_id", "purchase_id")
+        return drain(
+            joined, name, work, landing, skip_no_data_batch=skip_no_data_batch
         )
-        _drain_or_raise(q, "events_stream_view_purchase_join", scratch=work)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.table(sink)
 
 
 EVENTS_STREAM_SSJOIN_SQL = """
@@ -445,9 +322,7 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode — |hours|×|types| rows, aggregate-scale not event-scale)
     and left-joins the partials. Nothing event-grain is ever joined or
     regenerated."""
-    from data_migration_tool_spark.tables import load_table as _lt
-
-    e = _lt(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
     )
     counts = e.groupBy("hour", "event_type").agg(F.count(F.lit(1)).alias("n"))
@@ -494,39 +369,27 @@ def events_stream_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     the batch join+agg and a plain SQL oracle checks the streaming
     path end-to-end."""
     from data_migration_tool_spark.functions.scalars import dsum
-    from data_migration_tool_spark.tables import load_table as _lt
 
-    src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dmt_stream_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    _stage_events(src, landing)
-
-    stream = stream_table(spark, landing)
-
-    cust = _lt(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    joined = stream.join(F.broadcast(cust), stream.user_id == cust.c_custkey)
-
-    sink = f"events_seg_{uuid.uuid4().hex[:8]}"
-    # complete-mode agg: the no-data maintenance batch recomputes the
-    # identical aggregate from unchanged state — skip it (r14)
-    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
-        q = (
-            joined.groupBy("c_mktsegment", "event_type")
+    with stream_scratch() as (work, landing):
+        _stage_events(table_path(sf_dir, "events"), landing)
+        stream = stream_table(spark, landing)
+        cust = load_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_mktsegment"
+        )
+        agg = (
+            stream.join(F.broadcast(cust), stream.user_id == cust.c_custkey)
+            .groupBy("c_mktsegment", "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 dsum("value").alias("sum_value"),
             )
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
         )
-        _drain_or_raise(q, "events_stream_segment_revenue", scratch=work)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.table(sink)
+        # complete-mode agg: the no-data maintenance batch recomputes
+        # the identical aggregate from unchanged state — skip it
+        return drain(
+            agg, "events_stream_segment_revenue", work, landing,
+            output_mode="complete", skip_no_data_batch=True,
+        )
 
 
 EVENTS_STREAM_SEGMENT_SQL = """
@@ -552,48 +415,35 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives an infinite stream. Duplicates must arrive within the
     watermark of each other — exactly the redelivery window a
     replaying source (Kafka offset rewind, file re-land) produces."""
-    src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dmt_sdedup_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-
     batch = load_table(spark, sf_dir, "events")
-    doubled = batch.unionByName(batch)
-    # parallel staging write; the files all land in the FIRST micro-batch
-    # (well under maxFilesPerTrigger), so dedup sees every duplicate in
-    # one batch and the result is deterministic
-    doubled.write.parquet(os.path.join(landing, "doubled"))
-
-    schema = batch.schema
-    stream = normalize_timestamps(
-        spark.readStream.schema(schema).option("recursiveFileLookup", "true")
-        .parquet(landing)
-    )
-    deduped = stream.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    agg = deduped.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_value"),
-    )
-
-    sink = f"events_dedup_{uuid.uuid4().hex[:8]}"
-    # complete-mode agg over watermark-deduped input: the no-data batch
-    # only evicts expired dedup state, emission is unchanged — skip (r14)
-    with _stream_shuffle(spark, landing), _no_data_batches_off(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    with stream_scratch() as (work, landing):
+        # parallel staging write; the files all land in the FIRST
+        # micro-batch (well under maxFilesPerTrigger), so dedup sees
+        # every duplicate in one batch and the result is deterministic
+        batch.unionByName(batch).write.parquet(os.path.join(landing, "doubled"))
+        stream = normalize_timestamps(
+            spark.readStream.schema(batch.schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(landing)
         )
-        _drain_or_raise(q, "events_stream_dedup", scratch=work)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.table(sink).select("event_type", "n_events", "sum_value")
+        agg = (
+            stream.withWatermark("ts", "1 day")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("sum_value"),
+            )
+        )
+        # complete-mode agg over watermark-deduped input: the no-data
+        # batch only evicts expired dedup state, emission is unchanged
+        rows = drain(
+            agg, "events_stream_dedup", work, landing,
+            output_mode="complete", skip_no_data_batch=True,
+        )
+    return rows.select("event_type", "n_events", "sum_value")
 
 
 EVENTS_STREAM_DEDUP_SQL = """
@@ -702,54 +552,43 @@ def events_stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFr
     orders_upsert_merge."""
     from data_migration_tool_spark.operators import incremental_agg as IA
 
-    work = tempfile.mkdtemp(prefix="dmt_sincagg_")
-    landing = os.path.join(work, "landing")
-    state = os.path.join(work, "state")
-    os.makedirs(landing)
-
     batch = load_table(spark, sf_dir, "events")
-    for i in range(3):
-        batch.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
-            os.path.join(landing, f"chunk_{i}")
+    with stream_scratch() as (work, landing):
+        state = os.path.join(work, "state")
+        for i in range(3):
+            batch.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
+                os.path.join(landing, f"chunk_{i}")
+            )
+        stream = normalize_timestamps(
+            spark.readStream.schema(batch.schema)
+            .option("recursiveFileLookup", "true")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing)
         )
 
-    stream = normalize_timestamps(
-        spark.readStream.schema(batch.schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+        def merge_batch(bdf, batch_id: int) -> None:
+            IA.partials(
+                bdf, ["event_type"], "value", dec="decimal(18,2)"
+            ).write.mode("append").parquet(state)
 
-    def merge_batch(bdf, batch_id: int) -> None:
-        IA.partials(bdf, ["event_type"], "value", dec="decimal(18,2)").write.mode(
-            "append"
-        ).parquet(state)
-
-    with _stream_shuffle(spark, landing):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            stream, "events_stream_incremental_rollup", work, landing,
+            foreach_batch=merge_batch,
         )
-        _drain_or_raise(q, "events_stream_incremental_rollup", scratch=work)
-
-    merged = IA.merge_partials([spark.read.parquet(state)], ["event_type"])
-    # the state parquet lives in the scratch dir — materialize the
-    # key-grain answer, then drop the scratch instead of leaking it
-    out = (
-        IA.finalize(merged, ["event_type"])
-        .select(
-            "event_type",
-            "n_rows",
-            F.col("total").alias("total_value"),
-            "mean",
-            "variance",
+        merged = IA.merge_partials([spark.read.parquet(state)], ["event_type"])
+        # the state parquet lives in the scratch dir — materialize the
+        # key-grain answer before the scratch goes
+        return (
+            IA.finalize(merged, ["event_type"])
+            .select(
+                "event_type",
+                "n_rows",
+                F.col("total").alias("total_value"),
+                "mean",
+                "variance",
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 EVENTS_STREAM_INCREMENTAL_SQL = """
@@ -793,53 +632,11 @@ def events_stream_view_purchase_left(spark: SparkSession, sf_dir: str) -> DataFr
     At 100 TB/day: state per side bounded by watermark + interval (≤3 h
     of events) exactly as the inner join; the only addition is the
     per-view "unmatched" bit that rides the existing state row."""
-    src = table_path(sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dmt_ssleft_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    _stage_events(src, landing)
-
-    views = (
-        stream_table(spark, landing)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
+    # keeps the no-data batch: the NULL rows emit exactly there
+    return _view_purchase_stream(
+        spark, sf_dir, "left_outer", "events_stream_view_purchase_left",
+        skip_no_data_batch=False,
     )
-    purchases = (
-        stream_table(spark, landing)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            "v_user = p_user AND p_ts > v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"
-        ),
-        "left_outer",
-    ).select(F.col("v_user").alias("user_id"), "view_id", "purchase_id")
-
-    sink = f"events_ssleft_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, landing):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_or_raise(q, "events_stream_view_purchase_left", scratch=work)
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.table(sink)
 
 
 EVENTS_STREAM_SSLEFT_SQL = """
@@ -865,7 +662,7 @@ WHERE v.event_type = 'view'
 
 def orders_stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CDC join-view maintenance through the partition-pruned
-    apply (r12 — the production setting for ``operators/
+    apply (the production setting for ``operators/
     incremental_agg.apply_view_changes_pruned``): an on-disk
     orders⋈lineitem view, partitioned by ``pb = orderkey % 20``, is
     maintained by a foreachBatch stream of orders-side CDC events —
@@ -908,113 +705,93 @@ def orders_stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pb = (F.col("orderkey") % 20).alias("pb")
 
-    work = tempfile.mkdtemp(prefix="dmt_sivm_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    view_path = os.path.join(work, "view")
+    with stream_scratch() as (work, landing):
+        view_path = os.path.join(work, "view")
 
-    # world state BEFORE the stream: inserts (%10==0) not yet present.
-    # REBALANCE by pb before the partitioned write (r13 opt, guide §6):
-    # without it each of the join's write tasks emits one part file per
-    # bucket it holds — n_tasks × 20 small files that every trigger's
-    # pruned read and the final view scan re-pay in listing/open cost
-    # (measured: base write 4.7 s → 1.9 s, final agg 1.0 s → 0.5 s).
-    base_o = o.filter(F.col("orderkey") % 10 != 0)
+        # world state BEFORE the stream: inserts (%10==0) not yet present.
+        # REBALANCE by pb before the partitioned write: without it each
+        # of the join's write tasks emits one part file per bucket it
+        # holds — n_tasks × 20 small files that every trigger's pruned
+        # read and the final view scan re-pay in listing/open cost
+        # (measured: base write 4.7 s → 1.9 s, final agg 1.0 s → 0.5 s).
+        base_o = o.filter(F.col("orderkey") % 10 != 0)
 
-    # three CDC batches, one file each: (D %30==3+10g, I %30==10g).
-    # ONE pass generates all three (r13 opt, guide §1.2 don't recompute:
-    # the per-batch loop scanned orders 3×): the batch index bi =
-    # (orderkey%30) div 10 partitions the same D/I row sets, and the
-    # partitioned write lands exactly one file per bi (each bi value
-    # hashes to one task), which then moves into the landing dir under
-    # the same cdc_{i} names the loop produced. The base-view write and
-    # the CDC write are independent — submitted concurrently so the
-    # join write's task tail back-fills with the CDC job (r14, §2.6).
-    km = F.col("orderkey") % 30
-    cdc = (
-        base_o.filter(km % 10 == 3)
-        .withColumn("op", F.lit("D"))
-        .unionByName(o.filter(km % 10 == 0).withColumn("op", F.lit("I")))
-        .withColumn("bi", (km / 10).cast("int"))
-    )
-    _par_jobs(
-        lambda: base_o.join(li, ["orderkey"])
-        .select("orderkey", "o_orderstatus", "rev", pb)
-        .hint("rebalance", "pb")
-        .write.partitionBy("pb")
-        .parquet(view_path),
-        lambda: cdc.repartition("bi")
-        .write.partitionBy("bi")
-        .parquet(os.path.join(work, "ball")),
-    )
-    for i in range(3):
-        bdir = os.path.join(work, "ball", f"bi={i}")
-        part = next(
-            n for n in os.listdir(bdir) if n.endswith(".parquet")
+        # three CDC batches, one file each: (D %30==3+10g, I %30==10g).
+        # ONE pass generates all three (a per-batch loop would scan
+        # orders 3×): the batch index bi = (orderkey%30) div 10
+        # partitions the same D/I row sets, and ``_stage_cdc`` lands
+        # each bi bucket as one file. The base-view write and the CDC
+        # write are independent — submitted concurrently so the join
+        # write's task tail back-fills with the CDC job.
+        km = F.col("orderkey") % 30
+        cdc = (
+            base_o.filter(km % 10 == 3)
+            .withColumn("op", F.lit("D"))
+            .unionByName(o.filter(km % 10 == 0).withColumn("op", F.lit("I")))
+            .withColumn("bi", (km / 10).cast("int"))
         )
-        shutil.copy(
-            os.path.join(bdir, part),
-            os.path.join(landing, f"cdc_{i:02d}.parquet"),
+        par_jobs(
+            lambda: base_o.join(li, ["orderkey"])
+            .select("orderkey", "o_orderstatus", "rev", pb)
+            .hint("rebalance", "pb")
+            .write.partitionBy("pb")
+            .parquet(view_path),
+            lambda: cdc.repartition("bi")
+            .write.partitionBy("bi")
+            .parquet(os.path.join(work, "ball")),
         )
+        _stage_cdc(os.path.join(work, "ball"), landing)
 
-    li_static = li.persist()
+        li_static = li.persist()
 
-    def _apply(batch, _bid):
-        # ONE batch⋈lineitem join per trigger (r14, guide §1.2): the
-        # former per-op joins (deletes⋈li, inserts⋈li) each scanned the
-        # persisted lineitem cache when the operator materialized its
-        # delta persists — the fused join runs once into a delta-scale
-        # eager checkpoint (blocks freed with the Python ref) and both
-        # op slices are map-side filters of it.
-        j = (
-            batch.join(li_static, ["orderkey"])
-            .select("orderkey", "o_orderstatus", "rev", pb, "op")
+        def _apply(batch, _bid):
+            # ONE batch⋈lineitem join per trigger: per-op joins
+            # (deletes⋈li, inserts⋈li) would each scan the persisted
+            # lineitem cache when the operator materializes its delta
+            # persists — the fused join runs once into a delta-scale
+            # eager checkpoint (blocks freed with the Python ref) and
+            # both op slices are map-side filters of it.
+            j = (
+                batch.join(li_static, ["orderkey"])
+                .select("orderkey", "o_orderstatus", "rev", pb, "op")
+                .localCheckpoint(eager=True)
+            )
+            retract = j.filter(F.col("op") == "D").drop("op")
+            inserts = j.filter(F.col("op") == "I").drop("op")
+            # retract_anti_keys: the CDC deletes WHOLE orders, so every
+            # view row of a retracted orderkey goes — the broadcast-anti
+            # fast path is multiset-identical to the exceptAll and saves
+            # its two-sided slice shuffle per trigger (oracle
+            # hash-proved, the general exceptAll path stays gated by
+            # orders_join_ivm_retract_pruned)
+            apply_view_changes_pruned(
+                spark, view_path, retract=retract, inserts=inserts,
+                bucket_col="pb", batch_marker=f"batch-{_bid}",
+                retract_anti_keys=["orderkey"],
+            )
+            # marker retention AFTER this batch's marker lands (bounded
+            # _applied/ footprint; keep_last=2 > redelivery depth 1)
+            sweep_applied_markers(spark, view_path, keep_last=2)
+
+        schema = "orderkey long, o_orderstatus string, op string"
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(landing)
+        )
+        drain(stream, "orders_stream_join_ivm", work, landing, foreach_batch=_apply)
+        out = (
+            spark.read.parquet(view_path)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.sum("rev").cast("double").alias("sum_revenue"),
+            )
+            .orderBy("o_orderstatus")
             .localCheckpoint(eager=True)
         )
-        retract = j.filter(F.col("op") == "D").drop("op")
-        inserts = j.filter(F.col("op") == "I").drop("op")
-        # retract_anti_keys: the CDC deletes WHOLE orders, so every
-        # view row of a retracted orderkey goes — the broadcast-anti
-        # fast path is multiset-identical to the exceptAll and saves
-        # its two-sided slice shuffle per trigger (r13; oracle
-        # hash-proved, the general exceptAll path stays gated by
-        # orders_join_ivm_retract_pruned)
-        apply_view_changes_pruned(
-            spark, view_path, retract=retract, inserts=inserts,
-            bucket_col="pb", batch_marker=f"batch-{_bid}",
-            retract_anti_keys=["orderkey"],
-        )
-        # marker retention AFTER this batch's marker lands (bounded
-        # _applied/ footprint; keep_last=2 > redelivery depth 1)
-        sweep_applied_markers(spark, view_path, keep_last=2)
-
-    schema = "orderkey long, o_orderstatus string, op string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-    )
-    with _stream_shuffle(spark, landing):
-        q = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_or_raise(q, "orders_stream_join_ivm", scratch=work)
-    out = (
-        spark.read.parquet(view_path)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("rev").cast("double").alias("sum_revenue"),
-        )
-        .orderBy("o_orderstatus")
-        .localCheckpoint(eager=True)
-    )
-    li_static.unpersist()
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        li_static.unpersist()
+        return out
 
 
 ORDERS_STREAM_JOIN_IVM_SQL = """
@@ -1032,7 +809,7 @@ ORDER BY o_orderstatus
 
 def orders_stream_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CDC maintenance of a materialized ROLLUP with
-    non-invertible aggregates (r12 — the aggregate complement of
+    non-invertible aggregates (the aggregate complement of
     ``orders_stream_join_ivm``, composing the whole IVM family in its
     production shape): a (status, priority) price rollup's partial
     state AND its underlying on-disk row table are both maintained
@@ -1057,7 +834,7 @@ def orders_stream_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch a no-op in both steps (each step's artifact existence IS
     its marker); the residual crash window is between a step's write
     and the next step, same class as foreachBatch's own guidance —
-    but note (ADVICE r12) the two-step plan WIDENS it relative to the
+    but note the two-step plan WIDENS it relative to the
     single-apply join query: a crash after the state version's
     ``_SUCCESS`` but before the row apply's marker redelivers a batch
     whose state step skips (version exists) while the row step
@@ -1066,7 +843,7 @@ def orders_stream_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     its marker) double-appends that batch's inserts on redelivery,
     the window ``apply_view_changes_pruned`` documents.
 
-    State retention (r13, VERDICT r12 #2): after each version
+    State retention: after each version
     commits, ``sweep_state_versions(keep_last=2)`` deletes all but
     the newest 2 committed versions — the state FOOTPRINT and the
     per-trigger ``_latest_state`` directory listing are both bounded
@@ -1089,147 +866,124 @@ def orders_stream_rollup_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = ["o_orderstatus", "o_orderpriority"]
     pb = (F.col("o_orderkey") % 20).alias("pb")
 
-    work = tempfile.mkdtemp(prefix="dmt_srollup_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    rows_path = os.path.join(work, "rows")
-    state_dir = os.path.join(work, "state")
-    os.makedirs(state_dir)
+    with stream_scratch() as (work, landing):
+        rows_path = os.path.join(work, "rows")
+        state_dir = os.path.join(work, "state")
+        os.makedirs(state_dir)
 
-    base = o.filter(F.col("o_orderkey") % 10 != 0)
-    km = F.col("o_orderkey") % 30
-    cdc = (
-        base.filter(km % 10 == 3)
-        .withColumn("op", F.lit("D"))
-        .unionByName(o.filter(km % 10 == 0).withColumn("op", F.lit("I")))
-        .withColumn("bi", (km / 10).cast("int"))
-    )
-    # rebalance-by-bucket write + one-pass CDC generation: same r13
-    # optimizations (and measured rationale) as orders_stream_join_ivm.
-    # The three setup writes are independent outputs of the same orders
-    # scan — submitted concurrently so each job's task tail back-fills
-    # with the next job's tasks (r14, guide §2.6).
-    _par_jobs(
-        lambda: base.select(*o.columns, pb)
-        .hint("rebalance", "pb")
-        .write.partitionBy("pb")
-        .parquet(rows_path),
-        lambda: IA.partials(base, keys, "o_totalprice")
-        .coalesce(1)
-        .write.parquet(os.path.join(state_dir, "v00000")),
-        lambda: cdc.repartition("bi")
-        .write.partitionBy("bi")
-        .parquet(os.path.join(work, "ball")),
-    )
-    for i in range(3):
-        bdir = os.path.join(work, "ball", f"bi={i}")
-        part = next(
-            n for n in os.listdir(bdir) if n.endswith(".parquet")
+        base = o.filter(F.col("o_orderkey") % 10 != 0)
+        km = F.col("o_orderkey") % 30
+        cdc = (
+            base.filter(km % 10 == 3)
+            .withColumn("op", F.lit("D"))
+            .unionByName(o.filter(km % 10 == 0).withColumn("op", F.lit("I")))
+            .withColumn("bi", (km / 10).cast("int"))
         )
-        shutil.copy(
-            os.path.join(bdir, part),
-            os.path.join(landing, f"cdc_{i:02d}.parquet"),
+        # rebalance-by-bucket write + one-pass CDC generation: same
+        # optimizations (and measured rationale) as
+        # orders_stream_join_ivm. The three setup writes are independent
+        # outputs of the same orders scan — submitted concurrently so
+        # each job's task tail back-fills with the next job's tasks.
+        par_jobs(
+            lambda: base.select(*o.columns, pb)
+            .hint("rebalance", "pb")
+            .write.partitionBy("pb")
+            .parquet(rows_path),
+            lambda: IA.partials(base, keys, "o_totalprice")
+            .coalesce(1)
+            .write.parquet(os.path.join(state_dir, "v00000")),
+            lambda: cdc.repartition("bi")
+            .write.partitionBy("bi")
+            .parquet(os.path.join(work, "ball")),
         )
+        _stage_cdc(os.path.join(work, "ball"), landing)
 
-    def _latest_state() -> str:
-        # numeric order, not lexicographic: the zero-padded v{bid:05d}
-        # names sort correctly as strings only until the counter
-        # outgrows the pad width (v100000 < v99999 as strings) — same
-        # ordering contract as sweep_state_versions
-        committed = sorted(
-            (
-                v
-                for v in os.listdir(state_dir)
-                if os.path.exists(os.path.join(state_dir, v, "_SUCCESS"))
-            ),
-            key=lambda n: int(n.lstrip("v")),
-        )
-        return os.path.join(state_dir, committed[-1])
+        def _latest_state() -> str:
+            # numeric order, not lexicographic: the zero-padded v{bid:05d}
+            # names sort correctly as strings only until the counter
+            # outgrows the pad width (v100000 < v99999 as strings) — same
+            # ordering contract as sweep_state_versions
+            committed = sorted(
+                (
+                    v
+                    for v in os.listdir(state_dir)
+                    if os.path.exists(os.path.join(state_dir, v, "_SUCCESS"))
+                ),
+                key=lambda n: int(n.lstrip("v")),
+            )
+            return os.path.join(state_dir, committed[-1])
 
-    def _apply(batch, bid):
-        d = batch.filter(F.col("op") == "D").drop("op")
-        i = batch.filter(F.col("op") == "I").drop("op")
-        vpath = os.path.join(state_dir, f"v{bid + 1:05d}")
-        # commit marker is parquet's own _SUCCESS, not the directory:
-        # Spark creates the dir (and partial parts) before job commit,
-        # so a crash mid-write must NOT make the redelivery skip the
-        # state step against an uncommitted version
-        if not os.path.exists(os.path.join(vpath, "_SUCCESS")):
-            shutil.rmtree(vpath, ignore_errors=True)  # partial crash debris
-            prev = spark.read.parquet(_latest_state())
-            cur_rows = spark.read.parquet(rows_path).drop("pb")
-            # The eager localCheckpoint stays (r14 re-measured): its
-            # original r13 rationale (retract_partials referencing the
-            # state⋈delta subtree 3×) is gone now that the operator
-            # checkpoints that join internally — but the checkpoint is
-            # STILL load-bearing for the coalesce(1) below: coalesce is
-            # a narrow dependency, so on an un-checkpointed plan it
-            # collapses every upstream stage to ONE task (removal
-            # measured +0.3-0.7 s/run interleaved despite −9 jobs);
-            # checkpointed, the state computes at loop parallelism and
-            # only the final 1-file write is serial. coalesce(1) after
-            # it costs nothing (the state is key-grain) and keeps each
-            # version at one file, so the per-trigger _latest_state
-            # read pays one open instead of shuffle-partition-many
-            # (guide §6 small files).
-            # anti_keys: the CDC deletes WHOLE orders and the row table
-            # holds one row per orderkey, so the extreme-recompute
-            # retained slice is a broadcast-anti on the delete keys —
-            # multiset-identical to the exceptAll, minus its two-sided
-            # shuffle of the touched-group rows per trigger (r14; the
-            # general exceptAll path stays oracle-gated by
-            # orders_rollup_minmax_retract)
-            new_state = IA.merge_partials(
-                [
-                    IA.retract_partials(
-                        prev, d, cur_rows, keys, "o_totalprice",
-                        anti_keys=["o_orderkey"],
-                    ),
-                    IA.partials(i, keys, "o_totalprice"),
-                ],
-                keys,
-            ).localCheckpoint(eager=True)
-            new_state.coalesce(1).write.parquet(vpath)
-        # retention AFTER the new _SUCCESS lands: bounded state
-        # footprint, replay protection intact (keep_last=2 > the
-        # foreachBatch redelivery depth of 1)
-        IA.sweep_state_versions(state_dir, keep_last=2)
-        # whole-key CDC deletes (one row per orderkey in the row
-        # table) — broadcast-anti fast path, see orders_stream_join_ivm
-        IA.apply_view_changes_pruned(
-            spark,
-            rows_path,
-            retract=d.select(*o.columns, pb),
-            inserts=i.select(*o.columns, pb),
-            bucket_col="pb",
-            batch_marker=f"batch-{bid}",
-            retract_anti_keys=["o_orderkey"],
-        )
-        # marker retention mirrors the state-version sweep above:
-        # bounded _applied/ footprint, keep_last=2 > redelivery depth 1
-        IA.sweep_applied_markers(spark, rows_path, keep_last=2)
+        def _apply(batch, bid):
+            d = batch.filter(F.col("op") == "D").drop("op")
+            i = batch.filter(F.col("op") == "I").drop("op")
+            vpath = os.path.join(state_dir, f"v{bid + 1:05d}")
+            # commit marker is parquet's own _SUCCESS, not the directory:
+            # Spark creates the dir (and partial parts) before job commit,
+            # so a crash mid-write must NOT make the redelivery skip the
+            # state step against an uncommitted version
+            if not os.path.exists(os.path.join(vpath, "_SUCCESS")):
+                shutil.rmtree(vpath, ignore_errors=True)  # partial crash debris
+                prev = spark.read.parquet(_latest_state())
+                cur_rows = spark.read.parquet(rows_path).drop("pb")
+                # The eager localCheckpoint is load-bearing for the
+                # coalesce(1) below: coalesce is a narrow dependency, so
+                # on an un-checkpointed plan it collapses every upstream
+                # stage to ONE task (removal measured +0.3-0.7 s/run
+                # interleaved despite −9 jobs); checkpointed, the state
+                # computes at loop parallelism and only the final 1-file
+                # write is serial. coalesce(1) after it costs nothing
+                # (the state is key-grain) and keeps each version at one
+                # file, so the per-trigger _latest_state read pays one
+                # open instead of shuffle-partition-many.
+                # anti_keys: the CDC deletes WHOLE orders and the row table
+                # holds one row per orderkey, so the extreme-recompute
+                # retained slice is a broadcast-anti on the delete keys —
+                # multiset-identical to the exceptAll, minus its two-sided
+                # shuffle of the touched-group rows per trigger (the
+                # general exceptAll path stays oracle-gated by
+                # orders_rollup_minmax_retract)
+                new_state = IA.merge_partials(
+                    [
+                        IA.retract_partials(
+                            prev, d, cur_rows, keys, "o_totalprice",
+                            anti_keys=["o_orderkey"],
+                        ),
+                        IA.partials(i, keys, "o_totalprice"),
+                    ],
+                    keys,
+                ).localCheckpoint(eager=True)
+                new_state.coalesce(1).write.parquet(vpath)
+            # retention AFTER the new _SUCCESS lands: bounded state
+            # footprint, replay protection intact (keep_last=2 > the
+            # foreachBatch redelivery depth of 1)
+            IA.sweep_state_versions(state_dir, keep_last=2)
+            # whole-key CDC deletes (one row per orderkey in the row
+            # table) — broadcast-anti fast path, see orders_stream_join_ivm
+            IA.apply_view_changes_pruned(
+                spark,
+                rows_path,
+                retract=d.select(*o.columns, pb),
+                inserts=i.select(*o.columns, pb),
+                bucket_col="pb",
+                batch_marker=f"batch-{bid}",
+                retract_anti_keys=["o_orderkey"],
+            )
+            # marker retention mirrors the state-version sweep above:
+            # bounded _applied/ footprint, keep_last=2 > redelivery depth 1
+            IA.sweep_applied_markers(spark, rows_path, keep_last=2)
 
-    schema = (
-        "o_orderkey long, o_orderstatus string, o_orderpriority string, "
-        "o_totalprice double, op string"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-    )
-    with _stream_shuffle(spark, landing):
-        q = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        schema = (
+            "o_orderkey long, o_orderstatus string, o_orderpriority string, "
+            "o_totalprice double, op string"
         )
-        _drain_or_raise(q, "orders_stream_rollup_ivm", scratch=work)
-    out = (
-        IA.finalize(spark.read.parquet(_latest_state()), keys)
-        .orderBy(*keys)
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(landing)
+        )
+        drain(stream, "orders_stream_rollup_ivm", work, landing, foreach_batch=_apply)
+        return (
+            IA.finalize(spark.read.parquet(_latest_state()), keys)
+            .orderBy(*keys)
+            .localCheckpoint(eager=True)
+        )

@@ -3,6 +3,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from data_migration_tool_spark.streaming.file_stream import (
     deduped_stream,
     run_events_stream_demo,
@@ -631,35 +633,162 @@ def test_stream_stager_handles_directory_tables(spark, tmp_path):
 
 
 def test_no_bare_await_termination_call_sites():
-    """The loud-drain convention as an invariant (VERDICT r11 #5):
-    every awaitTermination call site repo-wide must consume the
-    boolean — via _drain_or_raise, an ``if not``, or an ``assert`` —
-    because a silently-ignored timeout means reading a partially
-    written sink. The r11 sweep converted every plan; this pins the
-    convention so no new bare drain can land."""
-    import os
+    """The loud-drain convention as an invariant. In package code the
+    one ``awaitTermination`` call is the drain harness
+    (``streaming/file_stream.drain``), which stops and refuses a stream
+    that did not finish. In tests every call must consume the boolean —
+    an ``if not``, an ``assert`` or an assignment — because a
+    silently-ignored timeout means reading a partially written sink."""
+    import ast
     import re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    bare = []
-    for base in ("data_migration_tool_spark", "tests"):
-        for dirpath, _dirs, files in os.walk(os.path.join(root, base)):
-            for name in files:
-                if not name.endswith(".py"):
+    pkg = os.path.join(root, "data_migration_tool_spark")
+    calls = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            tree = ast.parse(open(path).read())
+            for fn in ast.walk(tree):
+                if not isinstance(fn, ast.FunctionDef):
                     continue
-                path = os.path.join(dirpath, name)
-                for i, line in enumerate(open(path), 1):
-                    if "awaitTermination(" not in line:
-                        continue
-                    s = line.strip()
-                    if s.startswith("#") or "``" in s or '"' in s:
-                        continue  # comments / docstrings / this scanner
-                    if re.search(
-                        r"(if not |assert |= |return ).*awaitTermination\(", s
+                for node in ast.walk(fn):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "awaitTermination"
                     ):
-                        continue
-                    bare.append(f"{path}:{i}: {s}")
+                        calls.append((os.path.relpath(path, pkg), fn.name))
+    assert calls == [("streaming/file_stream.py", "drain")], calls
+
+    bare = []
+    for dirpath, _dirs, files in os.walk(os.path.join(root, "tests")):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            for i, line in enumerate(open(path), 1):
+                if "awaitTermination(" not in line:
+                    continue
+                s = line.strip()
+                if s.startswith("#") or "``" in s or '"' in s:
+                    continue  # comments / docstrings / this scanner
+                if re.search(
+                    r"(if not |assert |= |return ).*awaitTermination\(", s
+                ):
+                    continue
+                bare.append(f"{path}:{i}: {s}")
     assert not bare, "bare awaitTermination call sites:\n" + "\n".join(bare)
+
+
+STREAM_BUILDERS = [
+    "events_stream_daily_counts",
+    "events_stream_sessions",
+    "events_stream_user_quota",
+    "events_stream_view_purchase_join",
+    "events_stream_segment_revenue",
+    "events_stream_dedup",
+    "events_stream_incremental_rollup",
+    "events_stream_view_purchase_left",
+    "orders_stream_join_ivm",
+    "orders_stream_rollup_ivm",
+    "media_stream_decode",
+]
+
+
+def _session_state(spark):
+    """What a stream builder must leave as it found it: temp views,
+    active streams, ``dmt_*`` scratch dirs and session conf."""
+    import glob
+    import tempfile
+
+    return {
+        "temp_views": sorted(
+            t.name for t in spark.catalog.listTables() if t.isTemporary
+        ),
+        "active_streams": [q.id for q in spark.streams.active],
+        "dmt_dirs": sorted(
+            glob.glob(os.path.join(tempfile.gettempdir(), "dmt_*"))
+        ),
+        "conf": spark.conf.getAll,
+    }
+
+
+@pytest.mark.parametrize("name", STREAM_BUILDERS)
+def test_stream_builder_leaves_session_clean(spark, name):
+    """Each stream builder, consumed with ``collect()``, drops its memory
+    sink view, stops its query, removes its scratch dir and restores
+    the conf its drain scoped."""
+    from data_migration_tool_spark.plans import mediaq, streamq
+
+    builder = getattr(streamq, name, None) or getattr(mediaq, name)
+    before = _session_state(spark)
+    assert len(builder(spark, "/root/testdata/sf0.001").collect()) > 0
+    assert _session_state(spark) == before
+
+
+def _events_stream(spark, landing):
+    import shutil
+
+    from data_migration_tool_spark.tables import stream_table
+
+    shutil.copy(
+        "/root/testdata/sf0.001/events.parquet",
+        os.path.join(landing, "events.parquet"),
+    )
+    return stream_table(spark, landing)
+
+
+def _sleep_batch(_df, _bid):
+    import time
+
+    time.sleep(3)
+
+
+def _raise_batch(_df, _bid):
+    raise ValueError("planted foreachBatch failure")
+
+
+@pytest.mark.parametrize("case", ["timeout", "raising_batch", "raising_sink"])
+def test_drain_refusal_paths_leave_session_clean(spark, monkeypatch, case):
+    """The harness's refusal paths clean up like its success path: a
+    drain past the timeout (stopped, then refused), a ``foreachBatch``
+    that raises, and a memory-sink stream whose task raises. The
+    memory sink's view, the query and the scratch dir must all go."""
+    from pyspark.sql import functions as F
+
+    from data_migration_tool_spark.streaming import file_stream as FS
+
+    monkeypatch.setattr(FS, "DRAIN_TIMEOUT_S", 1)
+    before = _session_state(spark)
+    with pytest.raises(Exception) as err:
+        with FS.stream_scratch() as (work, landing):
+            stream = _events_stream(spark, landing)
+            if case == "timeout":
+                FS.drain(stream, "hyg", work, landing, foreach_batch=_sleep_batch)
+            elif case == "raising_batch":
+                FS.drain(stream, "hyg", work, landing, foreach_batch=_raise_batch)
+            else:
+                boom = F.udf(lambda v: 1 // 0, "int")
+                FS.drain(stream.select(boom("event_id")), "hyg", work, landing)
+    if case == "timeout":
+        assert "did not drain within 1s" in str(err.value)
+    assert _session_state(spark) == before
+
+
+def test_stream_scratch_removed_when_staging_raises(spark, tmp_path):
+    """A setup that raises before any stream starts still removes the
+    scratch dir: here the stager finds no part files to land."""
+    from data_migration_tool_spark.plans.streamq import _stage_events
+    from data_migration_tool_spark.streaming.file_stream import stream_scratch
+
+    before = _session_state(spark)
+    with pytest.raises(FileNotFoundError):
+        with stream_scratch() as (_work, landing):
+            _stage_events(str(tmp_path), landing)
+    assert _session_state(spark) == before
 
 
 def test_orders_stream_join_ivm_equals_direct_join(spark):
