@@ -5,11 +5,18 @@ Replaces the reference's BigQuery audit sink
 sites) with parquet append under a root directory. Known table schemas
 follow FIXTURES.md §5 (derived from ``terraform/**/bq_schemas/*.json``).
 
-Scale: audit rows are tiny; each insert is one small parquet file.
-At fleet scale you'd point ``root`` at object storage and compact
-periodically. Every append to a table carries that table's one schema,
-so the read path (``table``) takes it from one part file's footer — no
-schema merge and no inference job.
+Scale: audit rows are metadata-grain — one row per table, file, DDL
+statement, validation or guard trip, never per data row — so an append
+is one small parquet file written on the driver, and a read is
+driver-resident: ``table`` reads the part files with pyarrow and hands
+Spark an Arrow table, which is a ``LocalRelation``. Filters and
+projections over it fold in Catalyst and a ``collect()`` of them
+schedules no job. Above ``spark.sql.execution.arrow.localRelationThreshold``
+(48 MB) Spark parallelizes the same table from the driver, so a larger
+log stays correct, only no longer job-free. At fleet scale you'd point
+``root`` at object storage and compact periodically. Every append to a
+table carries that table's one schema, so the schema comes from one
+part file's footer — no schema merge and no inference job.
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from data_migration_tool_spark.tables import parquet_schema
+from data_migration_tool_spark.tables import arrow_rows, local_frame, parquet_schema
 
 _S = T.StructField
 
@@ -176,48 +183,23 @@ class AuditLog:
         return os.path.join(self.root, table)
 
     def insert_rows(self, table: str, rows: list[dict]) -> None:
-        """JSON-row append (reference ``insert_rows_json``).
+        """JSON-row append (reference ``insert_rows_json``) to a
+        ``KNOWN_SCHEMAS`` table; frames of any other shape go through
+        ``insert_df``.
 
-        Known-schema appends are written directly with pyarrow — a
-        driver-local file create, ~ms — instead of a Spark job (~0.5 s
-        per append even on the LocalRelation fast path; audit-heavy
-        operators fire several appends per call, all driver-side fixed
-        cost, guide §5). The arrow schema comes from the same Spark
-        schema (``to_arrow_schema``, timestamps as UTC micros), so
-        Spark's directory read unifies arrow- and Spark-written parts.
-        Unknown tables (schema inferred from dicts) keep the Spark
-        writer, as does any arrow conversion surprise."""
-        schema = KNOWN_SCHEMAS.get(table)
-        if schema is not None:
-            try:
-                self._insert_rows_arrow(table, rows, schema)
-                return
-            except Exception:  # noqa: BLE001 — fall back to the Spark writer
-                pass
-        if schema is not None:
-            data = [tuple(r.get(f.name) for f in schema.fields) for r in rows]
-            df = self.spark.createDataFrame(data, schema)
-        else:
-            df = self.spark.createDataFrame(rows)
-        # No coalesce(1): CoalesceExec over a LocalRelation defeats the
-        # local-table write fast path and costs ~3.5 s per 1-row append
-        # (measured; plain write is ~0.5 s). Empty partitions produce no
-        # files, so small appends still emit only 1-2 files each.
-        df.write.mode("append").parquet(self.path(table))
-
-    def _insert_rows_arrow(self, table: str, rows: list[dict], schema) -> None:
+        The part file is written directly with pyarrow — a driver-local
+        file create, ~ms — instead of a Spark job (~0.5 s per append;
+        audit-heavy operators fire several appends per call). Its arrow
+        schema comes from the Spark schema (``tables.arrow_rows``,
+        timestamps as UTC micros), so pyarrow- and Spark-written parts
+        of one table read back as one schema."""
         import uuid
 
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(schema)
-        cols = [
-            pa.array([r.get(f.name) for r in rows], type=f.type)
-            for f in arrow_schema
-        ]
-        tbl = pa.Table.from_arrays(cols, schema=arrow_schema)
+        if table not in KNOWN_SCHEMAS:
+            raise KeyError(f"audit table {table} has no known schema; use insert_df")
+        tbl = arrow_rows(rows, KNOWN_SCHEMAS[table])
         dirpath = self.path(table)
         os.makedirs(dirpath, exist_ok=True)
         fname = f"part-{uuid.uuid4().hex}.snappy.parquet"
@@ -226,21 +208,43 @@ class AuditLog:
     def insert_df(self, table: str, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path(table))
 
-    def exists(self, table: str) -> bool:
+    def _parts(self, table: str) -> list[str]:
+        """The part files Spark's directory read would list."""
         p = self.path(table)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") for f in os.listdir(p)
+        if not os.path.isdir(p):
+            return []
+        return sorted(
+            os.path.join(p, f) for f in os.listdir(p)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
 
+    def exists(self, table: str) -> bool:
+        return bool(self._parts(table))
+
     def table(self, table: str) -> DataFrame:
-        if self.exists(table):
-            path = self.path(table)
-            schema, _ = parquet_schema(self.spark, path)
-            return self.spark.read.schema(schema).parquet(path)
-        schema = KNOWN_SCHEMAS.get(table)
-        if schema is None:
-            raise FileNotFoundError(f"audit table {table} has no rows and no known schema")
-        return self.spark.createDataFrame([], schema)
+        """The table as a driver-resident frame (see the module
+        docstring): every part file read with pyarrow and cast to the
+        Arrow form of the schema ``spark.read.parquet`` infers, so
+        pyarrow-written and Spark-written parts unify."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        parts = self._parts(table)
+        if not parts:
+            schema = KNOWN_SCHEMAS.get(table)
+            if schema is None:
+                raise FileNotFoundError(f"audit table {table} has no rows and no known schema")
+            return local_frame(self.spark, [], schema)
+        schema, _ = parquet_schema(self.spark, self.path(table))
+        arrow_schema = to_arrow_schema(schema)
+        tbl = pa.concat_tables(
+            pq.read_table(p, columns=arrow_schema.names).cast(arrow_schema)
+            for p in parts
+        )
+        # one chunk: Spark stops reading the Arrow stream at an empty
+        # batch that is not the first, and an empty part file is one
+        return self.spark.createDataFrame(tbl.combine_chunks(), schema)
 
     def view(self, table: str, view_name: str | None = None) -> DataFrame:
         df = self.table(table)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from data_migration_tool_spark.audit.log import AuditLog
 from data_migration_tool_spark.functions.scalars import ordered_string_agg
+from data_migration_tool_spark.tables import local_frame
 
 
 @dataclass
@@ -121,7 +122,7 @@ def columns_info(spark: SparkSession, database: str) -> DataFrame:
     """(table_name, column_name, data_type, ordinal_position,
     is_partitioning_column) for every table — the INFORMATION_SCHEMA
     frame the reference's audit SQL joins against (constants.py:54-73).
-    Built from catalog metadata; tiny, broadcastable."""
+    Built from catalog metadata; tiny, driver-resident (``local_frame``)."""
     rows = []
     for t in spark.catalog.listTables(database):
         if t.isTemporary:
@@ -130,7 +131,8 @@ def columns_info(spark: SparkSession, database: str) -> DataFrame:
             rows.append(
                 (t.name, c.name, c.dataType, i + 1, "YES" if c.isPartition else "NO")
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, column_name string, data_type string, "
         "ordinal_position int, is_partitioning_column string",

@@ -40,6 +40,7 @@ from data_migration_tool_spark.functions.hashing import (
     SEP,
     canonical_string,
 )
+from data_migration_tool_spark.tables import local_frame
 
 RESULT_COLUMNS = [
     "validation_name",
@@ -174,7 +175,7 @@ def schema_validation(
             T.StructField("validation_status", T.StringType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -472,12 +473,11 @@ def row_validation(
     if detail:
         return classified
 
-    counts = classified.groupBy("row_status").agg(F.count(F.lit(1)).alias("n"))
-    total = counts.agg(
-        F.sum("n").alias("total"),
-        F.sum(F.when(F.col("row_status") == "match", F.col("n")).otherwise(0)).alias(
-            "matched"
-        ),
+    # one global aggregate; sums (not counts) keep an empty compare's
+    # totals NULL
+    total = classified.agg(
+        F.sum(F.lit(1)).alias("total"),
+        F.sum(F.when(F.col("row_status") == "match", 1).otherwise(0)).alias("matched"),
     )
     pct = (
         (F.col("total") - F.col("matched")).cast("double")

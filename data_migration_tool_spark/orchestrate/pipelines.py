@@ -12,7 +12,10 @@ dry-run translated DML — collapses here into one in-process pipeline:
    :mod:`translate.dml`) and write Spark SQL to ``targetPath``,
 3. build the error-report **DataFrame** and split it with the config's
    filter rules compiled to one Catalyst predicate (P7/U3 — the
-   failed/translated split is executor-side, never a driver set-diff),
+   failed/translated split is a plan, never a driver set-diff; both
+   frames are driver-resident, built by ``tables.local_frame``, so
+   Catalyst folds the split of an empty report and its ``collect()``
+   runs no job),
 4. DDL: execute translated statements with the retry-fixpoint executor;
    SQL/DML: analyze-only dry run per statement,
 5. audit per-file and aggregate rows, return per-file
@@ -36,6 +39,7 @@ from pyspark.sql import SparkSession
 
 from data_migration_tool_spark.audit.log import AuditLog
 from data_migration_tool_spark.orchestrate.reporting import TaskResult
+from data_migration_tool_spark.tables import local_frame
 from data_migration_tool_spark.translate.dml import translate_file
 from data_migration_tool_spark.translate.dryrun import dry_run_statement
 from data_migration_tool_spark.translate.executor import execute_ddl_fixpoint
@@ -136,13 +140,11 @@ def sql_translation_pipeline(spark: SparkSession, audit: AuditLog):
             with open(os.path.join(out_dir, fname), "w") as fh:
                 fh.write(";\n".join(out_stmts) + ("\n" if out_stmts else ""))
 
-        # ---- error report: rules → one predicate, split executor-side (P7/U3)
-        report_df = spark.createDataFrame(
-            error_rows or [], schema=_REPORT_SCHEMA
-        )
-        all_files_df = spark.createDataFrame(
-            [(f,) for f in files], schema="file_path string"
-        )
+        # ---- error report: rules → one predicate over driver-resident
+        # frames (P7/U3); Catalyst folds the split of an empty report, so
+        # a clean translation's split costs no job
+        report_df = local_frame(spark, error_rows, _REPORT_SCHEMA)
+        all_files_df = local_frame(spark, [(f,) for f in files], "file_path string")
         failed_df, _ignored = split_translation_report(report_df, rules)
         ok_df = translated_files(all_files_df, failed_df)
         failed_set = {r.file_path for r in failed_df.collect()}

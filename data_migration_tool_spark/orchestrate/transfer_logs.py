@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_migration_tool_spark.tables import local_frame
+
 # Extractor patterns (teradata_transfer_run_log_dag.py:311-441).  Kept
 # semantically identical on the line shapes the agent actually emits;
 # anchored/non-greedy where the reference relied on Python re's
@@ -107,7 +109,7 @@ def logs_to_df(spark: SparkSession, logs: list[dict[str, Any]]) -> DataFrame:
         (i, d.get("severity", "INFO"), d.get("messageText", ""))
         for i, d in enumerate(logs)
     ]
-    return spark.createDataFrame(rows, LOG_SCHEMA)
+    return local_frame(spark, rows, LOG_SCHEMA)
 
 
 def _x(pat: str, group: int) -> F.Column:

@@ -742,8 +742,6 @@ def orders_stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _stage_cdc(os.path.join(work, "ball"), landing)
 
-        li_static = li.persist()
-
         def _apply(batch, _bid):
             # ONE batch⋈lineitem join per trigger: per-op joins
             # (deletes⋈li, inserts⋈li) would each scan the persisted
@@ -779,18 +777,21 @@ def orders_stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(landing)
         )
-        drain(stream, "orders_stream_join_ivm", work, landing, foreach_batch=_apply)
-        out = (
-            spark.read.parquet(view_path)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("rev").cast("double").alias("sum_revenue"),
+        li_static = li.persist()
+        try:
+            drain(stream, "orders_stream_join_ivm", work, landing, foreach_batch=_apply)
+            out = (
+                spark.read.parquet(view_path)
+                .groupBy("o_orderstatus")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_rows"),
+                    F.sum("rev").cast("double").alias("sum_revenue"),
+                )
+                .orderBy("o_orderstatus")
+                .localCheckpoint(eager=True)
             )
-            .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)
-        )
-        li_static.unpersist()
+        finally:
+            li_static.unpersist()
         return out
 
 

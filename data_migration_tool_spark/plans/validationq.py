@@ -1112,12 +1112,12 @@ def dmt_guard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiny, max_join_pairs=1, auto_candidates=True, audit=latest
     )
 
+    # the audit read is driver-resident (AuditLog.table), so the plan
+    # holds the rows, not the files: the scratch dir goes right away
     ev = AuditLog(spark, root).table("dmt_guard_events")
+    shutil.rmtree(root, ignore_errors=True)
     mx = ev.agg(F.max("run_id").alias("run_id"))
-    # the audit parquet lives in the per-call scratch dir — materialize
-    # the engagement-grain answer (a handful of rows), then drop the
-    # scratch instead of leaking one dir per bench/correctness run
-    out = (
+    return (
         ev.join(F.broadcast(mx), "run_id")
         .groupBy("run_id", "guard", "action")
         .agg(
@@ -1131,10 +1131,7 @@ def dmt_guard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("cap").cast("double"),
         )
         .orderBy("guard", "action")
-        .localCheckpoint(eager=True)
     )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 DMT_GUARD_AUDIT_SQL = """

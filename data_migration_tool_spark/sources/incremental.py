@@ -28,10 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from data_migration_tool_spark.audit.log import AuditLog
-from data_migration_tool_spark.audit.queries import (
-    affected_tables_from_copy_status,
-    files_in_window,
-)
+from data_migration_tool_spark.audit.queries import files_in_window
 from data_migration_tool_spark.sources.readers import read_table
 from data_migration_tool_spark.tables import parquet_schema
 
@@ -115,7 +112,10 @@ def incremental_append(
     schema_ddl: str | None = None,
 ) -> dict[str, int]:
     """Step 4: per affected table, append-load every staged file from the
-    latest run date. Returns {db.table: files_loaded}."""
+    latest run date. Returns {db.table: files_loaded}. The affected
+    tables are those of the one collected list of PASS files (the
+    ``affected_tables_from_copy_status`` set), so the audit table is
+    queried once."""
     loaded: dict[str, int] = {}
     cs = audit.table("hive_inc_load_table_list")
     latest = cs.agg(F.max(F.to_date("job_run_time")).alias("d"))
@@ -129,16 +129,12 @@ def incremental_append(
         .distinct()
         .collect()
     )
-    affected = affected_tables_from_copy_status(audit).collect()
-    for t in affected:
-        db, tbl = t["hive_db"], t["table_name"]
-        paths = [
+    by_table: dict[tuple[str, str], list[str]] = {}
+    for f in files:
+        by_table.setdefault((f["hive_db"], f["table_name"]), []).append(
             f["destination_path"]
-            for f in files
-            if f["hive_db"] == db and f["table_name"] == tbl
-        ]
-        if not paths:
-            continue
+        )
+    for (db, tbl), paths in by_table.items():
         if len(paths) == 1:
             df = read_table(
                 spark, paths[0], fmt=fmt, delimiter=delimiter, schema_ddl=schema_ddl

@@ -200,6 +200,37 @@ def parquet_schema(spark: SparkSession, path: str) -> tuple[T.StructType, list[s
         return spark.read.parquet(path).schema, ns_cols
 
 
+def arrow_rows(rows, schema: T.StructType):
+    """Driver-held rows (dicts by field name, or tuples in field order)
+    → a ``pyarrow.Table`` typed by ``schema`` through Spark's own Arrow
+    mapping. Timestamps become UTC micros, so naive datetimes are read
+    as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    if rows and isinstance(rows[0], dict):
+        cols = [[r.get(f.name) for r in rows] for f in arrow_schema]
+    else:
+        cols = [list(c) for c in zip(*rows)] or [[] for _ in arrow_schema]
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """The DataFrame of driver-held control-plane rows (reports, file
+    lists, catalog metadata, audit rows). Built from an Arrow table, it
+    is a ``LocalRelation`` below Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold``: Catalyst folds
+    its filters and projections, sees an empty one is empty, and a
+    ``collect()`` of such a plan schedules no job. ``createDataFrame``
+    of a Python list parallelizes it into a ``LogicalRDD`` instead,
+    which every action pays a job for."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_rows(rows, schema), schema)
+
+
 def restore_nanos(df: DataFrame, ns_cols: list[str]) -> DataFrame:
     """Nanos-as-long columns back to micros timestamps, truncated (not
     rounded) — how micros-native engines surface nanos data."""

@@ -132,6 +132,36 @@ def test_incremental_stage_and_append(spark, tmp_path):
     assert back.count() == 1
 
 
+def test_incremental_append_loads_pass_files_per_table(spark, tmp_path):
+    """A window holding two tables plus one FAIL copy row (its file
+    exists, but the copy is not PASS) loads exactly each table's PASS
+    files, and an older run date's PASS file is not reloaded."""
+    audit = AuditLog(spark, str(tmp_path / "logs"))
+    staged = {}
+    for name, ids in {"a1": [1, 2], "a2": [3], "b1": [10], "a_fail": [99], "a_old": [98]}.items():
+        staged[name] = str(tmp_path / "staging" / f"{name}.parquet")
+        spark.createDataFrame([(i,) for i in ids], "id long").coalesce(1).write.parquet(
+            staged[name]
+        )
+    t0 = datetime.datetime(2026, 1, 2, 12, 0, 0)
+
+    def row(name, table, status, run_time=t0):
+        return {"unique_id": "u", "job_run_time": run_time, "hive_db": "db",
+                "bq_dataset": "db", "table_name": table, "source_path": name,
+                "destination_path": staged[name], "file_copy_status": status}
+
+    audit.insert_rows("hive_inc_load_table_list", [
+        row("a1", "a", "PASS"), row("a2", "a", "PASS"), row("b1", "b", "PASS"),
+        row("a_fail", "a", "FAIL"),
+        row("a_old", "a", "PASS", datetime.datetime(2026, 1, 1, 12, 0, 0)),
+    ])
+    wh = tmp_path / "wh"
+    assert incremental_append(spark, audit, str(wh)) == {"db.a": 2, "db.b": 1}
+    ids = {t: sorted(r.id for r in spark.read.parquet(str(wh / "db" / t)).collect())
+           for t in ("a", "b")}
+    assert ids == {"a": [1, 2, 3], "b": [10]}
+
+
 def test_bucketed_join_is_shuffle_free(spark, tables):
     """Identically-bucketed tables must sort-merge join with NO exchange
     on either side — the co-located-join contract bucketing exists for."""

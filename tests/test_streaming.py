@@ -828,3 +828,47 @@ def test_orders_stream_join_ivm_equals_direct_join(spark):
         .collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_orders_stream_join_ivm_refusal_releases_cached_lineitem(spark, monkeypatch):
+    """A drain that raises (here every micro-batch's view apply) after
+    the cached lineitem was read must still release it: after a JVM GC
+    ``getPersistentRDDs()`` holds no RDD the builder persisted, and the
+    session is otherwise as it was. Ids are compared, not sizes, because
+    earlier tests' garbage may still be collected meanwhile."""
+    import gc
+    import logging
+    import time
+
+    from conftest import SF_DIR
+
+    from data_migration_tool_spark.operators import incremental_agg
+    from data_migration_tool_spark.plans import streamq
+
+    def persistent_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def raising_apply(*_args, **_kwargs):
+        raise ValueError("planted view-apply failure")
+
+    monkeypatch.setattr(incremental_agg, "apply_view_changes_pruned", raising_apply)
+    # py4j logs the callback's exception; a captured record's traceback
+    # would keep the failed batch's checkpointed frame alive
+    monkeypatch.setattr(logging.getLogger("py4j.clientserver"), "disabled", True)
+    before, state = persistent_ids(), _session_state(spark)
+    with pytest.raises(Exception, match="planted view-apply failure"):
+        streamq.orders_stream_join_ivm(spark, SF_DIR)
+    # The failed batch's checkpoint goes asynchronously: pyspark's
+    # foreachBatch wrapper keeps the raised exception (its traceback
+    # holds the batch's frame) until the JVM collects the wrapper's py4j
+    # proxy and the Python side drops it. Poll GC rounds for up to ~10 s.
+    for _ in range(40):
+        gc.collect()
+        spark._jvm.System.gc()
+        spark._jvm.System.runFinalization()
+        time.sleep(0.25)
+        left = persistent_ids() - before
+        if not left:
+            break
+    assert left == set()
+    assert _session_state(spark) == state

@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from data_migration_tool_spark.operators.spec import parse_spec_rows
 from data_migration_tool_spark.operators.validation import (
+    RESULT_COLUMNS,
     ValidationSpec,
     column_validation,
     row_validation,
@@ -157,6 +158,25 @@ def test_row_validation_statuses(spark):
     assert summary["validation_status"] == "fail"
     assert summary["source_agg_value"] == "4"  # total keys
     assert summary["target_agg_value"] == "1"  # matched
+
+
+def test_row_validation_of_empty_tables(spark):
+    """An empty compare keeps its NULL totals (sums over no rows) and so
+    reads as a failed validation, column for column as before."""
+    empty = spark.createDataFrame([], "pk int, v string")
+    spec = ValidationSpec(source_table="s", target_table="t", primary_keys=["pk"],
+                          hash_cols=["*"])
+    summary = row_validation(empty, empty, spec)
+    assert summary.dtypes == [(c, "double" if c in ("difference", "pct_difference",
+                               "pct_threshold") else "string") for c in RESULT_COLUMNS]
+    assert [r.asDict() for r in summary.collect()] == [{
+        "validation_name": "row:pk", "validation_type": "row",
+        "source_table_name": "s", "target_table_name": "t",
+        "source_column_name": "pk", "aggregation_type": "row_hash",
+        "group_by_columns": None, "source_agg_value": None,
+        "target_agg_value": None, "difference": None, "pct_difference": None,
+        "pct_threshold": 0.0, "validation_status": "fail",
+    }]
 
 
 def test_row_validation_random_row_seeded(spark):
