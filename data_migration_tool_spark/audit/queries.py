@@ -10,7 +10,7 @@ exercised (with oracles) over the big testdata tables in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_migration_tool_spark.audit.log import AuditLog
@@ -40,11 +40,12 @@ def tables_to_load(audit: AuditLog, rerun: bool = True) -> DataFrame:
     ).distinct()
     if not rerun:
         return latest
+    # an anti-join keeps a row once however many matches it has, so
+    # repeated PASS loads need no distinct
     loaded = (
         audit.table("hive_bqload_audit")
         .filter(F.col("load_status") == "PASS")
         .select(F.col("hive_db_name").alias("database"), F.col("tablename").alias("table"))
-        .distinct()
     )
     return latest.join(loaded, ["database", "table"], "left_anti")
 
@@ -153,15 +154,27 @@ def clustering_columns(columns_info: DataFrame) -> DataFrame:
     )
 
 
+def _with_table_max(df: DataFrame, value: Column, name: str) -> DataFrame:
+    """``df`` plus column ``name``: the max of ``value`` over all of its
+    rows. A ``max(...) OVER ()`` window moves the rows to one partition
+    through one exchange, and that ``SinglePartition`` output satisfies
+    a following ``distinct`` without another; the
+    ``crossJoin(broadcast(agg))`` shape it replaces plans an aggregate
+    exchange, a broadcast and the distinct's own exchange (4 jobs per
+    collect, 2 here). A scalar subquery also runs 4. The audit tables
+    are one driver-resident frame, so one partition is their grain;
+    Spark's "No Partition Defined for Window operation" warning is
+    expected."""
+    return df.withColumn(name, F.max(value).over(Window.partitionBy()))
+
+
 def files_in_window(audit: AuditLog, lookback_days: int = 1) -> DataFrame:
     """Windowed incremental consumption (ST2, constants.py:84-90): pubsub
     audit rows whose publish_time ∈ (max - lookback, max], file name
     pulled out of the JSON payload (F3)."""
-    pubsub = audit.table("hive_pubsub_audit")
-    mx = pubsub.agg(F.max("publish_time").alias("mx"))
+    pubsub = _with_table_max(audit.table("hive_pubsub_audit"), F.col("publish_time"), "mx")
     return (
-        pubsub.crossJoin(F.broadcast(mx))
-        .filter(
+        pubsub.filter(
             (F.col("publish_time") > F.col("mx") - F.expr(f"INTERVAL {lookback_days} DAY"))
             & (F.col("publish_time") <= F.col("mx"))
         )
@@ -175,17 +188,18 @@ def files_in_window(audit: AuditLog, lookback_days: int = 1) -> DataFrame:
     )
 
 
+def latest_pass_copies(audit: AuditLog) -> DataFrame:
+    """constants.py:92-100's selection: the PASS file-copy rows of the
+    latest job-run date, that date taken over every copy row (a later
+    FAIL-only date selects nothing)."""
+    run_date = F.to_date("job_run_time")
+    cs = _with_table_max(audit.table("hive_inc_load_table_list"), run_date, "__d")
+    return cs.filter(
+        (run_date == F.col("__d")) & (F.col("file_copy_status") == "PASS")
+    ).drop("__d")
+
+
 def affected_tables_from_copy_status(audit: AuditLog) -> DataFrame:
     """constants.py:92-100: distinct PASS-copied tables from the latest
     job-run date."""
-    cs = audit.table("hive_inc_load_table_list")
-    latest_date = cs.agg(F.max(F.to_date("job_run_time")).alias("d"))
-    return (
-        cs.crossJoin(F.broadcast(latest_date))
-        .filter(
-            (F.to_date("job_run_time") == F.col("d"))
-            & (F.col("file_copy_status") == "PASS")
-        )
-        .select("hive_db", "bq_dataset", "table_name")
-        .distinct()
-    )
+    return latest_pass_copies(audit).select("hive_db", "bq_dataset", "table_name").distinct()

@@ -12,6 +12,7 @@ an ordinal-sorted struct (SURVEY A4/O1).
 
 from __future__ import annotations
 
+import datetime
 import os
 from dataclasses import dataclass
 
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 
 from data_migration_tool_spark.audit.log import AuditLog
 from data_migration_tool_spark.functions.scalars import ordered_string_agg
+from data_migration_tool_spark.partitioning import par_jobs
 from data_migration_tool_spark.tables import local_frame
 
 
@@ -33,18 +35,21 @@ class TableMeta:
     ddl: str
 
 
-def table_metadata(spark: SparkSession, qualified_name: str) -> TableMeta:
-    """Format / delimiter / partition columns / DDL for one catalog
-    table. ``DESCRIBE FORMATTED`` rows are a tiny DataFrame — filter on
-    col_name like the reference's InputFormat probe (P4), but against
-    Spark's ``Provider`` row since our tables are datasource tables."""
-    db, _, tbl = qualified_name.rpartition(".")
-    desc = spark.sql(f"DESCRIBE FORMATTED {qualified_name}").collect()
-    kv = {r.col_name.strip(): (r.data_type or "").strip() for r in desc}
-    fmt = kv.get("Provider", "parquet").lower()
+def _catalog_tables(spark: SparkSession, database: str) -> list[str]:
+    """Names of the catalog tables (and views) of ``database``, in
+    catalog order. ``SHOW TABLES`` is a driver-side command whose result
+    Spark plans as a ``LocalRelation``, so listing schedules no job
+    (``spark.catalog.listTables`` runs its result through
+    ``toLocalIterator``: three jobs). Session temp views are not catalog
+    tables and are left out."""
+    rows = spark.sql(f"SHOW TABLES IN {database}").collect()
+    return [r.tableName for r in rows if not r.isTemporary]
 
-    # partition columns appear between the '# Partition Information' and
-    # blank/'# Detailed Table Information' markers
+
+def _partition_columns(desc) -> list[str]:
+    """Partition columns of ``DESCRIBE [FORMATTED]`` rows: the names
+    between the '# Partition Information' marker and the next blank or
+    '#' row ('# col_name' is the section's header)."""
     part_cols: list[str] = []
     in_part = False
     for r in desc:
@@ -58,6 +63,20 @@ def table_metadata(spark: SparkSession, qualified_name: str) -> TableMeta:
                     continue
                 break
             part_cols.append(name)
+    return part_cols
+
+
+def table_metadata(spark: SparkSession, qualified_name: str) -> TableMeta:
+    """Format / delimiter / partition columns / DDL for one catalog
+    table. ``DESCRIBE FORMATTED`` rows are a tiny DataFrame — filter on
+    col_name like the reference's InputFormat probe (P4), but against
+    Spark's ``Provider`` row since our tables are datasource tables.
+    Every command here runs on the driver and schedules no job."""
+    db, _, tbl = qualified_name.rpartition(".")
+    desc = spark.sql(f"DESCRIBE FORMATTED {qualified_name}").collect()
+    kv = {r.col_name.strip(): (r.data_type or "").strip() for r in desc}
+    fmt = kv.get("Provider", "parquet").lower()
+    part_cols = _partition_columns(desc)
 
     delim = None
     if fmt == "csv":
@@ -81,59 +100,70 @@ def extract_catalog_ddls(
     ``hive_ddl_metadata`` audit row per table (ddl_extracted YES/NO,
     format, delimiter, partition/cluster flags) — the driver-side walk
     matches the reference's listTables loop; per-table DDL text is
-    catalog metadata, never data-sized."""
+    catalog metadata, never data-sized.
+
+    The per-table catalog commands are driver-only and independent, so
+    they run on ``par_jobs``' bounded pool; results and audit rows keep
+    catalog order, and a failing table is audited ``NO`` without
+    stopping the others."""
     os.makedirs(os.path.join(out_dir, database), exist_ok=True)
-    metas: list[TableMeta] = []
-    rows: list[dict] = []
-    now = __import__("datetime").datetime.now(__import__("datetime").timezone.utc)
-    for t in spark.catalog.listTables(database):
-        if t.isTemporary:  # session temp views are not catalog tables
-            continue
-        qualified = f"{database}.{t.name}"
+    now = datetime.datetime.now(datetime.timezone.utc)
+
+    def extract(name: str) -> TableMeta | None:
         try:
-            meta = table_metadata(spark, qualified)
-            with open(os.path.join(out_dir, database, f"{t.name}.sql"), "w") as f:
+            meta = table_metadata(spark, f"{database}.{name}")
+            with open(os.path.join(out_dir, database, f"{name}.sql"), "w") as f:
                 f.write(meta.ddl + ";\n")
-            metas.append(meta)
-            extracted = "YES"
-            fmt, delim, parts = meta.fmt, meta.field_delimiter, meta.partition_columns
+            return meta
         except Exception:  # noqa: BLE001 — failed tables audited, not fatal
-            extracted, fmt, delim, parts = "NO", None, None, []
-        rows.append(
-            {
-                "run_id": run_id,
-                "start_time": now,
-                "database": database,
-                "bq_dataset": database,
-                "table": t.name,
-                "field_delimiter": delim,
-                "partition_flag": "Y" if parts else "N",
-                "cluster_flag": "N",
-                "format": fmt,
-                "ddl_extracted": extracted,
-            }
-        )
+            return None
+
+    names = _catalog_tables(spark, database)
+    results = par_jobs(*[lambda n=n: extract(n) for n in names])
+    rows = [
+        {
+            "run_id": run_id,
+            "start_time": now,
+            "database": database,
+            "bq_dataset": database,
+            "table": name,
+            "field_delimiter": meta.field_delimiter if meta else None,
+            "partition_flag": "Y" if meta and meta.partition_columns else "N",
+            "cluster_flag": "N",
+            "format": meta.fmt if meta else None,
+            "ddl_extracted": "YES" if meta else "NO",
+        }
+        for name, meta in zip(names, results)
+    ]
     if audit is not None and rows:
         audit.insert_rows("hive_ddl_metadata", rows)
-    return metas
+    return [m for m in results if m is not None]
 
 
 def columns_info(spark: SparkSession, database: str) -> DataFrame:
     """(table_name, column_name, data_type, ordinal_position,
     is_partitioning_column) for every table — the INFORMATION_SCHEMA
     frame the reference's audit SQL joins against (constants.py:54-73).
-    Built from catalog metadata; tiny, driver-resident (``local_frame``)."""
-    rows = []
-    for t in spark.catalog.listTables(database):
-        if t.isTemporary:
-            continue
-        for i, c in enumerate(spark.catalog.listColumns(f"{database}.{t.name}")):
-            rows.append(
-                (t.name, c.name, c.dataType, i + 1, "YES" if c.isPartition else "NO")
-            )
+    Built from catalog metadata on the driver: the table's schema as the
+    analyzer resolves it (CHAR/VARCHAR read as string; a struct of over
+    25 fields is written out in full, where ``spark.catalog.listColumns``
+    truncates it) and the partition section of ``DESCRIBE``; no job,
+    tiny, driver-resident (``local_frame``)."""
+
+    def table_columns(name: str) -> list[tuple]:
+        qualified = f"{database}.{name}"
+        parts = set(_partition_columns(spark.sql(f"DESCRIBE {qualified}").collect()))
+        return [
+            (name, f.name, f.dataType.simpleString(), i + 1,
+             "YES" if f.name in parts else "NO")
+            for i, f in enumerate(spark.table(qualified).schema)
+        ]
+
+    names = _catalog_tables(spark, database)
+    per_table = par_jobs(*[lambda n=n: table_columns(n) for n in names])
     return local_frame(
         spark,
-        rows,
+        [row for rows in per_table for row in rows],
         "table_name string, column_name string, data_type string, "
         "ordinal_position int, is_partitioning_column string",
     )

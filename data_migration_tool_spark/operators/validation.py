@@ -36,9 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_migration_tool_spark.functions.hashing import (
-    NULL_SENTINEL,
-    SEP,
-    canonical_string,
+    canonical_sql,
+    md5_int32,
+    null_safe_concat,
+    null_safe_concat_sql,
+    quote_name,
 )
 from data_migration_tool_spark.tables import local_frame
 
@@ -404,20 +406,16 @@ def column_validation_inflight(
 
 def _row_fingerprint(df: DataFrame, spec: ValidationSpec) -> Column:
     """Hash (md5) or plain concat of the compared columns, NULL-safe and
-    numerically canonical (see functions.hashing)."""
+    numerically canonical (see functions.hashing): one SQL expression,
+    parsed by one py4j call."""
     cols = spec.hash_cols if spec.hash_cols is not None else spec.concat_cols
     if cols is None or cols == ["*"]:
         use = [c for c in df.columns if c not in set(spec.exclusion_columns)]
     else:
         use = list(cols)
     use = [c for c in use if c not in set(spec.primary_keys)] or use
-    by_name = {f.name: f.dataType for f in df.schema.fields}
-    parts = [
-        F.coalesce(canonical_string(F.col(c), by_name[c]), F.lit(NULL_SENTINEL))
-        for c in sorted(use)
-    ]
-    concat = F.concat_ws(SEP, *parts)
-    return F.md5(concat) if spec.hash_cols is not None else concat
+    concat = null_safe_concat_sql(df, sorted(use))
+    return F.expr(f"md5({concat})" if spec.hash_cols is not None else concat)
 
 
 def row_validation(
@@ -542,11 +540,6 @@ def table_checksum(
     accumulation cannot overflow below ~10^18 rows and is exact in any
     engine (reference compare semantics: dvt/main.py:40-96).
     """
-    from data_migration_tool_spark.functions.hashing import (
-        md5_int32,
-        null_safe_concat,
-    )
-
     h = md5_int32(null_safe_concat(df, cols)).cast("decimal(38,0)")
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
@@ -567,34 +560,35 @@ def table_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     ONE aggregation pass over the table computes every column's stats
     simultaneously (4×|cols|+1 aggregates); the melt to long format is
     a zero-shuffle projection of the 1-row result. Min/max surface
-    through ``canonical_string`` so the profile is engine-portable.
+    through ``canonical_sql`` so the profile is engine-portable.
     At 100 TB: one scan, map-side combinable except the countDistincts
     (exact by design — swap in approx_count_distinct when a bounded
     estimate is acceptable)."""
-    from data_migration_tool_spark.functions.hashing import canonical_string
-
     cols = cols or df.columns
     types = {f.name: f.dataType for f in df.schema.fields}
     aggs = [F.count(F.lit(1)).alias("__total")]
-    for c in cols:
+    for i, c in enumerate(cols):
         # min/max aggregate in the NATIVE type (string min of a numeric
-        # column would be lexicographic) and canonicalize afterwards
+        # column would be lexicographic) and canonicalize afterwards;
+        # the wide row's columns are named by position, so any column
+        # name (a dot, a backtick) profiles
+        col = F.col(quote_name(c))
         aggs += [
-            F.count(c).alias(f"{c}__nonnull"),
-            F.countDistinct(c).alias(f"{c}__distinct"),
-            F.min(c).alias(f"{c}__min"),
-            F.max(c).alias(f"{c}__max"),
+            F.count(col).alias(f"__nonnull{i}"),
+            F.countDistinct(col).alias(f"__distinct{i}"),
+            F.min(col).alias(f"__min{i}"),
+            F.max(col).alias(f"__max{i}"),
         ]
     wide = df.agg(*aggs)
     structs = [
         F.struct(
             F.lit(c).alias("column"),
             F.col("__total").alias("n_rows"),
-            (F.col("__total") - F.col(f"{c}__nonnull")).alias("n_nulls"),
-            F.col(f"{c}__distinct").alias("n_distinct"),
-            canonical_string(F.col(f"{c}__min"), types[c]).alias("min_value"),
-            canonical_string(F.col(f"{c}__max"), types[c]).alias("max_value"),
+            (F.col("__total") - F.col(f"__nonnull{i}")).alias("n_nulls"),
+            F.col(f"__distinct{i}").alias("n_distinct"),
+            F.expr(canonical_sql(f"__min{i}", types[c])).alias("min_value"),
+            F.expr(canonical_sql(f"__max{i}", types[c])).alias("max_value"),
         )
-        for c in cols
+        for i, c in enumerate(cols)
     ]
     return wide.select(F.explode(F.array(*structs)).alias("p")).select("p.*")

@@ -73,12 +73,23 @@ def scoped_loop(spark, partitions: int | None):
     return scoped_conf(spark, conf if partitions else {})
 
 
-def par_jobs(*thunks) -> list:
-    """Run independent driver actions concurrently. Spark's scheduler
-    runs several jobs at once, so independent outputs of one source
-    (setup writes, probe counts over the same caches) back-fill each
-    other's task tails instead of leaving executors idle between
-    sequential jobs. Results in thunk order; exceptions propagate."""
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+# Threads ``par_jobs`` starts at most: the catalog walk hands it one thunk
+# per table, and a database of thousands of tables must not start
+# thousands of threads.
+PAR_JOBS_MAX = 8
+
+
+def par_jobs(*thunks, max_workers: int = PAR_JOBS_MAX) -> list:
+    """Run independent driver actions concurrently, on a pool of at most
+    ``min(max_workers, PAR_JOBS_MAX)`` threads. Spark's scheduler runs
+    several jobs at once, so independent outputs of one source (setup
+    writes, probe counts over the same caches, per-table catalog
+    commands) back-fill each other's task tails instead of leaving
+    executors idle between sequential jobs. Results in thunk order;
+    exceptions propagate."""
+    if not thunks:
+        return []
+    workers = min(len(thunks), max_workers, PAR_JOBS_MAX)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
         futs = [pool.submit(t) for t in thunks]
         return [f.result() for f in futs]

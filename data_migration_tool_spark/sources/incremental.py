@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from data_migration_tool_spark.audit.log import AuditLog
-from data_migration_tool_spark.audit.queries import files_in_window
+from data_migration_tool_spark.audit.queries import files_in_window, latest_pass_copies
 from data_migration_tool_spark.sources.readers import read_table
 from data_migration_tool_spark.tables import parquet_schema
 
@@ -113,18 +113,13 @@ def incremental_append(
 ) -> dict[str, int]:
     """Step 4: per affected table, append-load every staged file from the
     latest run date. Returns {db.table: files_loaded}. The affected
-    tables are those of the one collected list of PASS files (the
-    ``affected_tables_from_copy_status`` set), so the audit table is
-    queried once."""
+    tables are those of the one collected list of PASS files
+    (``latest_pass_copies``, the selection behind
+    ``affected_tables_from_copy_status``), so the audit table is queried
+    once."""
     loaded: dict[str, int] = {}
-    cs = audit.table("hive_inc_load_table_list")
-    latest = cs.agg(F.max(F.to_date("job_run_time")).alias("d"))
     files = (
-        cs.crossJoin(F.broadcast(latest))
-        .filter(
-            (F.to_date("job_run_time") == F.col("d"))
-            & (F.col("file_copy_status") == "PASS")
-        )
+        latest_pass_copies(audit)
         .select("hive_db", "table_name", "destination_path")
         .distinct()
         .collect()

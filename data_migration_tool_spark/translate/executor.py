@@ -10,12 +10,12 @@ dependency graph. Same protocol here against the Spark catalog.
 from __future__ import annotations
 
 import datetime
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
 from data_migration_tool_spark.audit.log import AuditLog
+from data_migration_tool_spark.partitioning import PAR_JOBS_MAX, par_jobs
 
 
 @dataclass
@@ -41,20 +41,23 @@ def _run_one(spark: SparkSession, stmt: str) -> tuple[str, str | None]:
 def execute_ddl_fixpoint(
     spark: SparkSession,
     statements: list[str],
-    max_workers: int = 8,
+    max_workers: int = PAR_JOBS_MAX,
     audit: AuditLog | None = None,
     run_id: str = "ddl_run",
 ) -> list[DDLResult]:
-    """Run all statements concurrently; retry the failed set until it
-    stops shrinking (fixpoint). Dependency chains (view → table) resolve
+    """Run all statements concurrently (``par_jobs``, at most
+    ``max_workers`` at once); retry the failed set until it stops
+    shrinking (fixpoint). Dependency chains (view → table) resolve
     themselves across rounds, like the reference's retry state machine."""
     results = {s: DDLResult(s, "pending") for s in statements}
     pending = list(statements)
     attempt = 0
     while pending:
         attempt += 1
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            outcomes = list(pool.map(lambda s: (s, _run_one(spark, s)), pending))
+        outcomes = par_jobs(
+            *[lambda s=s: (s, _run_one(spark, s)) for s in pending],
+            max_workers=max_workers,
+        )
         failed = []
         for stmt, (status, err) in outcomes:
             results[stmt] = DDLResult(stmt, status, err, attempt)

@@ -14,11 +14,21 @@ import ast
 import datetime
 import os
 import sys
+import threading
+import time
 
 import pytest
+from pyspark.sql import functions as F
 
 from data_migration_tool_spark.audit.log import KNOWN_SCHEMAS, AuditLog
-from data_migration_tool_spark.partitioning import scoped_conf
+from data_migration_tool_spark.audit.queries import (
+    affected_tables_from_copy_status,
+    files_in_window,
+    latest_pass_copies,
+    tables_to_load,
+)
+from data_migration_tool_spark.extract.catalog import columns_info, extract_catalog_ddls
+from data_migration_tool_spark.partitioning import PAR_JOBS_MAX, par_jobs, scoped_conf
 from data_migration_tool_spark.tables import local_frame
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -221,3 +231,223 @@ def test_no_list_fed_create_dataframe_in_control_plane():
         for f in files:
             bad += [f"{os.path.relpath(f, pkg)}:{c}" for c in _list_fed_create_calls(open(f).read())]
     assert not bad, "list-fed createDataFrame in the control plane:\n" + "\n".join(bad)
+
+
+# ---------------------------------------------------------------- window queries
+# The crossJoin(broadcast(agg)) shapes that ``files_in_window`` and
+# ``latest_pass_copies`` replaced: the reference for equivalence and the
+# positive control of the job budget.
+
+def _cross_join_files_in_window(audit: AuditLog, lookback_days: int = 1):
+    pubsub = audit.table("hive_pubsub_audit")
+    mx = pubsub.agg(F.max("publish_time").alias("mx"))
+    return (
+        pubsub.crossJoin(F.broadcast(mx))
+        .filter(
+            (F.col("publish_time") > F.col("mx") - F.expr(f"INTERVAL {lookback_days} DAY"))
+            & (F.col("publish_time") <= F.col("mx"))
+        )
+        .select(
+            F.get_json_object(F.col("data"), "$.name").alias("file_name"),
+            F.get_json_object(F.col("data"), "$.bucket").alias("bucket"),
+            "publish_time",
+            "message_id",
+        )
+        .distinct()
+    )
+
+
+def _cross_join_latest_pass_files(audit: AuditLog):
+    cs = audit.table("hive_inc_load_table_list")
+    latest = cs.agg(F.max(F.to_date("job_run_time")).alias("d"))
+    return (
+        cs.crossJoin(F.broadcast(latest))
+        .filter(
+            (F.to_date("job_run_time") == F.col("d"))
+            & (F.col("file_copy_status") == "PASS")
+        )
+        .select("hive_db", "table_name", "destination_path")
+        .distinct()
+    )
+
+
+def _latest_pass_files(audit: AuditLog):
+    """The PASS-file list ``incremental_append`` collects."""
+    return latest_pass_copies(audit).select("hive_db", "table_name", "destination_path").distinct()
+
+
+def _sorted_rows(df) -> list:
+    return sorted(map(repr, df.collect()))
+
+
+def _pubsub(message_id: str, publish_time):
+    return {"subscription_name": "s", "message_id": message_id, "publish_time": publish_time,
+            "data": '{"name": "/l/db/t/%s.parquet", "bucket": "b"}' % message_id}
+
+
+def _copy(path: str, table: str, status: str, run_time):
+    return {"unique_id": "u", "job_run_time": run_time, "hive_db": "db", "bq_dataset": "db",
+            "table_name": table, "source_path": path, "destination_path": f"/stage/{path}",
+            "file_copy_status": status}
+
+
+def test_files_in_window_matches_cross_join_form(spark, tmp_path):
+    """Ties at the max are all kept, a row exactly at ``max - lookback``
+    is excluded, and a NULL publish_time is neither the max nor in the
+    window; an empty audit table gives no files."""
+    audit = AuditLog(spark, str(tmp_path / "dmt_logs"))
+    assert files_in_window(audit).collect() == [] == _cross_join_files_in_window(audit).collect()
+
+    mx = datetime.datetime(2026, 3, 4, 10, 0, 0, 123456)
+    audit.insert_rows("hive_pubsub_audit", [
+        _pubsub("tie1", mx), _pubsub("tie2", mx),
+        _pubsub("edge", mx - datetime.timedelta(days=1)),
+        _pubsub("inside", mx - datetime.timedelta(days=1) + datetime.timedelta(microseconds=1)),
+        _pubsub("old", mx - datetime.timedelta(days=3)),
+        _pubsub("null", None),
+    ])
+    for days in (1, 2):
+        got = files_in_window(audit, days)
+        assert _sorted_rows(got) == _sorted_rows(_cross_join_files_in_window(audit, days))
+    assert sorted(r.message_id for r in files_in_window(audit).collect()) == ["inside", "tie1", "tie2"]
+    assert sorted(r.message_id for r in files_in_window(audit, 2).collect()) == [
+        "edge", "inside", "tie1", "tie2"]
+
+
+def test_latest_pass_copies_match_cross_join_form(spark, tmp_path):
+    """Two run dates plus a FAIL row: only the latest date's PASS files,
+    and the latest date is taken over every copy row."""
+    audit = AuditLog(spark, str(tmp_path / "dmt_logs"))
+    d1 = datetime.datetime(2026, 3, 2, 12, 0, 0)
+    d2 = datetime.datetime(2026, 3, 4, 9, 0, 0)
+    audit.insert_rows("hive_inc_load_table_list", [
+        _copy("a_old", "a", "PASS", d1), _copy("a1", "a", "PASS", d2),
+        _copy("a1", "a", "PASS", d2 + datetime.timedelta(hours=5)),  # duplicate file, same day
+        _copy("b1", "b", "PASS", d2), _copy("c_fail", "c", "FAIL", d2),
+    ])
+    assert _sorted_rows(_latest_pass_files(audit)) == _sorted_rows(_cross_join_latest_pass_files(audit))
+    assert sorted((r.table_name, r.destination_path) for r in _latest_pass_files(audit).collect()) == [
+        ("a", "/stage/a1"), ("b", "/stage/b1")]
+    assert sorted(r.table_name for r in affected_tables_from_copy_status(audit).collect()) == ["a", "b"]
+
+    # a later date with only a FAIL copy selects nothing
+    audit.insert_rows("hive_inc_load_table_list", [
+        _copy("d_fail", "d", "FAIL", d2 + datetime.timedelta(days=1))])
+    assert _latest_pass_files(audit).collect() == [] == _cross_join_latest_pass_files(audit).collect()
+    assert affected_tables_from_copy_status(audit).collect() == []
+
+
+def test_tables_to_load_with_duplicate_pass_loads(spark, tmp_path):
+    """A table loaded PASS twice is excluded once; the other tables of the
+    latest extraction are each listed once."""
+    audit = AuditLog(spark, str(tmp_path / "dmt_logs"))
+    t0 = datetime.datetime(2026, 3, 4, 1, 0, 0)
+    audit.insert_rows("hive_ddl_metadata", [
+        {"run_id": f"r{i}", "start_time": t0 + datetime.timedelta(hours=i), "database": "db",
+         "bq_dataset": "db", "table": t, "format": "parquet", "partition_flag": "N",
+         "cluster_flag": "N", "ddl_extracted": "YES"}
+        for i in range(2) for t in ("a", "b", "c")
+    ])
+    audit.insert_rows("hive_bqload_audit", [
+        {"hive_db_name": "db", "tablename": "a", "load_status": "PASS", "run_id": "l1"},
+        {"hive_db_name": "db", "tablename": "a", "load_status": "PASS", "run_id": "l2"},
+        {"hive_db_name": "db", "tablename": "b", "load_status": "FAIL", "run_id": "l1"},
+    ])
+    assert sorted(r.table for r in tables_to_load(audit).collect()) == ["b", "c"]
+    assert sorted(r.table for r in tables_to_load(audit, rerun=False).collect()) == ["a", "b", "c"]
+
+
+# ---------------------------------------------------------------- job budget
+
+def _catalog_db(spark, db: str) -> None:
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    spark.sql(f"CREATE DATABASE {db}")
+    spark.sql(f"CREATE TABLE {db}.t1 (a INT, b STRING, p INT) USING parquet PARTITIONED BY (p)")
+    spark.sql(f"CREATE TABLE {db}.t2 (a BIGINT) USING csv OPTIONS (sep '|')")
+
+
+def test_control_plane_job_budget(spark, tmp_path):
+    """The catalog walk and ``columns_info`` schedule no job, and each
+    window query's collect schedules at most 2, against 4 for the
+    crossJoin shape they replaced."""
+    db = "dmt_job_budget"
+    _catalog_db(spark, db)
+    try:
+        audit = AuditLog(spark, str(tmp_path / "dmt_logs"))
+        metas = []
+        assert _jobs(spark, lambda: metas.extend(
+            extract_catalog_ddls(spark, db, str(tmp_path / "ddl"), audit=audit))) == 0
+        assert [m.table for m in metas] == ["t1", "t2"]
+        assert _jobs(spark, lambda: columns_info(spark, db).collect()) == 0
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+    t0 = datetime.datetime(2026, 3, 4, 1, 0, 0)
+    audit.insert_rows("hive_pubsub_audit", [_pubsub(f"m{i}", t0) for i in range(3)])
+    audit.insert_rows("hive_inc_load_table_list", [
+        _copy("a1", "a", "PASS", t0), _copy("a0", "a", "PASS", t0 - datetime.timedelta(days=2))])
+    # positive control: the replaced shape
+    assert _jobs(spark, lambda: _cross_join_files_in_window(audit).collect()) == 4
+    assert _jobs(spark, lambda: _cross_join_latest_pass_files(audit).collect()) == 4
+    assert _jobs(spark, lambda: files_in_window(audit).collect()) <= 2
+    assert _jobs(spark, lambda: _latest_pass_files(audit).collect()) <= 2
+
+
+# ---------------------------------------------------------------- catalog guard
+
+def _catalog_listing_calls(source: str) -> list[str]:
+    """``<x>.catalog.listTables(...)`` / ``<x>.catalog.listColumns(...)``
+    calls: both run their result through ``toLocalIterator`` (jobs)."""
+    return [
+        f"{node.lineno}: {ast.unparse(node)}"
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("listTables", "listColumns")
+        and isinstance(node.func.value, ast.Attribute) and node.func.value.attr == "catalog"
+    ]
+
+
+def test_no_catalog_listing_calls_in_package():
+    """Package code lists tables with ``SHOW TABLES`` and reads columns
+    from table metadata, which schedule no job."""
+    # positive control: the listing loops this replaced are caught
+    assert len(_catalog_listing_calls(
+        "def f(spark, database):\n"
+        "    for t in spark.catalog.listTables(database):\n"
+        "        for c in spark.catalog.listColumns(f'{database}.{t.name}'):\n"
+        "            pass\n"
+    )) == 2
+
+    pkg = os.path.join(ROOT, "data_migration_tool_spark")
+    bad = [
+        f"{os.path.relpath(os.path.join(d, n), pkg)}:{c}"
+        for d, _, ns in os.walk(pkg) for n in ns if n.endswith(".py")
+        for c in _catalog_listing_calls(open(os.path.join(d, n)).read())
+    ]
+    assert not bad, "catalog listing calls in the package:\n" + "\n".join(bad)
+
+
+# ---------------------------------------------------------------- par_jobs
+
+def test_par_jobs_bounds_its_pool():
+    """20 thunks never run more than ``PAR_JOBS_MAX`` at once, results
+    keep thunk order, and ``max_workers`` lowers the bound."""
+    lock = threading.Lock()
+    running = peak = 0
+
+    def thunk(i):
+        nonlocal running, peak
+        with lock:
+            running += 1
+            peak = max(peak, running)
+        time.sleep(0.02)
+        with lock:
+            running -= 1
+        return i
+
+    assert par_jobs(*[lambda i=i: thunk(i) for i in range(20)]) == list(range(20))
+    assert 1 < peak <= PAR_JOBS_MAX == 8
+    peak = 0
+    assert par_jobs(*[lambda i=i: thunk(i) for i in range(20)], max_workers=1) == list(range(20))
+    assert peak == 1
+    assert par_jobs() == []

@@ -532,3 +532,20 @@ def test_column_validation_inflight_matches_two_frame(spark):
 
     with pytest.raises(ValueError, match="group"):
         column_validation_inflight(src, {"g": F.lit("x")}, spec)
+
+
+def test_table_profile_of_any_column_name(spark):
+    """Column names holding a backtick, a dot or a space profile exactly
+    as plain names do."""
+    from data_migration_tool_spark.operators.validation import table_profile
+
+    df = spark.createDataFrame(
+        [(1, 2.5, "x"), (None, 2.5, None), (3, -1.0, "y")],
+        "`a``b` int, `c.d` double, `e f` string",
+    )
+    got = table_profile(df).collect()
+    want = table_profile(df.toDF("p0", "p1", "p2")).collect()
+    assert [r.column for r in got] == df.columns == ["a`b", "c.d", "e f"]
+    assert [tuple(r)[1:] for r in got] == [tuple(r)[1:] for r in want]
+    assert tuple(got[0])[1:] == (3, 1, 2, "1", "3")
+    assert tuple(got[1])[1:] == (3, 0, 2, "-1.000000", "2.500000")
