@@ -7,16 +7,19 @@ follow FIXTURES.md §5 (derived from ``terraform/**/bq_schemas/*.json``).
 
 Scale: audit rows are metadata-grain — one row per table, file, DDL
 statement, validation or guard trip, never per data row — so an append
-is one small parquet file written on the driver, and a read is
-driver-resident: ``table`` reads the part files with pyarrow and hands
-Spark an Arrow table, which is a ``LocalRelation``. Filters and
-projections over it fold in Catalyst and a ``collect()`` of them
-schedules no job. Above ``spark.sql.execution.arrow.localRelationThreshold``
-(48 MB) Spark parallelizes the same table from the driver, so a larger
-log stays correct, only no longer job-free. At fleet scale you'd point
-``root`` at object storage and compact periodically. Every append to a
-table carries that table's one schema, so the schema comes from one
-part file's footer — no schema merge and no inference job.
+is one small parquet file written on the driver, and a read stays on
+the driver: ``arrow`` reads the part files with pyarrow into one Arrow
+table. The AuditLog-fed queries in ``audit.queries`` compute over that
+table with ``pyarrow.compute`` and hand Spark only their result;
+``table`` hands Spark the whole table. Either way Spark gets an Arrow
+table, which is a ``LocalRelation``: filters and projections over it
+fold in Catalyst and a ``collect()`` of them schedules no job. Above
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) Spark
+parallelizes the same table from the driver, so a larger log stays
+correct, only no longer job-free. At fleet scale you'd point ``root``
+at object storage and compact periodically. Every append to a table
+carries that table's one schema, so the schema comes from one part
+file's footer — no schema merge and no inference job.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from data_migration_tool_spark.tables import arrow_rows, local_frame, parquet_schema
+from data_migration_tool_spark.tables import arrow_rows, parquet_schema
 
 _S = T.StructField
 
@@ -166,8 +169,8 @@ KNOWN_SCHEMAS: dict[str, T.StructType] = {
 
 
 class AuditLog:
-    """``dmt_logs`` on parquet: ``insert_rows`` appends, ``table`` reads,
-    ``view`` registers ``dmt_<name>`` temp views for audit SQL."""
+    """``dmt_logs`` on parquet: ``insert_rows`` appends, ``arrow`` and
+    ``table`` read, ``view`` registers ``dmt_<name>`` temp views for audit SQL."""
 
     def __init__(self, spark: SparkSession, root: str, run_id: str | None = None):
         self.spark = spark
@@ -221,11 +224,11 @@ class AuditLog:
     def exists(self, table: str) -> bool:
         return bool(self._parts(table))
 
-    def table(self, table: str) -> DataFrame:
-        """The table as a driver-resident frame (see the module
-        docstring): every part file read with pyarrow and cast to the
-        Arrow form of the schema ``spark.read.parquet`` infers, so
-        pyarrow-written and Spark-written parts unify."""
+    def _read(self, table: str):
+        """(Arrow table, Spark schema) of ``table``: every part file read
+        with pyarrow and cast to the Arrow form of the schema
+        ``spark.read.parquet`` infers, so pyarrow-written and
+        Spark-written parts unify."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -235,7 +238,7 @@ class AuditLog:
             schema = KNOWN_SCHEMAS.get(table)
             if schema is None:
                 raise FileNotFoundError(f"audit table {table} has no rows and no known schema")
-            return local_frame(self.spark, [], schema)
+            return arrow_rows([], schema), schema
         schema, _ = parquet_schema(self.spark, self.path(table))
         arrow_schema = to_arrow_schema(schema)
         tbl = pa.concat_tables(
@@ -244,7 +247,19 @@ class AuditLog:
         )
         # one chunk: Spark stops reading the Arrow stream at an empty
         # batch that is not the first, and an empty part file is one
-        return self.spark.createDataFrame(tbl.combine_chunks(), schema)
+        return tbl.combine_chunks(), schema
+
+    def arrow(self, table: str):
+        """The table as one ``pyarrow.Table`` in the Arrow form of the
+        schema Spark infers; the AuditLog-fed queries in
+        ``audit.queries`` compute over it."""
+        return self._read(table)[0]
+
+    def table(self, table: str) -> DataFrame:
+        """The table as a driver-resident frame (see the module
+        docstring): ``arrow`` handed to Spark with the inferred schema."""
+        tbl, schema = self._read(table)
+        return self.spark.createDataFrame(tbl, schema)
 
     def view(self, table: str, view_name: str | None = None) -> DataFrame:
         df = self.table(table)

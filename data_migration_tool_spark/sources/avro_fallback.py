@@ -431,7 +431,7 @@ def spark_schema(avro_schema: dict) -> T.StructType:
 
 # ---------------------------------------------------------------- read path
 
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
+def read_avro(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Distributed fallback read: schema from one header driver-side,
     then per-file decode inside ``mapInPandas`` over a ``binaryFile``
     scan — Arrow-batched, one task per file.
@@ -444,7 +444,7 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     hand-off files already staged locally; remote lakes should use the
     real spark-avro connector (``readers.read_table`` probes for it and
     prefers it whenever it is on the classpath)."""
-    first = _first_avro_file(path)
+    first = _first_avro_file(path if isinstance(path, str) else path[0])
     with open(first, "rb") as fh:
         head = fh.read()
     avro_schema, _, _, _ = parse_header(head)

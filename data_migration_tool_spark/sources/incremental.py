@@ -25,12 +25,10 @@ import shutil
 import uuid
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from data_migration_tool_spark.audit.log import AuditLog
-from data_migration_tool_spark.audit.queries import files_in_window, latest_pass_copies
+from data_migration_tool_spark.audit.queries import pass_copies, window_files
 from data_migration_tool_spark.sources.readers import read_table
-from data_migration_tool_spark.tables import parquet_schema
 
 # db/table from "<prefix>/<db>/<table>/<file>" (reference parses GCS
 # object names the same way, hive_bq_load_utils_inc.py:82-115)
@@ -55,16 +53,11 @@ def stage_files(
     unique_id = uuid.uuid4().hex
     date_dir = run_time.strftime("%Y%m%d")
     rows = []
-    already = set()
-    if audit.exists("hive_inc_load_table_list"):
-        already = {
-            (r["source_path"], r["destination_path"])
-            for r in audit.table("hive_inc_load_table_list")
-            .filter(F.col("file_copy_status") == "PASS")
-            .select("source_path", "destination_path")
-            .collect()
-        }
-    for r in files_in_window(audit, lookback_days).collect():
+    already = {
+        (r["source_path"], r["destination_path"])
+        for r in pass_copies(audit).select(["source_path", "destination_path"]).to_pylist()
+    }
+    for r in window_files(audit, lookback_days).to_pylist():
         src = r["file_name"]
         parsed = parse_db_table(src)
         t0 = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
@@ -113,34 +106,17 @@ def incremental_append(
 ) -> dict[str, int]:
     """Step 4: per affected table, append-load every staged file from the
     latest run date. Returns {db.table: files_loaded}. The affected
-    tables are those of the one collected list of PASS files
-    (``latest_pass_copies``, the selection behind
-    ``affected_tables_from_copy_status``), so the audit table is queried
-    once."""
-    loaded: dict[str, int] = {}
-    files = (
-        latest_pass_copies(audit)
-        .select("hive_db", "table_name", "destination_path")
-        .distinct()
-        .collect()
-    )
+    tables are those of the PASS files of ``pass_copies(latest=True)``,
+    the selection behind ``affected_tables_from_copy_status``, so the
+    audit table is read once and each table costs one job: its append."""
     by_table: dict[tuple[str, str], list[str]] = {}
-    for f in files:
-        by_table.setdefault((f["hive_db"], f["table_name"]), []).append(
-            f["destination_path"]
-        )
+    for f in pass_copies(audit, latest=True).to_pylist():
+        paths = by_table.setdefault((f["hive_db"], f["table_name"]), [])
+        if f["destination_path"] not in paths:
+            paths.append(f["destination_path"])
+    loaded: dict[str, int] = {}
     for (db, tbl), paths in by_table.items():
-        if len(paths) == 1:
-            df = read_table(
-                spark, paths[0], fmt=fmt, delimiter=delimiter, schema_ddl=schema_ddl
-            )
-        else:
-            reader = spark.read.format(fmt)
-            if fmt == "parquet":
-                # Spark infers from one file too: the staged files of a
-                # table share its schema
-                reader = reader.schema(parquet_schema(spark, paths[0])[0])
-            df = reader.load(paths)
+        df = read_table(spark, paths, fmt=fmt, delimiter=delimiter, schema_ddl=schema_ddl)
         df.write.mode("append").parquet(os.path.join(warehouse, db, tbl))
         loaded[f"{db}.{tbl}"] = len(paths)
     return loaded

@@ -36,7 +36,7 @@ def _avro_available(spark: SparkSession) -> bool:
 
 def read_table(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     fmt: str = "parquet",
     delimiter: str | None = None,
     schema_ddl: str | None = None,
@@ -44,8 +44,11 @@ def read_table(
     skip_rows: int = 0,
     options: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Read a file-backed table.
+    """Read a file-backed table from one path or a list of them.
 
+    - a list of paths: read as one table with the same reader settings;
+      a parquet schema comes from the first path, so the paths must
+      share it.
     - ``delimiter``: any single char incl. ``\\x01`` (Hive default SERDE
       delimiter, sniffed by the reference at extract_hive_ddls.py:135-144).
     - ``schema_ddl``: ``"c1 INT, c2 STRING"`` — the reconstructed
@@ -81,7 +84,8 @@ def read_table(
     elif fmt == "parquet" and not options:
         # the footer schema spares Spark's inference job; reader options
         # (mergeSchema, recursiveFileLookup, ...) keep Spark's inference
-        reader = reader.schema(parquet_schema(spark, path)[0])
+        first = path if isinstance(path, str) else path[0]
+        reader = reader.schema(parquet_schema(spark, first)[0])
     if fmt == "csv":
         reader = reader.option("sep", delimiter or ",").option(
             "header", str(header).lower()

@@ -162,6 +162,30 @@ def test_incremental_append_loads_pass_files_per_table(spark, tmp_path):
     assert ids == {"a": [1, 2, 3], "b": [10]}
 
 
+def test_incremental_append_reads_many_files_with_reader_settings(spark, tmp_path):
+    """Two staged ``|``-delimited CSV files of one table append with the
+    delimiter and the DDL schema, as one file does."""
+    audit = AuditLog(spark, str(tmp_path / "logs"))
+    staged = tmp_path / "staging"
+    staged.mkdir()
+    (staged / "p1.csv").write_text("1|a\n2|b\n")
+    (staged / "p2.csv").write_text("3|c\n")
+    t0 = datetime.datetime(2026, 1, 2, 12, 0, 0)
+    audit.insert_rows("hive_inc_load_table_list", [
+        {"unique_id": "u", "job_run_time": t0, "hive_db": "db", "bq_dataset": "db",
+         "table_name": "t", "source_path": name, "destination_path": str(staged / name),
+         "file_copy_status": "PASS"}
+        for name in ("p1.csv", "p2.csv")
+    ])
+    wh = tmp_path / "wh"
+    assert incremental_append(
+        spark, audit, str(wh), fmt="csv", delimiter="|", schema_ddl="id INT, v STRING"
+    ) == {"db.t": 2}
+    back = spark.read.parquet(str(wh / "db" / "t"))
+    assert back.columns == ["id", "v"]
+    assert sorted(map(tuple, back.collect())) == [(1, "a"), (2, "b"), (3, "c")]
+
+
 def test_bucketed_join_is_shuffle_free(spark, tables):
     """Identically-bucketed tables must sort-merge join with NO exchange
     on either side — the co-located-join contract bucketing exists for."""
