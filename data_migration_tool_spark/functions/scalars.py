@@ -14,7 +14,7 @@ are bit-identical regardless of partitioning or engine.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -64,15 +64,3 @@ def ordered_string_agg(
     o = F.col(order_by) if isinstance(order_by, str) else order_by
     pairs = F.array_sort(F.collect_list(F.struct(o.alias("o"), v.alias("v"))))
     return F.array_join(F.transform(pairs, lambda s: s["v"]), sep)
-
-
-def latest_row_filter(partition_cols: list[str], ts_col: str) -> tuple[Column, str]:
-    """Latest-run selection (SURVEY A3): replaces the reference's
-    correlated ``x = (SELECT MAX(x) ...)`` with one window pass.
-
-    Returns (row_number column, alias) — apply with::
-
-        df.withColumn(alias, col).filter(F.col(alias) == 1).drop(alias)
-    """
-    w = Window.partitionBy(*partition_cols).orderBy(F.desc(ts_col))
-    return F.row_number().over(w), "__rn"

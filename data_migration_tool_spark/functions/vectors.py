@@ -14,12 +14,8 @@ HOF loop runs tight over the array. Don't "optimize" back to it.)
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 
 def _c(col: str | Column) -> Column:
@@ -95,43 +91,3 @@ def int8_quantize_stats(vec: str | Column) -> Column:
         ),
         of_bound,
     )
-
-
-# ---------------------------------------------------------------------------
-# Arrow-batched numpy kernels — the pairwise hot path.
-#
-# Higher-order functions (zip_with/aggregate) are CodegenFallback:
-# evaluated by the interpreted expression walker, outside whole-stage
-# codegen. On a busy session the call sites go megamorphic and a
-# 4M-pair cross join swings 1s↔14s run-to-run. The Arrow path pays one
-# (vectors → float64 matrix) conversion per batch and then runs SIMD
-# dot products — stable, and ~10× the interpreted throughput. This is
-# also the 100 TB design: per-batch BLAS beats per-element interpreted
-# dispatch no matter how many executors you add.
-#
-# Accumulation order differs from the sequential HOF/DuckDB definition
-# (numpy pairwise/SIMD summation), so agreement with an oracle is to
-# float ulps, not bit-exact: fine for id/rank outputs and values
-# rounded ≥ 1e-6 coarse (every oracle-checked query here does one of
-# those); use the HOF forms when bit-exact accumulation matters.
-# ---------------------------------------------------------------------------
-
-
-@pandas_udf(DoubleType())
-def _dot_kernel(va: pd.Series, vb: pd.Series) -> pd.Series:
-    ma = np.stack(va.to_numpy()).astype(np.float64, copy=False)
-    mb = np.stack(vb.to_numpy()).astype(np.float64, copy=False)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
-def pairwise_dot_udf(a: str | Column, b: str | Column) -> Column:
-    """Row-wise dot product of two array columns via Arrow + numpy."""
-    return _dot_kernel(_c(a), _c(b))
-
-
-def pairwise_cosine_udf(
-    a: str | Column, b: str | Column, a_norm: str | Column, b_norm: str | Column
-) -> Column:
-    """Row-wise cosine given precomputed norms (norms once per ROW in
-    the per-side projection; the pair stream pays only the dot)."""
-    return pairwise_dot_udf(a, b) / (_c(a_norm) * _c(b_norm))

@@ -228,11 +228,6 @@ def _encode_block(
     return dc
 
 
-def _pad8(plane: np.ndarray) -> np.ndarray:
-    h, w = plane.shape
-    return np.pad(plane, ((0, -h % 8), (0, -w % 8)), mode="edge")
-
-
 def encode_jpeg(
     pixels: np.ndarray,
     quality: int = 85,

@@ -412,6 +412,6 @@ def process_transfer_run(
     audit.insert_df(JOBWISE_TABLE, jobwise)
     audit.insert_df(SUMMARY_TABLE, summary)
     return {
-        "jobwise_rows": audit.table(JOBWISE_TABLE).count(),
-        "summary_rows": audit.table(SUMMARY_TABLE).count(),
+        "jobwise_rows": audit.arrow(JOBWISE_TABLE).num_rows,
+        "summary_rows": audit.arrow(SUMMARY_TABLE).num_rows,
     }

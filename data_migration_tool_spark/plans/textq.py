@@ -2943,20 +2943,16 @@ def doc_exact_substring_incremental(
         .distinct()
     )
     b_base = batch.select("doc_id", TX.tokens("text").alias("t"))
-    cleaned, _ = exact_substring_apply(b_base, index, K)
-    return cleaned
+    return exact_substring_apply(b_base, index, K)
 
 
 def exact_substring_apply(
     b_base: DataFrame, index: DataFrame, K: int = 5
-) -> tuple[DataFrame, DataFrame]:
-    """Core of the incremental exact-substring dedup, shared with the
-    streaming ingest (``streaming/substr_ingest.py``): dedup a batch
+) -> DataFrame:
+    """Core of the incremental exact-substring dedup: dedup a batch
     (``doc_id``, tokenized ``t``) against a stored gram index
-    (distinct ``g`` md5 keys) under the append contract. Returns
-    ``(cleaned, new_grams)`` — the per-doc stats/clean-hash frame and
-    the batch's index-novel distinct grams (what an ingest appends to
-    the index so the NEXT batch sees this one)."""
+    (distinct ``g`` md5 keys) under the append contract. Returns the
+    per-doc stats/clean-hash frame."""
     b_grams = _xsub_grams(b_base, K)
     hit = b_grams.join(index, "g", "left_semi")
     miss = b_grams.join(index, "g", "left_anti")
@@ -2976,7 +2972,7 @@ def exact_substring_apply(
         ),
         K,
     )
-    return _xsub_finish(b_base, covered), miss.select("g").distinct()
+    return _xsub_finish(b_base, covered)
 
 
 DOC_EXACT_SUBSTRING_INCR_SQL = f"""

@@ -240,12 +240,11 @@ def doc_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible run-to-run and engine-to-engine — no RNG state, no
     seed plumbing, rerun-stable when the pipeline restarts.
 
-    Scale: one exchange on shard + an in-partition sort (exactly what
-    ``sources/sharding.write_training_shards`` executes as
-    repartition → sortWithinPartitions → write). n_shards scales with
-    the corpus (64k shards at 100 TB keeps each ~1.6 GB); the
-    row_number within a shard is a partition-local operator, never a
-    global sort."""
+    Scale: one exchange on shard + an in-partition sort (a shard
+    writer runs it as repartition → sortWithinPartitions → write).
+    n_shards scales with the corpus (64k shards at 100 TB keeps each
+    ~1.6 GB); the row_number within a shard is a partition-local
+    operator, never a global sort."""
     d = load_table(spark, sf_dir, "documents")
     key = F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
     keyed = d.select("doc_id", key.alias("k"))

@@ -67,24 +67,3 @@ def zorder_by(
         for p in ("{c}__mn", "{c}__mx", "{c}__num", "{c}__span")
     ]
     return joined.withColumn(out, zorder_key(ranks, bits)).drop(*drop)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    n_files: int = 16,
-    bits: int = 8,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files range-partitioned by
-    the Morton key of ``cols`` (each column min-max normalized into the
-    bit range first). One extra pass for the global min/max (a 1-row
-    broadcast), one range shuffle — the layout cost every clustered
-    write pays."""
-    (
-        zorder_by(df, cols, bits, out="__z")
-        .repartitionByRange(n_files, "__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

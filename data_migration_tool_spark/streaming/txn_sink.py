@@ -12,6 +12,12 @@ checkpoint guarantees batch N replays with identical content, so a
 replayed write simply rewrites the same directory — the sink converges
 to exactly-once output under any crash/replay interleaving.
 
+A stream uses the sink as the ``foreach_batch`` body of
+``file_stream.drain``, the one AvailableNow drain harness::
+
+    drain(stream, name, work, landing,
+          foreach_batch=lambda df, b: append_batch_idempotent(df, b, target))
+
 A committed-marker file (``_manifest/N``) short-circuits replays of
 already-durable batches (skip the rewrite cost); correctness never
 depends on it — the overwrite alone is idempotent. The marker is
@@ -32,7 +38,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 
 def _is_local_dir(path: str) -> bool:
@@ -83,140 +88,6 @@ def append_batch_idempotent(
             fh.write("committed")
         os.replace(tmp, marker)  # atomic on POSIX — no torn markers
     return True
-
-
-def exactly_once_append(
-    stream: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Wire a streaming DataFrame into the idempotent-append sink with
-    an AvailableNow drain."""
-
-    def _write(df: DataFrame, batch_id: int) -> None:
-        append_batch_idempotent(df, batch_id, target_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_batch_dirs(
-    spark: SparkSession,
-    target_dir: str,
-    max_files_per_batch: int = 1,
-) -> list[int]:
-    """Small-file compaction for the idempotent-append layout (r13):
-    rewrite each COMMITTED ``batch_id=N`` directory down to
-    ``max_files_per_batch`` parquet files and return the compacted
-    batch ids.
-
-    A micro-batch writes with the session's shuffle parallelism, so a
-    long-running stream accumulates O(batches × partitions) small
-    files — the classic lake small-file problem, here bounded per
-    batch directory without touching the sink's exactly-once
-    contract:
-
-    * only COMMITTED batches (marker in ``_manifest/``) are compacted
-      — an uncommitted directory belongs to the crash-replay path,
-      which will overwrite it wholesale;
-    * markers are never touched, so a replayed committed batch still
-      short-circuits after compaction (``append_batch_idempotent``
-      returns False);
-    * the ``batch_id=N`` directory name — the lineage and the
-      partition value — is preserved; only the file count inside
-      changes, and row content is byte-equal (read → coalesce →
-      rewrite of the same rows).
-
-    Crash safety: the rewrite lands in a hidden ``_compact_tmp_N``
-    dir (underscore → invisible to readers); the batch's MARKER is
-    then removed, two renames swap the new dir in, and the marker is
-    rewritten. Removing the marker for the swap window preserves the
-    sink's core contract — correctness never depends on the marker —
-    through a crash mid-swap: the batch's directory may be missing,
-    but its marker is too, so a stream replay of the batch rewrites
-    the directory wholesale (the idempotent-overwrite path), and the
-    NEXT compactor call also self-heals first (restores an orphaned
-    ``_compact_old_N`` whose live dir is missing, re-creates the
-    marker once a live dir exists, clears leftover tmp dirs) — two
-    independent recovery paths instead of a compactor-only one. Run
-    it from the maintenance path (not concurrently with readers that
-    cannot tolerate a brief per-batch swap window). Local targets
-    only — the same constraint as the marker optimization
-    (``_is_local_dir``); with Delta/Iceberg, OPTIMIZE replaces
-    this."""
-    import re
-    import shutil
-
-    if not _is_local_dir(target_dir):
-        raise ValueError(
-            "compact_batch_dirs: local targets only (remote layouts "
-            "should use a table format's OPTIMIZE)"
-        )
-    root = _local_fs_path(target_dir)
-
-    def _write_marker(bid: int) -> None:
-        marker_dir = os.path.join(root, "_manifest")
-        os.makedirs(marker_dir, exist_ok=True)
-        tmp = os.path.join(marker_dir, f"{bid}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write("committed")
-        os.replace(tmp, os.path.join(marker_dir, str(bid)))
-
-    # self-heal any interrupted previous compaction before new work
-    for d in sorted(os.listdir(root)):
-        m = re.fullmatch(r"_compact_old_(\d+)", d)
-        if m:
-            bid = int(m.group(1))
-            live = os.path.join(root, f"batch_id={bid}")
-            if os.path.exists(live):
-                shutil.rmtree(os.path.join(root, d))  # swap completed
-            else:
-                os.rename(os.path.join(root, d), live)  # crash mid-swap
-            # the marker comes off for the swap window; once a live
-            # dir is (back) in place, restore committed status so the
-            # replay short-circuit works again
-            _write_marker(bid)
-        elif re.fullmatch(r"_compact_tmp_\d+", d):
-            shutil.rmtree(os.path.join(root, d))  # incomplete rewrite
-
-    compacted: list[int] = []
-    for d in sorted(os.listdir(root)):
-        m = re.fullmatch(r"batch_id=(\d+)", d)
-        if not m:
-            continue
-        bid = int(m.group(1))
-        if not os.path.exists(os.path.join(root, "_manifest", str(bid))):
-            continue  # uncommitted: the replay path owns it
-        bdir = os.path.join(root, d)
-        n_files = sum(
-            1 for f in os.listdir(bdir) if f.endswith(".parquet")
-        )
-        if n_files <= max_files_per_batch:
-            continue
-        tmp = os.path.join(root, f"_compact_tmp_{bid}")
-        old = os.path.join(root, f"_compact_old_{bid}")
-        (
-            spark.read.parquet(bdir)
-            .coalesce(max_files_per_batch)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        # marker OFF for the swap window: if we crash between the
-        # renames, the batch's replay sees no marker and rewrites the
-        # directory wholesale — the sink's own idempotent-overwrite
-        # recovery — instead of short-circuiting on a marker whose
-        # data directory is transiently missing
-        os.remove(os.path.join(root, "_manifest", str(bid)))
-        os.rename(bdir, old)
-        os.rename(tmp, bdir)
-        _write_marker(bid)
-        shutil.rmtree(old)
-        compacted.append(bid)
-    return compacted
 
 
 def read_appended(spark: SparkSession, target_dir: str) -> DataFrame:

@@ -989,40 +989,6 @@ def test_bpe_encode_matches_python_reference(spark):
     assert got == expect
 
 
-def test_snapshot_diff_statuses(spark):
-    """added / removed / changed / unchanged classification from a
-    full-outer fingerprint compare of two corpus states."""
-    from data_migration_tool_spark.operators.snapshot import (
-        snapshot_diff,
-        snapshot_diff_summary,
-    )
-
-    old = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma"), (3, "delta")],
-        "doc_id BIGINT, text STRING",
-    )
-    new = spark.createDataFrame(
-        [(2, "gamma"), (3, "delta CHANGED"), (4, "epsilon")],
-        "doc_id BIGINT, text STRING",
-    )
-    got = {r["doc_id"]: r["status"] for r in snapshot_diff(old, new).collect()}
-    assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
-
-    # normalization: whitespace/case changes are NOT content changes
-    new2 = spark.createDataFrame(
-        [(1, "  ALPHA   beta ")], "doc_id BIGINT, text STRING"
-    )
-    got2 = {r["doc_id"]: r["status"] for r in snapshot_diff(
-        old.filter("doc_id = 1"), new2).collect()}
-    assert got2 == {1: "unchanged"}
-
-    summary = {
-        r["status"]: r["n_docs"]
-        for r in snapshot_diff_summary(old, new).collect()
-    }
-    assert summary == {"removed": 1, "unchanged": 1, "changed": 1, "added": 1}
-
-
 def test_pca_matches_numpy_reference(spark):
     """Distributed moment-partial PCA == numpy PCA on the collected
     matrix: same eigenvalues, same subspace (|cos| of paired components

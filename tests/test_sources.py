@@ -247,271 +247,6 @@ def test_partitioned_write_prunes_on_read(spark, tables, tmp_path):
     assert back.count() == expected
 
 
-def test_schema_evolution_read_and_align(spark, tmp_path):
-    """Files with drifted schemas (added column, retyped column) read
-    as a union schema, then align_to_target restores the declared
-    shape: typed NULLs for historical gaps, casts for drift, extras
-    dropped — all reported."""
-    from pyspark.sql import types as T
-
-    from data_migration_tool_spark.sources.evolution import (
-        align_to_target,
-        read_evolved,
-    )
-
-    d = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, 10)], "k long, v int").coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-    spark.createDataFrame(
-        [(2, 20, "x")], "k long, v int, extra string"
-    ).coalesce(1).write.mode("append").parquet(d)
-
-    merged = read_evolved(spark, d)
-    assert set(merged.columns) == {"k", "v", "extra"}
-    assert {tuple(r) for r in merged.select("k", "extra").collect()} == {
-        (1, None), (2, "x")
-    }
-
-    declared = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.LongType()),      # retyped int -> long
-            T.StructField("w", T.DoubleType()),    # declared but never landed
-        ]
-    )
-    aligned, report = align_to_target(merged, declared)
-    assert [f.dataType for f in aligned.schema.fields] == [
-        T.LongType(), T.LongType(), T.DoubleType()
-    ]
-    assert {tuple(r) for r in aligned.collect()} == {
-        (1, 10, None), (2, 20, None)
-    }
-    assert report == {
-        "added_null": ["w"], "cast": ["v:int->bigint"], "dropped": ["extra"]
-    }
-
-
-def test_zorder_write_bounds_both_dimensions(spark, tables, tmp_path):
-    """Z-ordered files bound EVERY interleaved column's per-file
-    extent (the property footer min/max pruning needs for filters on
-    either column); a single-column sort bounds only its own column.
-    Verified from the written files' actual parquet footer stats."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from data_migration_tool_spark.sources.zorder import write_zordered
-
-    l = tables["lineitem"].select("l_partkey", "l_suppkey")
-    zdir = str(tmp_path / "zorder")
-    write_zordered(l, zdir, ["l_partkey", "l_suppkey"], n_files=16)
-
-    def extents(d, col):
-        out = []
-        for f in glob.glob(d + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = [
-                md.row_group(0).column(j).path_in_schema
-                for j in range(md.num_columns)
-            ].index(col)
-            stats = [
-                md.row_group(i).column(idx).statistics
-                for i in range(md.num_row_groups)
-            ]
-            out.append((min(s.min for s in stats), max(s.max for s in stats)))
-        return out
-
-    gmin, gmax = l.agg(F.min("l_partkey"), F.max("l_partkey")).first()
-    smin, smax = l.agg(F.min("l_suppkey"), F.max("l_suppkey")).first()
-    p_span, s_span = gmax - gmin, smax - smin
-
-    p_exts = extents(zdir, "l_partkey")
-    s_exts = extents(zdir, "l_suppkey")
-    assert len(p_exts) >= 8  # range partitioning actually split files
-    avg_p = sum(mx - mn for mn, mx in p_exts) / len(p_exts)
-    avg_s = sum(mx - mn for mn, mx in s_exts) / len(s_exts)
-    # 16 files over 2 interleaved dims → ~4×4 grid: each file covers a
-    # fraction of BOTH columns, not just the leading sort column
-    assert avg_p < 0.55 * p_span
-    assert avg_s < 0.55 * s_span
-
-
-def test_training_shard_write_deterministic_order(spark, tmp_path):
-    """Shard export: every doc lands in exactly one shard directory,
-    file contents are hash-ordered, and a rewrite is byte-stable (the
-    reproducibility property the md5 key exists for)."""
-    from data_migration_tool_spark.sources.sharding import write_training_shards
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, id_col="doc_id", n_shards=4)
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    assert back.select("shard").distinct().count() == 4
-    # membership is the pure md5 function of doc_id
-    got = {r["doc_id"]: r["shard"] for r in back.select("doc_id", "shard").collect()}
-    expect = {
-        r["doc_id"]: r["s"]
-        for r in docs.select(
-            "doc_id",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 4
-            )
-            .cast("int")
-            .alias("s"),
-        ).collect()
-    }
-    assert got == expect
-
-    # within-file order is ascending in the hash key (clustered write)
-    one = spark.read.parquet(out + "/shard=0").withColumn(
-        "k", F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
-    )
-    ks = [r["k"] for r in one.select("k").collect()]
-    # parquet preserves row order within a file; single task wrote it
-    assert ks == sorted(ks)
-
-    # rewrite → identical membership and order
-    out2 = str(tmp_path / "shards2")
-    write_training_shards(docs, out2, id_col="doc_id", n_shards=4)
-    a = [tuple(r) for r in spark.read.parquet(out).orderBy("shard", "doc_id").collect()]
-    b = [tuple(r) for r in spark.read.parquet(out2).orderBy("shard", "doc_id").collect()]
-    assert a == b
-
-
-def test_quarantine_reader_splits_and_gates(spark, tmp_path):
-    """PERMISSIVE load: good rows parse, malformed lines land verbatim
-    in the quarantine dir, and the bad-record budget gates the load."""
-    from data_migration_tool_spark.sources.quarantine import (
-        BadRecordThresholdExceeded,
-        read_with_quarantine,
-    )
-
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "1,alice,2.5\n"
-        "2,bob,notanumber\n"  # bad: double column fails to parse
-        "3,carol,3.5\n"
-        "4,dave,oops,extra\n"  # bad: arity mismatch
-        "5,erin,1.0\n"
-    )
-    qdir = str(tmp_path / "quarantine")
-    res = read_with_quarantine(
-        spark,
-        str(p),
-        fmt="csv",
-        schema_ddl="id INT, name STRING, score DOUBLE",
-        quarantine_dir=qdir,
-        max_bad_records=2,
-    )
-    assert res.n_good == 3 and res.n_bad == 2
-    assert sorted(r["id"] for r in res.good.collect()) == [1, 3, 5]
-    quarantined = sorted(
-        r["value"] for r in spark.read.text(qdir).collect()
-    )
-    assert quarantined == ["2,bob,notanumber", "4,dave,oops,extra"]
-
-    import pytest as _pytest
-
-    with _pytest.raises(BadRecordThresholdExceeded):
-        read_with_quarantine(
-            spark,
-            str(p),
-            fmt="csv",
-            schema_ddl="id INT, name STRING, score DOUBLE",
-            quarantine_dir=str(tmp_path / "q2"),
-            max_bad_records=1,
-        )
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tables, tmp_path):
-    """Compacting a 64-small-file directory yields ~target-sized files
-    with identical data; cluster_by additionally restores min/max
-    locality on the cluster column."""
-    from data_migration_tool_spark.sources.compaction import compact
-
-    src = str(tmp_path / "small")
-    li = tables["lineitem"].select("l_orderkey", "l_partkey", "l_quantity")
-    li.repartition(64).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(src + "/*.parquet")) == 64
-    total = sum(os.path.getsize(f) for f in glob.glob(src + "/*.parquet"))
-
-    dst = str(tmp_path / "compacted")
-    plan = compact(spark, src, dst, target_file_bytes=total // 4 + 1)
-    out_files = glob.glob(dst + "/*.parquet")
-    assert plan.n_input_files == 64
-    assert plan.n_output_files == 4
-    assert len(out_files) == 4
-    a = spark.read.parquet(src).orderBy("l_orderkey", "l_partkey", "l_quantity")
-    b = spark.read.parquet(dst).orderBy("l_orderkey", "l_partkey", "l_quantity")
-    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
-
-    # clustered compaction: each file covers a narrow l_orderkey range
-    dst2 = str(tmp_path / "clustered")
-    compact(spark, src, dst2, target_file_bytes=total // 4 + 1,
-            cluster_by=["l_orderkey"])
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in glob.glob(dst2 + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        names = [md.row_group(0).column(j).path_in_schema
-                 for j in range(md.num_columns)]
-        idx = names.index("l_orderkey")
-        stats = [md.row_group(i).column(idx).statistics
-                 for i in range(md.num_row_groups)]
-        spans.append((min(s.min for s in stats), max(s.max for s in stats)))
-    gmin = min(mn for mn, _ in spans)
-    gmax = max(mx for _, mx in spans)
-    avg_span = sum(mx - mn for mn, mx in spans) / len(spans)
-    assert avg_span < 0.5 * (gmax - gmin)
-
-
-def test_fixedwidth_datasource(spark, tmp_path):
-    """Custom Python DataSource: fixed-width records parse with typed
-    fields, blank numerics → NULL, one partition per file."""
-    from data_migration_tool_spark.sources.fixedwidth import FixedWidthDataSource
-
-    d = tmp_path / "fw"
-    d.mkdir()
-    (d / "part1.dat").write_text(
-        "000001alice         00012.50\n"
-        "000002bob           00003.25\n"
-    )
-    (d / "part2.dat").write_text(
-        "000003carol женщина 00099.99\n"
-        "000004dave                  \n"  # blank score → NULL
-    )
-
-    spark.dataSource.register(FixedWidthDataSource)
-    df = (
-        spark.read.format("fixedwidth")
-        .schema("id INT, name STRING, score DOUBLE")
-        .option("path", str(d))
-        .option("widths", "6,14,8")
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 2
-    rows = {r["id"]: (r["name"], r["score"]) for r in df.collect()}
-    assert rows[1] == ("alice", 12.5)
-    assert rows[2] == ("bob", 3.25)
-    assert rows[3] == ("carol женщина", 99.99)
-    assert rows[4] == ("dave", None)
-
-
 def test_orc_and_xml_round_trip(spark, tmp_path):
     from data_migration_tool_spark.sources.readers import read_table
     from data_migration_tool_spark.sources.writers import write_table

@@ -301,28 +301,36 @@ def test_exactly_once_append_sink_replay_safe(spark, tmp_path):
     under (a) a full stream drain, (b) a manual replay of an
     already-committed batch (marker short-circuit), and (c) a forced
     rewrite of a batch directory with the marker removed (overwrite
-    idempotence — the property correctness actually rests on)."""
-    import os
-
+    idempotence — the property correctness actually rests on). The
+    stream drains through ``file_stream.drain`` with the sink as its
+    ``foreach_batch`` body; the second drain reuses ``work``, so it
+    resumes from the first one's checkpoint."""
+    from data_migration_tool_spark.streaming.file_stream import drain
     from data_migration_tool_spark.streaming.txn_sink import (
         append_batch_idempotent,
-        exactly_once_append,
         read_appended,
     )
 
-    landing = str(tmp_path / "landing")
+    work = str(tmp_path / "work")
+    landing = os.path.join(work, "landing")
     target = str(tmp_path / "target")
-    ck = str(tmp_path / "ck")
     os.makedirs(landing)
     rows = spark.createDataFrame(
         [(i, f"r{i}") for i in range(100)], "id long, v string"
     )
     rows.coalesce(1).write.mode("append").parquet(landing)
 
-    stream = spark.readStream.schema(rows.schema).parquet(landing)
-    q = exactly_once_append(stream, target, ck)
-    assert q.awaitTermination(300)
+    def drain_into_sink():
+        drain(
+            spark.readStream.schema(rows.schema).parquet(landing),
+            "txn_sink",
+            work,
+            landing,
+            foreach_batch=lambda df, b: append_batch_idempotent(df, b, target),
+        )
 
+    # (a) a full drain writes every row once
+    drain_into_sink()
     out = read_appended(spark, target)
     assert out.count() == 100
     assert "batch_id" in out.columns
@@ -341,97 +349,8 @@ def test_exactly_once_append_sink_replay_safe(spark, tmp_path):
     assert read_appended(spark, target).count() == 100
 
     # second drain from the checkpoint: nothing new, nothing duplicated
-    q = exactly_once_append(
-        spark.readStream.schema(rows.schema).parquet(landing), target, ck
-    )
-    assert q.awaitTermination(300)
+    drain_into_sink()
     assert read_appended(spark, target).count() == 100
-
-
-def test_compact_batch_dirs(spark, tmp_path):
-    """r13 per-batch small-file compaction: committed batch dirs are
-    rewritten to one file with byte-equal content, markers and the
-    replay short-circuit survive, uncommitted dirs are untouched, and
-    a crash between the swap renames self-heals on the next call."""
-    import os
-    import shutil
-
-    import pytest
-
-    from data_migration_tool_spark.streaming.txn_sink import (
-        append_batch_idempotent,
-        compact_batch_dirs,
-        read_appended,
-    )
-
-    target = str(tmp_path / "target")
-    rows = spark.createDataFrame(
-        [(i, f"r{i}") for i in range(100)], "id long, v string"
-    )
-    # two committed batches, written wide (many small files each)
-    assert append_batch_idempotent(rows.repartition(8), 0, target)
-    assert append_batch_idempotent(rows.repartition(8), 1, target)
-    # one UNCOMMITTED batch dir: data landed, marker missing (crash
-    # before the marker write)
-    rows.repartition(8).write.parquet(os.path.join(target, "batch_id=2"))
-
-    before = sorted(
-        (r.id, r.v, r.batch_id) for r in read_appended(spark, target).collect()
-    )
-    n_files = lambda b: sum(  # noqa: E731
-        1
-        for f in os.listdir(os.path.join(target, f"batch_id={b}"))
-        if f.endswith(".parquet")
-    )
-    assert n_files(0) == 8 and n_files(2) == 8
-
-    assert compact_batch_dirs(spark, target) == [0, 1]
-    assert n_files(0) == 1 and n_files(1) == 1
-    assert n_files(2) == 8  # uncommitted: the replay path owns it
-    after = sorted(
-        (r.id, r.v, r.batch_id) for r in read_appended(spark, target).collect()
-    )
-    assert after == before
-    # markers survive the swap protocol (off during, rewritten after)
-    assert os.path.exists(os.path.join(target, "_manifest", "0"))
-    assert os.path.exists(os.path.join(target, "_manifest", "1"))
-    # replay of a compacted committed batch still short-circuits
-    assert append_batch_idempotent(rows, 0, target) is False
-    # idempotent: nothing left to compact
-    assert compact_batch_dirs(spark, target) == []
-
-    # crash mid-swap (code-review r13 protocol: the marker is OFF in
-    # that window, so BOTH recovery paths work): live dir missing,
-    # marker missing, _compact_old_ orphan present
-    os.rename(
-        os.path.join(target, "batch_id=1"),
-        os.path.join(target, "_compact_old_1"),
-    )
-    os.remove(os.path.join(target, "_manifest", "1"))
-    # recovery path A — a stream replay of the batch rewrites its
-    # directory wholesale (no marker → no short-circuit); emulate it
-    # being possible by checking the marker really is gone
-    assert not os.path.exists(os.path.join(target, "_manifest", "1"))
-    # recovery path B — the next compactor call restores the dir AND
-    # re-creates the marker before doing new work
-    assert compact_batch_dirs(spark, target) == []
-    assert os.path.isdir(os.path.join(target, "batch_id=1"))
-    assert os.path.exists(os.path.join(target, "_manifest", "1"))
-    assert sorted(
-        (r.id, r.v, r.batch_id) for r in read_appended(spark, target).collect()
-    ) == before
-
-    # leftover tmp debris from an interrupted rewrite is cleared
-    shutil.copytree(
-        os.path.join(target, "batch_id=0"),
-        os.path.join(target, "_compact_tmp_0"),
-    )
-    compact_batch_dirs(spark, target)
-    assert not os.path.exists(os.path.join(target, "_compact_tmp_0"))
-
-    # remote layouts are refused loudly
-    with pytest.raises(ValueError, match="local targets only"):
-        compact_batch_dirs(spark, "s3a://bucket/sink")
 
 
 def test_txn_sink_markers_only_for_local_targets(spark, tmp_path):
@@ -459,149 +378,6 @@ def test_txn_sink_markers_only_for_local_targets(spark, tmp_path):
     assert append_batch_idempotent(rows, 7, target) is True
     assert append_batch_idempotent(rows, 7, target) is False  # marker hit
     assert read_appended(spark, target).count() == 1
-
-
-def test_lsh_ingest_stream_across_batches(spark, tmp_path):
-    """Three landed doc files drained as three micro-batches: each
-    batch's near-dup pairs are checked against everything ingested
-    BEFORE it; the band index grows as streaming state; a crashed-batch
-    replay converges (idempotent per-batch writes)."""
-    from data_migration_tool_spark.operators import dedup as DD
-    from data_migration_tool_spark.streaming.lsh_ingest import (
-        ingest_batch,
-        lsh_ingest_stream,
-    )
-
-    landing = str(tmp_path / "landing")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(landing)
-
-    base = "the quick brown fox jumps over the lazy dog by the river"
-    batches = [
-        [(0, base), (1, base.replace("river", "creek"))],
-        [(2, base), (3, "completely different text about spark engines")],
-        [(4, base.replace("river", "creek")), (5, base)],
-    ]
-    schema = "doc_id long, text string"
-
-    def drain():
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(landing)
-        q = lsh_ingest_stream(stream, state, ckpt, threshold=0.5)
-        assert q.awaitTermination(180)
-
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()
-
-    got = {
-        (r.id_a, r.id_b)
-        for r in spark.read.parquet(f"{state}/pairs").select(
-            "id_a", "id_b"
-        ).collect()
-    }
-
-    # sequential reference with the batch operator: batch k vs docs
-    # ingested before it (plus within-batch pairs)
-    all_rows, want = [], set()
-    for rows in batches:
-        nd = spark.createDataFrame(rows, schema)
-        standing = spark.createDataFrame(
-            all_rows or [], schema
-        )
-        ref = DD.minhash_lsh_incremental(
-            nd, DD.lsh_index(standing), standing, threshold=0.5
-        )
-        want |= {(r.id_a, r.id_b) for r in ref.collect()}
-        all_rows += rows
-    assert got == want
-    # the near-dup family {0,1,2,4,5} must interconnect; 3 is isolated
-    assert all(3 not in p for p in got)
-    assert {p for p in got if 0 in p}  # doc 0 pairs exist
-
-    # replay safety: re-running a completed batch changes nothing
-    before = sorted(got)
-    nd = spark.createDataFrame(batches[2], schema)
-    ingest_batch(
-        nd, 2, f"{state}/index", f"{state}/corpus", f"{state}/pairs"
-    )
-    after = sorted(
-        (r.id_a, r.id_b)
-        for r in spark.read.parquet(f"{state}/pairs").select(
-            "id_a", "id_b"
-        ).collect()
-    )
-    assert after == before
-
-
-def test_substr_ingest_stream_across_batches(spark, tmp_path):
-    """Three landed doc files drained as three micro-batches: each
-    batch is exact-substring-deduped against the gram index ingested
-    BEFORE it; the index grows by novel grams only; the union of all
-    cleaned outputs equals the one-shot batch run over the full corpus
-    (ids ascend across batches, so canonical election agrees); a
-    crashed-batch replay converges (idempotent per-batch writes)."""
-    from data_migration_tool_spark.streaming.substr_ingest import (
-        ingest_batch,
-        substr_ingest_stream,
-    )
-    from tests.test_dataops import _exact_substr_brute
-
-    landing = str(tmp_path / "landing")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(landing)
-
-    span = "alpha beta gamma delta epsilon"
-    batches = [
-        [(0, span + " zeta eta"), (1, "one two three four five six")],
-        [(2, "lead in words " + span), (3, "one two three four five六")],
-        [(4, span + " " + span), (5, "fresh tokens only here now")],
-    ]
-    schema = "doc_id long, text string"
-
-    def drain():
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", 1
-        ).parquet(landing)
-        q = substr_ingest_stream(stream, state, ckpt)
-        assert q.awaitTermination(180)
-
-    for rows in batches:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        drain()
-
-    got = {
-        r.doc_id: (r.n_tokens, r.n_removed, r.n_spans, r.clean_md5)
-        for r in spark.read.parquet(f"{state}/cleaned")
-        .select("doc_id", "n_tokens", "n_removed", "n_spans", "clean_md5")
-        .collect()
-    }
-    want = _exact_substr_brute([d for rows in batches for d in rows])
-    assert got == want
-    # the planted cross-batch dup fired: docs 2 and 4 lose the span to
-    # canonical owner 0; doc 4's SECOND copy is covered too (intra-doc)
-    assert got[2][1] >= 5 and got[4][1] == 10
-    # index is duplicate-free (novel grams only were appended)
-    idx = spark.read.parquet(f"{state}/index").select("g")
-    assert idx.count() == idx.distinct().count()
-
-    # replay safety: re-running a completed batch changes nothing
-    nd = spark.createDataFrame(batches[2], schema)
-    ingest_batch(nd, 2, f"{state}/index", f"{state}/cleaned")
-    again = {
-        r.doc_id: (r.n_tokens, r.n_removed, r.n_spans, r.clean_md5)
-        for r in spark.read.parquet(f"{state}/cleaned")
-        .select("doc_id", "n_tokens", "n_removed", "n_spans", "clean_md5")
-        .collect()
-    }
-    assert again == want
 
 
 def test_stream_stager_handles_directory_tables(spark, tmp_path):

@@ -5,6 +5,8 @@ reference teradata_transfer_run_log_dag.py:190-234 paginated fetch,
 from __future__ import annotations
 
 import json
+import os
+import sys
 
 import pytest
 
@@ -12,6 +14,10 @@ from data_migration_tool_spark.audit.log import AuditLog
 from data_migration_tool_spark.orchestrate import transfer_logs as TL
 from data_migration_tool_spark.orchestrate.controller import Controller
 from data_migration_tool_spark.orchestrate.pipelines import transfer_log_pipeline
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.profile_jobs import _marker_job_id  # noqa: E402
 
 FIXTURE_LOGS = [
     {"severity": "INFO", "messageText": "Transfer load date: 20260814"},
@@ -168,3 +174,31 @@ def test_transfer_run_finished_event_mines_audit_rows(spark, tmp_path):
     assert {r.unique_id for r in jobwise.collect()} == {"u-99"}
     summary = audit.table(TL.SUMMARY_TABLE).collect()
     assert len(summary) == 1 and summary[0].failed_jobs == 2
+
+
+def test_process_transfer_run_counts_schedule_no_job(spark, tmp_path):
+    """``process_transfer_run`` returns the audit tables' sizes, counted
+    on their Arrow form: the two counts after the last insert schedule
+    no job, where a Spark ``count()`` over the same frame schedules
+    some."""
+    audit = AuditLog(spark, str(tmp_path / "logs"))
+    after_inserts = []
+    insert_df = audit.insert_df
+
+    def insert_then_mark(table, df):
+        insert_df(table, df)
+        if table == TL.SUMMARY_TABLE:
+            after_inserts.append(_marker_job_id(spark))
+
+    audit.insert_df = insert_then_mark
+    counts = TL.process_transfer_run(spark, audit, FIXTURE_LOGS, unique_id="u-1")
+    assert _marker_job_id(spark) - after_inserts[0] - 1 == 0
+    assert counts == {
+        "jobwise_rows": len(audit.table(TL.JOBWISE_TABLE).collect()),
+        "summary_rows": len(audit.table(TL.SUMMARY_TABLE).collect()),
+    } == {"jobwise_rows": 3, "summary_rows": 1}
+
+    # positive control: the Spark count the Arrow one replaced
+    before = _marker_job_id(spark)
+    audit.table(TL.JOBWISE_TABLE).count()
+    assert _marker_job_id(spark) - before - 1 >= 1
