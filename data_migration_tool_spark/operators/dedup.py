@@ -25,12 +25,14 @@ oracle can reproduce them bit-for-bit.
 
 from __future__ import annotations
 
+from contextlib import contextmanager, nullcontext
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_migration_tool_spark.functions.hashing import md5_int32
 from data_migration_tool_spark.functions.text import fingerprint, tokens, word_shingles
-from data_migration_tool_spark.partitioning import spread
+from data_migration_tool_spark.partitioning import cached, scoped_loop, spread
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -178,7 +180,10 @@ def lsh_candidate_pairs(
 
 
 def jaccard_verify(
-    pairs: DataFrame, shingles: DataFrame, id_col: str = "doc_id"
+    pairs: DataFrame,
+    shingles: DataFrame,
+    id_col: str = "doc_id",
+    threshold: float = 0.0,
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs: |∩| from a shingle-equality
     join restricted to the pairs, sizes from per-doc counts.
@@ -191,46 +196,48 @@ def jaccard_verify(
     LSH contract), which turns the verify stage from corpus-scale
     shuffles into candidate-scale ones.
 
-    The pruned frame persists for the span of the plan: it feeds FOUR
-    branches (both pair-join sides + the two size lookups), and when
-    the caller passes an unmaterialized corpus-scale shingle plan
-    (e.g. ``minhash_lsh_incremental``'s union of standing + new
-    shingles), each branch would otherwise re-run the full corpus
-    explode+hash — measured as 5 separate parquet scans of the corpus
-    in ``doc_lsh_incremental``'s before-plan. The cache is
-    candidate-scale by the LSH contract, so it is always small
-    relative to the corpus (guide §1.2)."""
+    The pruned frame is cached while the pairs with Jaccard ≥
+    ``threshold`` materialize: it feeds FOUR branches (both pair-join
+    sides + the two size lookups), and when the caller passes an
+    unmaterialized corpus-scale shingle plan (e.g.
+    ``minhash_lsh_incremental``'s union of standing + new shingles),
+    each branch would otherwise re-run the full corpus explode+hash —
+    measured as 5 separate parquet scans of the corpus in
+    ``doc_lsh_incremental``'s before-plan. The cache is candidate-scale
+    by the LSH contract, so it is always small relative to the corpus
+    (guide §1.2)."""
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    shingles = shingles.join(
-        F.broadcast(cand_ids), id_col, "left_semi"
-    ).persist()
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    common = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-            ).alias("jaccard"),
+    pruned = shingles.join(F.broadcast(cand_ids), id_col, "left_semi")
+    with cached(pruned) as shingles:
+        sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+        sa = shingles.select(F.col(id_col).alias("id_a"), "shingle")
+        sb = shingles.select(F.col(id_col).alias("id_b"), "shingle")
+        common = (
+            pairs.join(sa, "id_a")
+            .join(sb, ["id_b", "shingle"])
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-    )
+        na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
+        nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+        return (
+            common.join(na, "id_a")
+            .join(nb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                (
+                    F.col("n_common").cast("double")
+                    / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
+                ).alias("jaccard"),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .localCheckpoint(eager=True)
+        )
 
 
 def minhash_lsh_dedup(
@@ -241,26 +248,16 @@ def minhash_lsh_dedup(
     num_hashes: int = NUM_HASHES,
     band_rows: int = BAND_ROWS,
     threshold: float = 0.5,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline → (id_a, id_b, jaccard) pairs over the
-    threshold. Candidates come from LSH buckets; Jaccard is exact.
-
-    ``shingles``: a precomputed (and caller-persisted) ``shingle_set``
-    of ``df`` — lets a caller that runs several shingle consumers over
-    the same corpus (e.g. the recall gates' exact + LSH arms) pay the
-    corpus explode once (guide §1.2: don't compute things twice)."""
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_set(df, id_col, text_col, shingle_n).persist()
-    )
-    bands = minhash_signatures(sh, id_col, num_hashes, band_rows)
-    # persisted: consumed twice by the verify stage (candidate-id
-    # broadcast prune + the pair joins) — without this the band
-    # self-join would run twice
-    cand = lsh_candidate_pairs(bands, id_col).persist()
-    return jaccard_verify(cand, sh, id_col).filter(F.col("jaccard") >= threshold)
+    threshold, materialized. Candidates come from LSH buckets; Jaccard
+    is exact. The candidates are cached: the verify stage consumes them
+    twice (candidate-id broadcast prune + the pair joins), and without
+    the cache the band self-join would run twice."""
+    with cached(shingle_set(df, id_col, text_col, shingle_n)) as sh, cached(
+        lsh_candidate_pairs(minhash_signatures(sh, id_col, num_hashes, band_rows), id_col)
+    ) as cand:
+        return jaccard_verify(cand, sh, id_col, threshold)
 
 
 def dup_clusters(
@@ -308,7 +305,6 @@ def dup_clusters(
         )
         .select("e.u", "e.v")
         .distinct()
-        .persist()
     )
     # round 0 fused into initialization: label = min(id, neighbors) —
     # same groupBy shuffle the plain node-distinct would cost, but
@@ -327,10 +323,11 @@ def dup_clusters(
     # per-exchange stage-jobs and re-planning to every convergence
     # count (interleaved at sf0.1: part_entity_resolution 1.67-2.17 →
     # 1.39-1.55 s, doc_dup_clusters 1.94 → 1.47-1.49 s). Labels are
-    # min-folds — partition-count-independent, oracle-proved.
-    from data_migration_tool_spark.partitioning import scoped_loop
-
-    with scoped_loop(pairs.sparkSession, loop_shuffle_partitions):
+    # min-folds — partition-count-independent, oracle-proved. The edge
+    # list is cached for the loop: every round joins it.
+    with cached(edges) as edges, scoped_loop(
+        pairs.sparkSession, loop_shuffle_partitions
+    ):
         labels = (
             edges.groupBy(F.col("u").alias("id"))
             .agg(F.min("v").alias("_mv"))
@@ -360,7 +357,6 @@ def dup_clusters(
             labels = new_labels.drop("moved", "prev")
             if changed == 0:
                 break
-    edges.unpersist()
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
 
 
@@ -395,8 +391,6 @@ def dup_clusters_two_star(
     # as ``dup_clusters`` (see that loop's comment for the
     # measurements) — the star-collapse arithmetic is min-folds,
     # partition-count-independent.
-    from data_migration_tool_spark.partitioning import scoped_loop
-
     with scoped_loop(pairs.sparkSession, loop_shuffle_partitions):
         edges, fp, converged = _two_star_loop(pairs, max_iters)
     if not converged:
@@ -544,11 +538,11 @@ def ngram_jaccard_pairs(
     - an ``int`` keeps the legacy static-cap semantics; ``None``
       disables the guard (explicit opt-in to quadratic cost).
 
-    ``shingles``: a precomputed (and caller-persisted) ``shingle_set``
+    ``shingles``: a precomputed (and caller-cached) ``shingle_set``
     of ``df`` — callers running several shingle consumers over the same
     corpus (the recall gates) pay the corpus explode once.
 
-    ``prefix_filter`` (r14, guide §3 — prune pairs before the
+    ``prefix_filter`` (guide §3 — prune pairs before the
     quadratic stage): generate candidates from each document's PREFIX
     under the global (df, shingle) order instead of the full inverted
     index, then verify exactly. LOSSLESS for Jaccard ≥ threshold — the
@@ -563,201 +557,195 @@ def ngram_jaccard_pairs(
     computes the identical double-division Jaccard from the full
     per-doc shingle arrays (array_intersect of per-row sets ≡ the
     shingle-equality join's count), so the output is byte-identical to
-    the direct path; only pair GENERATION changes. The result frame is
-    EAGERLY materialized (candidate-scale) so the operator can release
-    its corpus-scale shingle/ranked caches before returning.
+    the direct path; only pair GENERATION changes.
+
+    Every path that reads a cache of the operator's own returns its
+    (candidate-scale) pairs materialized, so those caches release
+    before it returns or refuses; the direct path over a caller's
+    ``shingles`` stays lazy inside the caller's scope.
     """
-    # persist: sh feeds four plan branches (both join sides + two size
-    # lookups) — uncached, the explode+distinct recomputes per branch
-    sh = (
-        shingles
+    # an own shingle frame is cached: it feeds four plan branches (both
+    # join sides + two size lookups), and uncached the explode+distinct
+    # recomputes per branch. A caller's ``shingles`` stays the caller's.
+    with (
+        nullcontext(shingles)
         if shingles is not None
-        else shingle_set(df, id_col, text_col, shingle_n).persist()
-    )
-    if candidate_pairs is not None:
-        return jaccard_verify(candidate_pairs, sh, id_col).filter(
-            F.col("jaccard") >= threshold
-        )
-    if max_join_pairs is not None:
-        implied = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("p"))
-            .collect()[0]["p"]
-        ) or 0
-        sigs = None
-        if max_join_pairs == "auto":
-            n_docs = sh.select(id_col).distinct().count()
-            cap = linear_budget * max(n_docs, 1)
-            why = f"{linear_budget}·n_docs = {cap:,}"
+        else cached(shingle_set(df, id_col, text_col, shingle_n))
+    ) as sh:
+        if candidate_pairs is not None:
+            return jaccard_verify(candidate_pairs, sh, id_col, threshold)
+        if max_join_pairs is not None:
+            implied = (
+                sh.groupBy("shingle")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("p"))
+                .collect()[0]["p"]
+            ) or 0
+            sigs = None
+            if max_join_pairs == "auto":
+                n_docs = sh.select(id_col).distinct().count()
+                cap = linear_budget * max(n_docs, 1)
+                why = f"{linear_budget}·n_docs = {cap:,}"
+                if implied > cap:
+                    # band-bucket histogram: the candidate volume the LSH
+                    # path would verify on this exact corpus
+                    sigs = minhash_signatures(sh, id_col=id_col)
+                    lsh_volume = (
+                        sigs.groupBy("band", "band_key")
+                        .agg(F.count(F.lit(1)).alias("n"))
+                        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("p"))
+                        .collect()[0]["p"]
+                    ) or 0
+                    cap = max(max_blowup * int(lsh_volume), cap)
+                    why = (
+                        f"max({max_blowup}·lsh_candidates = "
+                        f"{max_blowup * int(lsh_volume):,}, {why})"
+                    )
+            else:
+                cap = max_join_pairs
+                why = f"max_join_pairs={cap:,}"
             if implied > cap:
-                # band-bucket histogram: the candidate volume the LSH
-                # path would verify on this exact corpus
-                sigs = minhash_signatures(sh, id_col=id_col)
-                lsh_volume = (
-                    sigs.groupBy("band", "band_key")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("p"))
-                    .collect()[0]["p"]
-                ) or 0
-                cap = max(max_blowup * int(lsh_volume), cap)
-                why = (
-                    f"max({max_blowup}·lsh_candidates = "
-                    f"{max_blowup * int(lsh_volume):,}, {why})"
-                )
-        else:
-            cap = max_join_pairs
-            why = f"max_join_pairs={cap:,}"
-        if implied > cap:
-            if auto_candidates:
+                if auto_candidates:
+                    if audit is not None:
+                        from data_migration_tool_spark.audit.log import guard_event
+
+                        guard_event(
+                            audit,
+                            guard="ngram_jaccard_pairs",
+                            action="degrade",
+                            subject=f"{id_col}/{text_col} shingle self-join",
+                            implied_cost=int(implied),
+                            cap=int(cap),
+                            detail=f"implied pairs over guard ({why}); "
+                            f"verifying LSH candidates instead of all pairs",
+                        )
+                    if sigs is None:
+                        sigs = minhash_signatures(sh, id_col=id_col)
+                    cands = lsh_candidate_pairs(sigs, id_col=id_col)
+                    return jaccard_verify(cands, sh, id_col, threshold)
                 if audit is not None:
                     from data_migration_tool_spark.audit.log import guard_event
 
                     guard_event(
                         audit,
                         guard="ngram_jaccard_pairs",
-                        action="degrade",
+                        action="refuse",
                         subject=f"{id_col}/{text_col} shingle self-join",
                         implied_cost=int(implied),
                         cap=int(cap),
-                        detail=f"implied pairs over guard ({why}); "
-                        f"verifying LSH candidates instead of all pairs",
+                        detail=f"refused: implied pairs over guard ({why})",
                     )
-                if sigs is None:
-                    sigs = minhash_signatures(sh, id_col=id_col)
-                cands = lsh_candidate_pairs(sigs, id_col=id_col)
-                return jaccard_verify(cands, sh, id_col).filter(
-                    F.col("jaccard") >= threshold
+                raise RuntimeError(
+                    f"ngram_jaccard_pairs: shingle self-join would emit "
+                    f"~{int(implied):,} pairs (> {why}). Pass "
+                    f"candidate_pairs from lsh_candidate_pairs() "
+                    f"(sub-quadratic), pass auto_candidates=True to degrade "
+                    f"to the LSH path, raise the guard, or use "
+                    f"minhash_lsh_dedup()."
                 )
-            if audit is not None:
-                from data_migration_tool_spark.audit.log import guard_event
+        if prefix_filter:
+            from fractions import Fraction
 
-                guard_event(
-                    audit,
-                    guard="ngram_jaccard_pairs",
-                    action="refuse",
-                    subject=f"{id_col}/{text_col} shingle self-join",
-                    implied_cost=int(implied),
-                    cap=int(cap),
-                    detail=f"refused: implied pairs over guard ({why})",
+            frac = Fraction(str(threshold))
+            num, den = frac.numerator, frac.denominator
+            dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+            # doc-grain ranked sets under the global (df, shingle) order —
+            # one aggregate, same shape as the containment family's ranked
+            # frame; cached because it feeds the prefix explode (both
+            # self-join sides) AND the verify join (full arrays + sizes).
+            with cached(
+                sh.join(dfreq, "shingle")
+                .groupBy(id_col)
+                .agg(
+                    F.array_sort(
+                        F.collect_list(F.struct("df", "shingle"))
+                    ).alias("ranked"),
+                    F.count(F.lit(1)).alias("n_sh"),
                 )
-            raise RuntimeError(
-                f"ngram_jaccard_pairs: shingle self-join would emit "
-                f"~{int(implied):,} pairs (> {why}). Pass "
-                f"candidate_pairs from lsh_candidate_pairs() "
-                f"(sub-quadratic), pass auto_candidates=True to degrade "
-                f"to the LSH path, raise the guard, or use "
-                f"minhash_lsh_dedup()."
-            )
-    if prefix_filter:
-        from fractions import Fraction
-
-        frac = Fraction(str(threshold))
-        num, den = frac.numerator, frac.denominator
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        # doc-grain ranked sets under the global (df, shingle) order —
-        # one aggregate, same shape as the containment family's ranked
-        # frame; persisted because it feeds the prefix explode (both
-        # self-join sides) AND the verify join (full arrays + sizes).
-        ranked = (
-            sh.join(dfreq, "shingle")
-            .groupBy(id_col)
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("df", "shingle"))
-                ).alias("ranked"),
-                F.count(F.lit(1)).alias("n_sh"),
-            )
-            .persist()
-        )
-        # prefix length n_sh − ⌈t·n_sh⌉ + 1, ⌈t·n⌉ = (num·n + den − 1) div den
-        plen = F.expr(
-            f"n_sh - ((({num}) * n_sh + {den - 1}) div {den}) + 1"
-        )
-        prefix = ranked.select(
-            F.col(id_col),
-            F.col("n_sh"),
-            F.explode(
-                F.slice("ranked", F.lit(1), F.greatest(F.lit(0), plen))
-            ).alias("ps"),
-        ).select(id_col, "n_sh", F.col("ps.shingle").alias("shingle"))
-        pa = prefix.select(
-            F.col(id_col).alias("id_a"), F.col("n_sh").alias("pn_a"), "shingle"
-        )
-        pb = prefix.select(
-            F.col(id_col).alias("id_b"), F.col("n_sh").alias("pn_b"), "shingle"
-        )
-        cands = (
-            pa.join(pb, "shingle")
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                # size bound: J ≥ t ⇒ den·min(|A|,|B|) ≥ num·max(|A|,|B|)
-                & (
-                    F.lit(den) * F.least("pn_a", "pn_b")
-                    >= F.lit(num) * F.greatest("pn_a", "pn_b")
+            ) as ranked:
+                # prefix length n_sh − ⌈t·n_sh⌉ + 1, ⌈t·n⌉ = (num·n + den − 1) div den
+                plen = F.expr(
+                    f"n_sh - ((({num}) * n_sh + {den - 1}) div {den}) + 1"
                 )
-            )
-            .select("id_a", "id_b")
-            .distinct()
+                prefix = ranked.select(
+                    F.col(id_col),
+                    F.col("n_sh"),
+                    F.explode(
+                        F.slice("ranked", F.lit(1), F.greatest(F.lit(0), plen))
+                    ).alias("ps"),
+                ).select(id_col, "n_sh", F.col("ps.shingle").alias("shingle"))
+                pa = prefix.select(
+                    F.col(id_col).alias("id_a"), F.col("n_sh").alias("pn_a"), "shingle"
+                )
+                pb = prefix.select(
+                    F.col(id_col).alias("id_b"), F.col("n_sh").alias("pn_b"), "shingle"
+                )
+                cands = (
+                    pa.join(pb, "shingle")
+                    .filter(
+                        (F.col("id_a") < F.col("id_b"))
+                        # size bound: J ≥ t ⇒ den·min(|A|,|B|) ≥ num·max(|A|,|B|)
+                        & (
+                            F.lit(den) * F.least("pn_a", "pn_b")
+                            >= F.lit(num) * F.greatest("pn_a", "pn_b")
+                        )
+                    )
+                    .select("id_a", "id_b")
+                    .distinct()
+                )
+                full_a = ranked.select(
+                    F.col(id_col).alias("id_a"),
+                    F.transform("ranked", lambda x: x["shingle"]).alias("set_a"),
+                    F.col("n_sh").alias("n_a"),
+                )
+                full_b = ranked.select(
+                    F.col(id_col).alias("id_b"),
+                    F.transform("ranked", lambda x: x["shingle"]).alias("set_b"),
+                    F.col("n_sh").alias("n_b"),
+                )
+                n_common = F.size(F.array_intersect("set_a", "set_b"))
+                return (
+                    cands.join(full_a, "id_a")
+                    .join(full_b, "id_b")
+                    .select(
+                        "id_a",
+                        "id_b",
+                        (
+                            n_common.cast("double")
+                            / (F.col("n_a") + F.col("n_b") - n_common).cast("double")
+                        ).alias("jaccard"),
+                    )
+                    .filter(F.col("jaccard") >= threshold)
+                    .localCheckpoint(eager=True)
+                )
+        sa = sh.select(F.col(id_col).alias("id_a"), "shingle")
+        sb = sh.select(F.col(id_col).alias("id_b"), "shingle")
+        pairs = (
+            sa.join(sb, "shingle")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-        full_a = ranked.select(
-            F.col(id_col).alias("id_a"),
-            F.transform("ranked", lambda x: x["shingle"]).alias("set_a"),
-            F.col("n_sh").alias("n_a"),
-        )
-        full_b = ranked.select(
-            F.col(id_col).alias("id_b"),
-            F.transform("ranked", lambda x: x["shingle"]).alias("set_b"),
-            F.col("n_sh").alias("n_b"),
-        )
-        n_common = F.size(F.array_intersect("set_a", "set_b"))
+        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+        na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
+        nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
         out = (
-            cands.join(full_a, "id_a")
-            .join(full_b, "id_b")
+            pairs.join(na, "id_a")
+            .join(nb, "id_b")
             .select(
                 "id_a",
                 "id_b",
                 (
-                    n_common.cast("double")
-                    / (F.col("n_a") + F.col("n_b") - n_common).cast("double")
+                    F.col("n_common").cast("double")
+                    / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
                 ).alias("jaccard"),
             )
             .filter(F.col("jaccard") >= threshold)
-            # candidate-scale; materialize so the corpus-scale caches
-            # release NOW instead of leaking past return (house persist
-            # discipline — the r13 leaked-persist lesson)
-            .localCheckpoint(eager=True)
         )
-        ranked.unpersist()
-        if shingles is None:
-            sh.unpersist()
-        return out
-    sa = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    pairs = (
-        sa.join(sb, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        pairs.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        return out if shingles is not None else out.localCheckpoint(eager=True)
 
 
+@contextmanager
 def _containment_frames(
     df: DataFrame,
     id_col: str,
@@ -766,77 +754,73 @@ def _containment_frames(
     num: int,
     den: int,
 ):
-    """Shared inverted-index frames for the containment family:
-    (sh, docsets, dfreq, prefix, ranked_sets).
+    """Scope yielding the shared inverted-index frames of the
+    containment family: (sh, docsets, dfreq, prefix).
 
-    ``sh`` is PERSISTED — it feeds the docsets aggregate, the df
-    histogram, the ranked aggregate, and the verify join's probe side
+    ``sh`` is CACHED for the block — it feeds the docsets aggregate, the
+    df histogram, the ranked aggregate, and the verify join's probe side
     (4-5 plan branches; uncached the explode recomputes per branch).
-    ``ranked_sets`` is ALSO persisted (r13, guide §1.2 don't compute
-    twice): the guard's pricing aggregate and the candidate join both
+    The ranked sets under ``prefix`` are ALSO cached (guide §1.2 don't
+    compute twice): the guard's pricing aggregate and the candidate join both
     consume the prefix, and the prefix pipeline's expensive part — the
     corpus-scale ``sh ⋈ dfreq`` shuffle join plus the doc-grain
     groupBy — sat UPSTREAM of both, so it ran twice per query. Caching
     the doc-grain ranked frame (same bytes as sh, reshaped) makes the
     second consumer a cache read. ``prefix`` itself (the post-explode
-    rows) stays NOT persisted: the r10 double-persist of the exploded
-    form cost more than it saved (measured 4.1 s vs 2.9 s —
+    rows) stays uncached: caching the exploded form as well cost more
+    than it saved (measured 4.1 s vs 2.9 s —
     materializing the exploded rows breaks explode → join pipelining);
     the cheap explode re-runs per consumer over the cached ranked
-    frame. The caller owns BOTH caches' lifecycles (unpersist before
-    any recursion, refusal, or return so degrade levels don't stack
-    corpus-scale caches)."""
-    sh = shingle_set(df, id_col, text_col, shingle_n).persist()
-    docsets = sh.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("shingle")).alias("sset"),
-        F.count(F.lit(1)).alias("n_sh"),
-    )
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ceil_tn = f"({num} * n_sh + {den - 1}) div {den}"
-    # Prefix selection as ONE doc-grain aggregate (r13 opt, guide
-    # §2.4): the former row_number window needed a full sort of the
-    # (shingle, df) frame inside the id exchange PLUS a second join
-    # against docsets to fetch n_sh. collect_list + in-row array_sort
-    # ranks the same (df, shingle) pairs per document (struct ordering
-    # = field order, so ties break identically), n_sh falls out of the
-    # same aggregate, and slice() keeps exactly the rows rk ≤ n_sh −
-    # ceil(t·n) + 2 the window kept (greatest(0, ·) mirrors the
-    # no-rows case). One exchange + bounded per-doc sorts instead of
-    # exchange + global sort + join. df rides the projection so the
-    # guard still prices the join with ONE aggregate over it: Σ df
-    # over (doc, shingle) prefix rows IS Σ_s prefix_count(s)·df(s).
-    ranked_sets = (
-        sh.join(dfreq, "shingle")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("df", "shingle"))
-            ).alias("ranked"),
+    frame. Callers leave the block before any recursion, so degrade
+    levels don't stack corpus-scale caches."""
+    with cached(shingle_set(df, id_col, text_col, shingle_n)) as sh:
+        docsets = sh.groupBy(id_col).agg(
+            F.sort_array(F.collect_list("shingle")).alias("sset"),
             F.count(F.lit(1)).alias("n_sh"),
         )
-        .persist()
-    )
-    prefix = (
-        ranked_sets.select(
-            F.col(id_col).alias("id_a"),
-            F.explode(
-                F.slice(
-                    "ranked",
-                    1,
-                    F.greatest(
-                        F.lit(0),
-                        F.col("n_sh") - F.expr(ceil_tn) + F.lit(2),
-                    ),
-                )
-            ).alias("r"),
-        )
-        .select(
-            "id_a",
-            F.col("r.shingle").alias("shingle"),
-            F.col("r.df").alias("df"),
-        )
-    )
-    return sh, docsets, dfreq, prefix, ranked_sets
+        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        ceil_tn = f"({num} * n_sh + {den - 1}) div {den}"
+        # Prefix selection as ONE doc-grain aggregate (guide §2.4): the
+        # former row_number window needed a full sort of the (shingle,
+        # df) frame inside the id exchange PLUS a second join against
+        # docsets to fetch n_sh. collect_list + in-row array_sort ranks
+        # the same (df, shingle) pairs per document (struct ordering =
+        # field order, so ties break identically), n_sh falls out of
+        # the same aggregate, and slice() keeps exactly the rows rk ≤
+        # n_sh − ceil(t·n) + 2 the window kept (greatest(0, ·) mirrors
+        # the no-rows case). One exchange + bounded per-doc sorts
+        # instead of exchange + global sort + join. df rides the
+        # projection so the guard still prices the join with ONE
+        # aggregate over it: Σ df over (doc, shingle) prefix rows IS
+        # Σ_s prefix_count(s)·df(s).
+        with cached(
+            sh.join(dfreq, "shingle")
+            .groupBy(id_col)
+            .agg(
+                F.array_sort(
+                    F.collect_list(F.struct("df", "shingle"))
+                ).alias("ranked"),
+                F.count(F.lit(1)).alias("n_sh"),
+            )
+        ) as ranked_sets:
+            prefix = ranked_sets.select(
+                F.col(id_col).alias("id_a"),
+                F.explode(
+                    F.slice(
+                        "ranked",
+                        1,
+                        F.greatest(
+                            F.lit(0),
+                            F.col("n_sh") - F.expr(ceil_tn) + F.lit(2),
+                        ),
+                    )
+                ).alias("r"),
+            ).select(
+                "id_a",
+                F.col("r.shingle").alias("shingle"),
+                F.col("r.df").alias("df"),
+            )
+            yield sh, docsets, dfreq, prefix
 
 
 def _containment_verify(
@@ -937,123 +921,114 @@ def containment_pairs(
 
     fr = Fraction(str(threshold))
     num, den = fr.numerator, fr.denominator
-    sh, docsets, dfreq, prefix, ranked = _containment_frames(
-        df, id_col, text_col, shingle_n, num, den
-    )
-    if max_candidates is not None:
-        # the guard aggregate and the candidate join both evaluate the
-        # prefix over the cached ranked frame (the corpus-scale join +
-        # groupBy upstream computes once — see _containment_frames)
-        g = prefix.agg(
-            F.sum("df").alias("v"), F.count_distinct("id_a").alias("n")
-        ).first()
-        implied = g["v"] or 0
-        if max_candidates == "auto":
-            cap = linear_budget * max(g["n"], 1)
-            why = f"{linear_budget}·n_docs = {cap:,}"
-        else:
-            cap = max_candidates
-            why = f"max_candidates={cap:,}"
-        if implied > cap:
-            if auto_sample:
-                # Self-sizing degrade: candidate volume is ~quadratic in
-                # the doc count under saturation, so a deterministic
-                # md5 slice of rate r shrinks it ~r² — pick the largest
-                # two-hex-digit rate k/256 with implied·(k/256)² ≤ cap
-                # and recurse on the slice (the recursive call re-prices
-                # with its own aggregate, so an off estimate degrades
-                # again rather than running over budget). This is the
-                # SCALE.md r10 arithmetic as code: the rate tracks
-                # 1/√growth instead of being a fixed constant that the
-                # n² term outruns a decade later. The candidate rate is
-                # relative to the docs IN PLAY (md5 < _rate_limit/256
-                # already holds for all of them), so convert to an
-                # absolute cut and force strict progress — a cut ≥ the
-                # current limit filters nothing, and identical implied/
-                # cap would then recompute the identical k forever.
-                k = int((cap / implied) ** 0.5 * _rate_limit)
-                k = min(k, _rate_limit - 1)
-                if k >= 1:
-                    cut = format(k, "02x")
+    k = 0  # the degrade slice's md5 cut, k/256; 0 = no degrade
+    with _containment_frames(df, id_col, text_col, shingle_n, num, den) as (
+        sh,
+        docsets,
+        dfreq,
+        prefix,
+    ):
+        if max_candidates is not None:
+            # the guard aggregate and the candidate join both evaluate
+            # the prefix over the cached ranked frame (the corpus-scale
+            # join + groupBy upstream computes once — see
+            # _containment_frames)
+            g = prefix.agg(
+                F.sum("df").alias("v"), F.count_distinct("id_a").alias("n")
+            ).first()
+            implied = g["v"] or 0
+            if max_candidates == "auto":
+                cap = linear_budget * max(g["n"], 1)
+                why = f"{linear_budget}·n_docs = {cap:,}"
+            else:
+                cap = max_candidates
+                why = f"max_candidates={cap:,}"
+            if implied > cap:
+                if auto_sample:
+                    # Self-sizing degrade: candidate volume is ~quadratic
+                    # in the doc count under saturation, so a
+                    # deterministic md5 slice of rate r shrinks it ~r² —
+                    # pick the largest two-hex-digit rate k/256 with
+                    # implied·(k/256)² ≤ cap and recurse on the slice
+                    # (the recursive call re-prices with its own
+                    # aggregate, so an off estimate degrades again rather
+                    # than running over budget). This is the SCALE.md
+                    # arithmetic as code: the rate tracks 1/√growth
+                    # instead of being a fixed constant that the n² term
+                    # outruns a decade later. The candidate rate is
+                    # relative to the docs IN PLAY (md5 < _rate_limit/256
+                    # already holds for all of them), so convert to an
+                    # absolute cut and force strict progress — a cut ≥
+                    # the current limit filters nothing, and identical
+                    # implied/cap would then recompute the identical k
+                    # forever.
+                    k = int((cap / implied) ** 0.5 * _rate_limit)
+                    k = min(k, _rate_limit - 1)
+                if k < 1:
+                    # no degrade asked for, or a rate < 1/256 — a sample
+                    # that thin answers nothing: refuse loudly
+                    stats = dfreq.agg(
+                        F.sum("df").alias("rows"), F.count(F.lit(1)).alias("dist")
+                    ).first()
+                    sat = stats["rows"] / max(stats["dist"], 1)
                     if audit is not None:
-                        from data_migration_tool_spark.audit.log import (
-                            guard_event,
-                        )
+                        from data_migration_tool_spark.audit.log import guard_event
 
                         guard_event(
                             audit,
                             guard="containment_pairs",
-                            action="degrade",
-                            subject=f"{id_col}/{text_col} prefix-filtered "
-                            "index join",
+                            action="refuse",
+                            subject=f"{id_col}/{text_col} prefix-filtered index join",
                             implied_cost=int(implied),
                             cap=int(cap),
-                            detail=f"degraded to deterministic md5 doc "
-                            f"sample rate {k}/256 (implied·rate² ≤ cap)",
+                            detail=f"refused: implied candidates over guard ({why}); "
+                            f"mean posting length {sat:.1f} — saturated shingle "
+                            f"domains void the prefix filter's asymptotic bound",
                         )
-                    sliced = df.filter(
-                        F.substring(
-                            F.md5(F.col(id_col).cast("string")), 1, 2
-                        )
-                        < cut
+                    raise RuntimeError(
+                        f"containment_pairs: prefix-filtered join would generate "
+                        f"~{int(implied):,} candidates (> {why}; mean posting "
+                        f"length {sat:.1f} — a saturated shingle domain makes the "
+                        f"prefix filter a constant factor, not an asymptotic one). "
+                        f"Pass auto_sample=True to degrade to a self-sized "
+                        f"deterministic doc sample (cost shrinks by rate²), raise "
+                        f"linear_budget, or pass max_candidates=None to opt into "
+                        f"the quadratic join."
                     )
-                    # drop this level's cache before recursing — degrade
-                    # levels must not stack persisted shingle frames
-                    sh.unpersist()
-                    ranked.unpersist()
-                    return containment_pairs(
-                        sliced,
-                        id_col=id_col,
-                        text_col=text_col,
-                        shingle_n=shingle_n,
-                        threshold=threshold,
-                        max_candidates=max_candidates,
-                        linear_budget=linear_budget,
-                        auto_sample=True,
-                        audit=audit,
-                        _rate_limit=k,
-                    )
-                # rate would be < 1/256 — a sample that thin answers
-                # nothing; fall through to the loud refusal
-            stats = dfreq.agg(
-                F.sum("df").alias("rows"), F.count(F.lit(1)).alias("dist")
-            ).first()
-            sat = stats["rows"] / max(stats["dist"], 1)
-            if audit is not None:
-                from data_migration_tool_spark.audit.log import guard_event
+                if audit is not None:
+                    from data_migration_tool_spark.audit.log import guard_event
 
-                guard_event(
-                    audit,
-                    guard="containment_pairs",
-                    action="refuse",
-                    subject=f"{id_col}/{text_col} prefix-filtered index join",
-                    implied_cost=int(implied),
-                    cap=int(cap),
-                    detail=f"refused: implied candidates over guard ({why}); "
-                    f"mean posting length {sat:.1f} — saturated shingle "
-                    f"domains void the prefix filter's asymptotic bound",
-                )
-            sh.unpersist()
-            ranked.unpersist()
-            raise RuntimeError(
-                f"containment_pairs: prefix-filtered join would generate "
-                f"~{int(implied):,} candidates (> {why}; mean posting "
-                f"length {sat:.1f} — a saturated shingle domain makes the "
-                f"prefix filter a constant factor, not an asymptotic one). "
-                f"Pass auto_sample=True to degrade to a self-sized "
-                f"deterministic doc sample (cost shrinks by rate²), raise "
-                f"linear_budget, or pass max_candidates=None to opt into "
-                f"the quadratic join."
-            )
-    # same materialize-then-unpersist discipline as the adaptive twin
-    # (ADVICE r11): the verify result is pair-scale, the cached shingle
-    # frame is corpus-scale — don't park it until GC
-    out = _containment_verify(
-        sh, docsets, prefix, id_col, threshold
-    ).localCheckpoint(eager=True)
-    sh.unpersist()
-    ranked.unpersist()
-    return out
+                    guard_event(
+                        audit,
+                        guard="containment_pairs",
+                        action="degrade",
+                        subject=f"{id_col}/{text_col} prefix-filtered index join",
+                        implied_cost=int(implied),
+                        cap=int(cap),
+                        detail=f"degraded to deterministic md5 doc "
+                        f"sample rate {k}/256 (implied·rate² ≤ cap)",
+                    )
+        if not k:
+            return _containment_verify(
+                sh, docsets, prefix, id_col, threshold
+            ).localCheckpoint(eager=True)
+    # the slice recurses after this level's caches are released, so
+    # degrade levels never stack corpus-scale caches
+    sliced = df.filter(
+        F.substring(F.md5(F.col(id_col).cast("string")), 1, 2) < format(k, "02x")
+    )
+    return containment_pairs(
+        sliced,
+        id_col=id_col,
+        text_col=text_col,
+        shingle_n=shingle_n,
+        threshold=threshold,
+        max_candidates=max_candidates,
+        linear_budget=linear_budget,
+        auto_sample=True,
+        audit=audit,
+        _rate_limit=k,
+    )
 
 
 def containment_pairs_adaptive(
@@ -1123,55 +1098,49 @@ def containment_pairs_adaptive(
 
     fr = Fraction(str(threshold))
     num, den = fr.numerator, fr.denominator
-    sh, docsets, dfreq, prefix, ranked = _containment_frames(
-        df, id_col, text_col, shingle_n, num, den
-    )
-    g = prefix.agg(
-        F.sum("df").alias("v"), F.count_distinct("id_a").alias("n")
-    ).first()
-    n_docs = g["n"] or 0
-    avg_nsh = sh.count() // max(n_docs, 1)
-    implied = (g["v"] or 0) * avg_nsh
-    cap = linear_budget * max(n_docs, 1)
-    j = 0
-    while j <= 8 and implied > cap * (4**j):
-        j += 1
-    if j > 8:
-        if audit is not None:
-            from data_migration_tool_spark.audit.log import guard_event
+    with _containment_frames(df, id_col, text_col, shingle_n, num, den) as (
+        sh,
+        docsets,
+        _,
+        prefix,
+    ):
+        g = prefix.agg(
+            F.sum("df").alias("v"), F.count_distinct("id_a").alias("n")
+        ).first()
+        n_docs = g["n"] or 0
+        avg_nsh = sh.count() // max(n_docs, 1)
+        implied = (g["v"] or 0) * avg_nsh
+        cap = linear_budget * max(n_docs, 1)
+        j = 0
+        while j <= 8 and implied > cap * (4**j):
+            j += 1
+        if j > 8:
+            if audit is not None:
+                from data_migration_tool_spark.audit.log import guard_event
 
-            guard_event(
-                audit,
-                guard="containment_pairs_adaptive",
-                action="refuse",
-                subject=f"{id_col}/{text_col} prefix-filtered index join",
-                implied_cost=int(implied),
-                cap=int(cap),
-                detail="refused: even rate 1/256 leaves the estimated "
-                "candidate volume over the full-corpus budget",
+                guard_event(
+                    audit,
+                    guard="containment_pairs_adaptive",
+                    action="refuse",
+                    subject=f"{id_col}/{text_col} prefix-filtered index join",
+                    implied_cost=int(implied),
+                    cap=int(cap),
+                    detail="refused: even rate 1/256 leaves the estimated "
+                    "candidate volume over the full-corpus budget",
+                )
+            raise RuntimeError(
+                f"containment_pairs_adaptive: weighted verify volume "
+                f"(candidates × avg shingles/doc) {int(implied):,} exceeds "
+                f"cap·4^8 = {cap * 4**8:,} — even "
+                f"a 1/256 slice is estimated over budget; raise "
+                f"linear_budget or use the LSH dedup family instead."
             )
-        sh.unpersist()
-        ranked.unpersist()
-        raise RuntimeError(
-            f"containment_pairs_adaptive: weighted verify volume "
-            f"(candidates × avg shingles/doc) {int(implied):,} exceeds "
-            f"cap·4^8 = {cap * 4**8:,} — even "
-            f"a 1/256 slice is estimated over budget; raise "
-            f"linear_budget or use the LSH dedup family instead."
-        )
-    if j == 0:
-        # materialize the (pair-scale) result so the persisted shingle
-        # frame can be dropped NOW instead of parking in the cache until
-        # GC (ADVICE r11: each adaptive call leaked one persisted frame
-        # per pricing level) — the stream plans' localCheckpoint pattern
-        out = (
-            _containment_verify(sh, docsets, prefix, id_col, threshold)
-            .withColumn("sample_k", F.lit(256).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        sh.unpersist()
-        ranked.unpersist()
-        return out
+        if j == 0:
+            return (
+                _containment_verify(sh, docsets, prefix, id_col, threshold)
+                .withColumn("sample_k", F.lit(256).cast("int"))
+                .localCheckpoint(eager=True)
+            )
     k = 256 >> j
     if audit is not None:
         from data_migration_tool_spark.audit.log import guard_event
@@ -1186,54 +1155,50 @@ def containment_pairs_adaptive(
             detail=f"degraded to deterministic md5 doc slice rate "
             f"{k}/256 (ladder: implied ≤ cap·4^{j})",
         )
-    sh.unpersist()
-    ranked.unpersist()
     sliced = df.filter(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 2)
         < format(k, "02x")
     )
-    sh2, docsets2, dfreq2, prefix2, ranked2 = _containment_frames(
-        sliced, id_col, text_col, shingle_n, num, den
-    )
-    g2 = prefix2.agg(
-        F.sum("df").alias("v"), F.count_distinct("id_a").alias("n")
-    ).first()
-    n2 = g2["n"] or 0
-    implied2 = (g2["v"] or 0) * (sh2.count() // max(n2, 1))
-    if implied2 > cap:
-        # the quadratic shrink model was wrong for THIS corpus — refuse
-        # loudly against the ORIGINAL budget rather than run over it
-        if audit is not None:
-            from data_migration_tool_spark.audit.log import guard_event
+    with _containment_frames(sliced, id_col, text_col, shingle_n, num, den) as (
+        sh,
+        docsets,
+        _,
+        prefix,
+    ):
+        g = prefix.agg(
+            F.sum("df").alias("v"), F.count_distinct("id_a").alias("n")
+        ).first()
+        implied = (g["v"] or 0) * (sh.count() // max(g["n"] or 0, 1))
+        if implied > cap:
+            # the quadratic shrink model was wrong for THIS corpus —
+            # refuse loudly against the ORIGINAL budget rather than run
+            # over it
+            if audit is not None:
+                from data_migration_tool_spark.audit.log import guard_event
 
-            guard_event(
-                audit,
-                guard="containment_pairs_adaptive",
-                action="refuse",
-                subject=f"{id_col}/{text_col} sliced index join "
-                f"(rate {k}/256)",
-                implied_cost=int(implied2),
-                cap=int(cap),
-                detail="refused: sliced candidate volume still over the "
-                "full-corpus budget — sub-quadratic shrink assumption "
-                "does not hold on this corpus",
+                guard_event(
+                    audit,
+                    guard="containment_pairs_adaptive",
+                    action="refuse",
+                    subject=f"{id_col}/{text_col} sliced index join "
+                    f"(rate {k}/256)",
+                    implied_cost=int(implied),
+                    cap=int(cap),
+                    detail="refused: sliced candidate volume still over the "
+                    "full-corpus budget — sub-quadratic shrink assumption "
+                    "does not hold on this corpus",
+                )
+            raise RuntimeError(
+                f"containment_pairs_adaptive: the rate-{k}/256 slice still "
+                f"implies {int(implied):,} candidates (> full-corpus cap "
+                f"{cap:,}); the r²-shrink model does not hold here — raise "
+                f"linear_budget or use the LSH dedup family instead."
             )
-        sh2.unpersist()
-        ranked2.unpersist()
-        raise RuntimeError(
-            f"containment_pairs_adaptive: the rate-{k}/256 slice still "
-            f"implies {int(implied2):,} candidates (> full-corpus cap "
-            f"{cap:,}); the r²-shrink model does not hold here — raise "
-            f"linear_budget or use the LSH dedup family instead."
+        return (
+            _containment_verify(sh, docsets, prefix, id_col, threshold)
+            .withColumn("sample_k", F.lit(k).cast("int"))
+            .localCheckpoint(eager=True)
         )
-    out = (
-        _containment_verify(sh2, docsets2, prefix2, id_col, threshold)
-        .withColumn("sample_k", F.lit(k).cast("int"))
-        .localCheckpoint(eager=True)
-    )
-    sh2.unpersist()
-    ranked2.unpersist()
-    return out
 
 
 def cross_corpus_overlap(
@@ -1369,41 +1334,6 @@ def bloom_decontaminate(
     )
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, band-blocked.
-
-    With ``bands`` bit-bands and ``max_hamming < bands``, blocking is
-    EXACT by pigeonhole: at most ``max_hamming`` differing bits can
-    touch at most ``max_hamming`` bands, so every qualifying pair
-    shares at least one intact band and is generated as a candidate —
-    no recall loss, unlike probabilistic MinHash banding. Output
-    (id_a, id_b, hamming), id_a < id_b.
-
-    Scale shape: signatures are one map-combined shuffle (the simhash
-    agg); candidates come from a self-join on (band_idx, band_value) —
-    bucket sizes are bounded by 2^(bits/bands) spreading, and the
-    verify step is a constant-time bit_count on the joined signatures,
-    never a text compare. Hot buckets (boilerplate-heavy corpora) are
-    AQE-skew-split; raise ``bits`` to sparsify buckets at corpus scale.
-    """
-    sig = simhash(df, id_col=id_col, text_col=text_col, bits=bits)
-    return hamming_near_dup_pairs(
-        sig,
-        id_col=id_col,
-        sig_col="simhash",
-        bits=bits,
-        bands=bands,
-        max_hamming=max_hamming,
-    )
-
-
 def hamming_near_dup_pairs(
     sig: DataFrame,
     id_col: str = "doc_id",
@@ -1413,9 +1343,10 @@ def hamming_near_dup_pairs(
     max_hamming: int = 3,
 ) -> DataFrame:
     """Band-blocked Hamming near-dup pairs over ANY integer signature
-    column — the blocking engine shared by :func:`simhash_near_dups`
-    (32-bit text SimHash) and the image perceptual-hash lane (64-bit
-    dHash, ``operators/multimodal.dhash_images``). With ``bands``
+    column — the blocking engine shared by the text SimHash lane
+    (32-bit, ``textq.doc_simhash_near_dups``) and the image
+    perceptual-hash lane (64-bit dHash,
+    ``operators/multimodal.dhash_images``). With ``bands``
     bit-bands and ``max_hamming < bands``, blocking is EXACT by
     pigeonhole: at most ``max_hamming`` differing bits touch at most
     ``max_hamming`` bands, so every qualifying pair shares one intact
@@ -1623,43 +1554,41 @@ def minhash_lsh_incremental(
     shuffled. Union the batch's bands into the stored index afterwards
     and the state is ready for the next batch.
     """
-    new_sh = shingle_set(new_docs, id_col, text_col, shingle_n).persist()
-    new_bands = minhash_signatures(new_sh, id_col, num_hashes, band_rows).persist()
-
-    nb = new_bands.select(F.col(id_col).alias("nid"), "band", "band_key")
-    ib = index_bands.select(F.col(id_col).alias("iid"), "band", "band_key")
-    new_vs_old = nb.join(ib, ["band", "band_key"]).select(
-        F.least("nid", "iid").alias("id_a"),
-        F.greatest("nid", "iid").alias("id_b"),
-    )
-    new_vs_new = lsh_candidate_pairs(new_bands, id_col)
-    cand = (
-        new_vs_old.unionByName(new_vs_new)
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-        .persist()
-    )
-    # Verify shingles come from the union corpus, pruned to candidate-
-    # touched ids BEFORE the shingle explode (r13, guide §2.3 shuffle
-    # fewer bytes): jaccard_verify's own semi-join prune sits ABOVE the
-    # explode — Catalyst cannot push a join below a Generate — so
-    # without this the whole standing corpus was re-tokenized and
-    # re-hashed for the verify stage (5 corpus-scale scans in the
-    # before-plan). Pruning at document grain makes the verify-side
-    # shingle work candidate-scale, which is the incremental contract's
-    # whole point. Semantically identical: jaccard_verify only ever
-    # reads candidate-touched ids.
-    touched = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    all_sh = shingle_set(
-        corpus_docs.join(F.broadcast(touched), id_col, "left_semi"),
-        id_col,
-        text_col,
-        shingle_n,
-    ).unionByName(new_sh)
-    return jaccard_verify(cand, all_sh, id_col).filter(
-        F.col("jaccard") >= threshold
-    )
+    with cached(shingle_set(new_docs, id_col, text_col, shingle_n)) as new_sh, cached(
+        minhash_signatures(new_sh, id_col, num_hashes, band_rows)
+    ) as new_bands:
+        nb = new_bands.select(F.col(id_col).alias("nid"), "band", "band_key")
+        ib = index_bands.select(F.col(id_col).alias("iid"), "band", "band_key")
+        new_vs_old = nb.join(ib, ["band", "band_key"]).select(
+            F.least("nid", "iid").alias("id_a"),
+            F.greatest("nid", "iid").alias("id_b"),
+        )
+        new_vs_new = lsh_candidate_pairs(new_bands, id_col)
+        with cached(
+            new_vs_old.unionByName(new_vs_new)
+            .filter(F.col("id_a") != F.col("id_b"))
+            .distinct()
+        ) as cand:
+            # Verify shingles come from the union corpus, pruned to
+            # candidate-touched ids BEFORE the shingle explode (guide
+            # §2.3 shuffle fewer bytes): jaccard_verify's own semi-join
+            # prune sits ABOVE the explode — Catalyst cannot push a join
+            # below a Generate — so without this the whole standing
+            # corpus was re-tokenized and re-hashed for the verify stage
+            # (5 corpus-scale scans in the before-plan). Pruning at
+            # document grain makes the verify-side shingle work
+            # candidate-scale, which is the incremental contract's whole
+            # point. Semantically identical: jaccard_verify only ever
+            # reads candidate-touched ids.
+            touched = (
+                cand.select(F.col("id_a").alias(id_col))
+                .unionByName(cand.select(F.col("id_b").alias(id_col)))
+                .distinct()
+            )
+            all_sh = shingle_set(
+                corpus_docs.join(F.broadcast(touched), id_col, "left_semi"),
+                id_col,
+                text_col,
+                shingle_n,
+            ).unionByName(new_sh)
+            return jaccard_verify(cand, all_sh, id_col, threshold)

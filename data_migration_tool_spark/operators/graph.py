@@ -24,8 +24,29 @@ query runs so PageRank sits in the exact-hash oracle lane.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_migration_tool_spark.partitioning import cached, par_jobs, scoped_loop
+
+
+@contextmanager
+def _edge_caches(edges: DataFrame, src_col: str, dst_col: str):
+    """Scope yielding the PageRank loop's cached inputs (nodes, out_deg,
+    ef): the node set of the distinct (src, dst) edges, each source's
+    out-degree, and the edges with that degree folded on. ``ef.count()``
+    populates the edge, degree and ``ef`` caches on entry."""
+    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    with cached(e.distinct()) as e, cached(
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct(),
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")),
+    ) as (nodes, out_deg), cached(e.join(out_deg, "src")) as ef:
+        ef.count()
+        yield nodes, out_deg, ef
 
 
 def pagerank(
@@ -49,82 +70,66 @@ def pagerank(
     the contribution aggregation shuffles. Leave False when nodes are
     fact-scale and let AQE decide.
     """
-    # materialize the (possibly expensive) edge derivation once — every
-    # iteration re-reads it, and without the persist an edge list built
-    # from a self-join would be recomputed per round
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")).persist()
-    # fold the STATIC out-degree onto the edge table once: every round's
-    # contribution plan drops from two joins to one probe of the rank
-    # table (measured 7.4 s -> 4.5 s over 6 rounds at sf0.1 on the exact
-    # twin). One extra long per edge in the cache; out_deg stays
-    # persisted separately for the dangling anti-join.
-    ef = e.join(out_deg, "src").persist()
-    ef.count()
-    e.unpersist()
-    # dangling short-circuit: same argument as ``pagerank_exact`` —
-    # with zero dangling nodes m ≡ 0.0 and IEEE x + 0.0 = x for the
-    # positive ranks here, so dropping the term is bit-identical
-    n_dangling = nodes.join(
-        out_deg, nodes.node == out_deg.src, "left_anti"
-    ).count()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
+    # cache the (possibly expensive) edge derivation once — every
+    # iteration re-reads it, and uncached an edge list built from a
+    # self-join would be recomputed per round. ``ef`` folds the STATIC
+    # out-degree onto the edge table once: every round's contribution
+    # plan drops from two joins to one probe of the rank table
+    # (measured 7.4 s -> 4.5 s over 6 rounds at sf0.1 on the exact
+    # twin); out_deg stays cached separately for the dangling
+    # anti-join. Every round's checkpoint is eager, so the ranks are
+    # materialized before the caches release.
+    with _edge_caches(edges, src_col, dst_col) as (nodes, out_deg, ef):
+        n = nodes.count()
+        # dangling short-circuit: same argument as ``pagerank_exact`` —
+        # with zero dangling nodes m ≡ 0.0 and IEEE x + 0.0 = x for the
+        # positive ranks here, so dropping the term is bit-identical
+        n_dangling = nodes.join(
+            out_deg, nodes.node == out_deg.src, "left_anti"
+        ).count()
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
 
-    for _ in range(iters):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        contribs = (
-            ef.join(rank_side, ef.src == rank_side.node)
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = nodes.join(
-            contribs, nodes.node == contribs.dst, "left_outer"
-        )
-        if n_dangling:
-            # dangling mass (nodes without out-edges) as a lazy 1-row
-            # broadcast — folded into the round's single job instead
-            # of a separate driver action per iteration
-            dangling = ranks.join(
-                out_deg, ranks.node == out_deg.src, "left_anti"
-            ).agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-            ranks = (
-                new_ranks.crossJoin(F.broadcast(dangling))
-                .select(
+        for _ in range(iters):
+            rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+            contribs = (
+                ef.join(rank_side, ef.src == rank_side.node)
+                .select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            new_ranks = nodes.join(
+                contribs, nodes.node == contribs.dst, "left_outer"
+            )
+            if n_dangling:
+                # dangling mass (nodes without out-edges) as a lazy 1-row
+                # broadcast — folded into the round's single job instead
+                # of a separate driver action per iteration
+                dangling = ranks.join(
+                    out_deg, ranks.node == out_deg.src, "left_anti"
+                ).agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
+                ranks = (
+                    new_ranks.crossJoin(F.broadcast(dangling))
+                    .select(
+                        "node",
+                        (
+                            F.lit((1.0 - damping) / n)
+                            + F.lit(damping) * F.col("m") / F.lit(float(n))
+                            + F.lit(damping)
+                            * F.coalesce(F.col("contrib"), F.lit(0.0))
+                        ).alias("rank"),
+                    )
+                    .localCheckpoint()
+                )
+            else:
+                ranks = new_ranks.select(
                     "node",
                     (
                         F.lit((1.0 - damping) / n)
-                        + F.lit(damping) * F.col("m") / F.lit(float(n))
                         + F.lit(damping)
                         * F.coalesce(F.col("contrib"), F.lit(0.0))
                     ).alias("rank"),
-                )
-                .localCheckpoint()
-            )
-        else:
-            ranks = new_ranks.select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-            ).localCheckpoint()
-    ef.unpersist()
-    out_deg.unpersist()
-    nodes.unpersist()
-    return ranks
+                ).localCheckpoint()
+        return ranks
 
 
 def pagerank_exact(
@@ -162,155 +167,125 @@ def pagerank_exact(
     narrows, so only the small loop tables are affected. The fixed-point
     arithmetic is partition-count-independent, so results are
     bit-identical either way (the oracle proves it)."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")).persist()
-    # fold the static out-degree onto the edge table once (see
+    # The static out-degree is folded onto the edge table once (see
     # ``pagerank``): the loop's per-round contribution plan is one
     # broadcast probe over the cached edges instead of two joins —
-    # measured 7.4 s -> 4.5 s over 6 rounds at sf0.1. ef.count()
-    # populates BOTH caches (out_deg is an input), still at session
-    # parallelism — the former separate out_deg.count() was a
-    # redundant driver action (r13).
-    ef = e.join(out_deg, "src").persist()
-    ef.count()
-    e.unpersist()
-    # In-edge coverage short-circuit (r13 opt, guide §2.4 — remove a
-    # per-round shuffle): when EVERY node has an in-edge (symmetric
-    # graphs always qualify: any node appears as both src and dst),
-    # the per-destination contribution aggregate already emits one row
-    # per node, so the nodes-frame left-outer join that backfills
-    # contribution-less nodes is dead weight — its only effect is
-    # coalesce(NULL, 0) on rows that cannot exist. One node-grain
-    # distinct count over the cached edges decides it up front;
-    # results are bit-identical (the oracle proves it).
-    # Dangling-node short-circuit (don't compute what you can prove is
-    # zero): when EVERY node has an out-edge (symmetric graphs —
-    # co-occurrence, similarity — always qualify), the dangling mass m
-    # is identically 0 in every round, so the per-round anti-join +
-    # aggregate + 1-row broadcast subtree is dead weight. One
-    # node-grain anti-join count over the two cached frames decides it
-    # up front; the m ≡ 0 arithmetic is exactly the recurrence's
-    # (0·85) div (100·n) = 0 term, so results are bit-identical
-    # (oracle-proved).
-    # Both probes read only the now-populated caches and are
-    # independent — submitted concurrently so the second back-fills
-    # the first's task tail.
-    from data_migration_tool_spark.partitioning import par_jobs, scoped_loop
+    # measured 7.4 s -> 4.5 s over 6 rounds at sf0.1.
+    with _edge_caches(edges, src_col, dst_col) as (nodes, out_deg, ef):
+        n = nodes.count()
+        # In-edge coverage short-circuit (guide §2.4 — remove a
+        # per-round shuffle): when EVERY node has an in-edge (symmetric
+        # graphs always qualify: any node appears as both src and dst),
+        # the per-destination contribution aggregate already emits one row
+        # per node, so the nodes-frame left-outer join that backfills
+        # contribution-less nodes is dead weight — its only effect is
+        # coalesce(NULL, 0) on rows that cannot exist. One node-grain
+        # distinct count over the cached edges decides it up front;
+        # results are bit-identical (the oracle proves it).
+        # Dangling-node short-circuit (don't compute what you can prove is
+        # zero): when EVERY node has an out-edge (symmetric graphs —
+        # co-occurrence, similarity — always qualify), the dangling mass m
+        # is identically 0 in every round, so the per-round anti-join +
+        # aggregate + 1-row broadcast subtree is dead weight. One
+        # node-grain anti-join count over the two cached frames decides it
+        # up front; the m ≡ 0 arithmetic is exactly the recurrence's
+        # (0·85) div (100·n) = 0 term, so results are bit-identical
+        # (oracle-proved).
+        # Both probes read only the now-populated caches and are
+        # independent — submitted concurrently so the second back-fills
+        # the first's task tail.
+        n_covered, n_dangling = par_jobs(
+            lambda: ef.select("dst").distinct().count(),
+            lambda: nodes.join(
+                out_deg, nodes.node == out_deg.src, "left_anti"
+            ).count(),
+        )
+        full_coverage = n_covered == n
+        base = (scale * 15) // (100 * n)
 
-    n_covered, n_dangling = par_jobs(
-        lambda: ef.select("dst").distinct().count(),
-        lambda: nodes.join(
-            out_deg, nodes.node == out_deg.src, "left_anti"
-        ).count(),
-    )
-    full_coverage = n_covered == n
-    base = (scale * 15) // (100 * n)
+        # When the caller pins the loop's shuffle grain it has declared the
+        # round plans fully known — ``scoped_loop`` also freezes them
+        # (measured at sf0.1: 36 jobs / 4.3-7.0 s with AQE vs 16 jobs /
+        # 3.5-3.9 s static, bit-identical ranks). The eager final
+        # checkpoint makes the whole chain EXECUTE inside this scope; a
+        # lazy chain would materialize at the caller's action, outside it.
+        # The rank-init checkpoint is LAZY: it materializes inside the
+        # final eager chain job (in-scope, caches alive) — the former
+        # eager form paid one extra driver-scheduled job for a node-grain
+        # projection
+        ranks = nodes.select(
+            "node", F.lit(scale // n).cast("long").alias("rank")
+        ).localCheckpoint(eager=False)
 
-    # When the caller pins the loop's shuffle grain it has declared the
-    # round plans fully known — ``scoped_loop`` also freezes them
-    # (measured at sf0.1: 36 jobs / 4.3-7.0 s with AQE vs 16 jobs /
-    # 3.5-3.9 s static, bit-identical ranks). The eager final
-    # checkpoint makes the whole chain EXECUTE inside this scope; a
-    # lazy chain would materialize at the caller's action, outside it.
-    # The rank-init checkpoint is LAZY: it materializes inside the
-    # final eager chain job (in-scope, caches alive) — the former
-    # eager form paid one extra driver-scheduled job for a node-grain
-    # projection
-    ranks = nodes.select(
-        "node", F.lit(scale // n).cast("long").alias("rank")
-    ).localCheckpoint(eager=False)
-
-    with scoped_loop(edges.sparkSession, loop_shuffle_partitions):
-        for it in range(iters):
-            rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-            contribs = (
-                ef.join(rank_side, ef.src == rank_side.node)
-                .select(
-                    "dst",
-                    F.expr("(rank * 85) div (100 * out_deg)").alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").cast("long").alias("contrib"))
-            )
-            if full_coverage:
-                # contribs has exactly one row per node — rename in
-                # place instead of joining the nodes frame (the
-                # coalesce(contrib, 0) backfill can never fire)
-                new_ranks = contribs.select(
-                    F.col("dst").alias("node"), "contrib"
-                )
-            else:
-                new_ranks = nodes.join(
-                    contribs, nodes.node == contribs.dst, "left_outer"
-                ).select("node", "contrib")
-            if n_dangling:
-                dangling = ranks.join(
-                    out_deg, ranks.node == out_deg.src, "left_anti"
-                ).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0))
-                    .cast("long")
-                    .alias("m")
-                )
-                ranks = new_ranks.crossJoin(F.broadcast(dangling)).select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.expr(f"(m * 85) div (100 * {n})")
-                        + F.coalesce(F.col("contrib"), F.lit(0))
+        with scoped_loop(edges.sparkSession, loop_shuffle_partitions):
+            for it in range(iters):
+                rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+                contribs = (
+                    ef.join(rank_side, ef.src == rank_side.node)
+                    .select(
+                        "dst",
+                        F.expr("(rank * 85) div (100 * out_deg)").alias("c"),
                     )
-                    .cast("long")
-                    .alias("rank"),
+                    .groupBy("dst")
+                    .agg(F.sum("c").cast("long").alias("contrib"))
                 )
-            else:
-                ranks = new_ranks.select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.coalesce(F.col("contrib"), F.lit(0))
+                if full_coverage:
+                    # contribs has exactly one row per node — rename in
+                    # place instead of joining the nodes frame (the
+                    # coalesce(contrib, 0) backfill can never fire)
+                    new_ranks = contribs.select(
+                        F.col("dst").alias("node"), "contrib"
                     )
-                    .cast("long")
-                    .alias("rank"),
-                )
-            # checkpoint cadence: the plan DOUBLES per un-checkpointed
-            # round (ranks is referenced twice: contrib join +
-            # dangling-mass aggregate), so larger cadences trade a few
-            # cheap node-grain jobs for exponential plan growth and
-            # re-analysis cost. Measured at sf0.1 (part_pagerank):
-            # cadence 1 = 7.2 s, 2 = 11.9 s, 3 = 17.0 s — keep the
-            # default 1 unless a profile says otherwise. Values are
-            # identical either way — the fixed-point arithmetic
-            # doesn't see the plan. Intermediate checkpoints are LAZY
-            # (r13, the cluster-loop/BPE-train trick, guide §5):
-            # lineage still truncates at every checkpoint node and
-            # materialization happens inside the consuming job. The
-            # FINAL iteration's checkpoint is EAGER (r14, ADVICE r13):
-            # no action runs inside this loop (F.broadcast is a hint,
-            # not a job), so an all-lazy chain defers EVERY round's
-            # materialization past the ef/out_deg/nodes unpersists
-            # below — whether the caller's first action then still
-            # hits the cached edge blocks depends on a RACE against
-            # the asynchronous unpersist (measured at sf0.1 the race
-            # happened to win: walls flat, 35 vs 36 jobs — but that is
-            # unspecified behavior, not a contract). One eager job
-            # here pins the documented semantics: the whole round
-            # chain materializes while the caches are provably alive.
-            if (it + 1) % checkpoint_every == 0 or it == iters - 1:
-                ranks = ranks.localCheckpoint(eager=(it == iters - 1))
-    ef.unpersist()
-    out_deg.unpersist()
-    nodes.unpersist()
-    return ranks
+                else:
+                    new_ranks = nodes.join(
+                        contribs, nodes.node == contribs.dst, "left_outer"
+                    ).select("node", "contrib")
+                if n_dangling:
+                    dangling = ranks.join(
+                        out_deg, ranks.node == out_deg.src, "left_anti"
+                    ).agg(
+                        F.coalesce(F.sum("rank"), F.lit(0))
+                        .cast("long")
+                        .alias("m")
+                    )
+                    ranks = new_ranks.crossJoin(F.broadcast(dangling)).select(
+                        "node",
+                        (
+                            F.lit(base)
+                            + F.expr(f"(m * 85) div (100 * {n})")
+                            + F.coalesce(F.col("contrib"), F.lit(0))
+                        )
+                        .cast("long")
+                        .alias("rank"),
+                    )
+                else:
+                    ranks = new_ranks.select(
+                        "node",
+                        (
+                            F.lit(base)
+                            + F.coalesce(F.col("contrib"), F.lit(0))
+                        )
+                        .cast("long")
+                        .alias("rank"),
+                    )
+                # checkpoint cadence: the plan DOUBLES per un-checkpointed
+                # round (ranks is referenced twice: contrib join +
+                # dangling-mass aggregate), so larger cadences trade a few
+                # cheap node-grain jobs for exponential plan growth and
+                # re-analysis cost. Measured at sf0.1 (part_pagerank):
+                # cadence 1 = 7.2 s, 2 = 11.9 s, 3 = 17.0 s — keep the
+                # default 1 unless a profile says otherwise. Values are
+                # identical either way — the fixed-point arithmetic
+                # doesn't see the plan. Intermediate checkpoints are LAZY
+                # (the cluster-loop/BPE-train trick, guide §5): lineage
+                # still truncates at every checkpoint node and
+                # materialization happens inside the consuming job. The
+                # FINAL iteration's checkpoint is EAGER: no action runs
+                # inside this loop (F.broadcast is a hint, not a job), so
+                # the whole round chain materializes inside the cache scope.
+                if (it + 1) % checkpoint_every == 0 or it == iters - 1:
+                    ranks = ranks.localCheckpoint(eager=(it == iters - 1))
+        return ranks
 
 
 # Effective ephemeral bytes per wedge row across the wedge exchange +
@@ -421,10 +396,10 @@ def triangle_count(
     ``dmt_guard_events`` row when ``audit`` is passed — if that
     exceeds the cap. The bound is never used to refuse, only to skip.
     An ``int`` gives a static byte cap; ``None`` disables the guard.
-    The exact aggregate reuses the persisted oriented frame, so
+    The exact aggregate reuses the cached oriented frame, so
     pricing costs at most one O(E) pass, never a shuffle of wedges.
 
-    **API note (r12 → ):** the default changed from unguarded to
+    **API note:** the default changed from unguarded to
     ``max_spill_bytes="auto"`` — on a nearly-full scratch volume a
     small job that previously ran may now refuse with a RuntimeError;
     pass ``max_spill_bytes=None`` to restore the old behavior, or an
@@ -439,17 +414,15 @@ def triangle_count(
         )
         .filter(F.col("u") < F.col("v"))
         .distinct()
-        .persist()
     )
     # node-grain and read three times (du, dv, the guard's bound
-    # aggregate, the final n_nodes count) — persisting makes the one
+    # aggregate, the final n_nodes count) — caching makes the one
     # edge-grain degree shuffle happen once
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .persist()
     )
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
@@ -466,129 +439,120 @@ def triangle_count(
             .alias("e")
         )
         .select("e.a", "e.b")
-        .persist()
     )
-    if max_spill_bytes is not None:
-        if max_spill_bytes == "auto":
-            free = _local_scratch_free_bytes(edges.sparkSession)
-            cap = int(free * disk_headroom)
-            why = (
-                f"{disk_headroom:.0%} of {free:,} B free local shuffle "
-                f"scratch"
-            )
-        else:
-            cap = int(max_spill_bytes)
-            why = f"max_spill_bytes={cap:,}"
-        # Provable short-circuit (ADVICE r12): under degree-ordered
-        # orientation, dout(x) ≤ deg(x) trivially, and dout(x) ≤
-        # #{v: (deg(v), v) ≥ (deg(x), x)} ≤ 2E/deg(x) (the handshake
-        # bound — at most 2E/d nodes can have degree ≥ d). So
-        # Σ_x C(min(deg(x), 2E div deg(x)), 2) upper-bounds the wedge
-        # count, computable from the PERSISTED node-grain degree frame
-        # the orientation needs anyway — one tiny aggregate over
-        # |nodes| rows, vs the exact pricing's edge-grain groupBy. If
-        # even this bound fits under the cap, the exact count can only
-        # be smaller and the pricing pass is skipped (the common path:
-        # for a graph with average degree d̄ the bound is ~Σ C(deg,2),
-        # within a small factor of exact, where the old coarse
-        # E·√(2E)/2 overshot by √(2E)/d̄). The bound is NEVER used to
-        # refuse — only to skip. Integer arithmetic throughout (div,
-        # not /): exact past 2^53.
-        n_edges_early = und.count()  # materializes the reused cache
-        bound_rows = int(
-            deg.agg(
-                F.expr(
-                    f"sum(least(deg, {2 * n_edges_early} div deg) "
-                    f"* (least(deg, {2 * n_edges_early} div deg) - 1) "
-                    f"div 2)"
-                ).alias("w")
-            ).first()["w"]
-            or 0
-        )
-        if bound_rows * _WEDGE_ROW_BYTES <= cap:
-            wedge_rows = None  # provably under cap; exact count unneeded
-            implied_bytes = 0
-        else:
-            wedge_rows = _exact_wedge_rows(oriented)
-            implied_bytes = wedge_rows * _WEDGE_ROW_BYTES
-        if implied_bytes > cap:
-            if audit is not None:
-                from data_migration_tool_spark.audit.log import guard_event
-
-                guard_event(
-                    audit,
-                    guard="triangle_count",
-                    action="refuse",
-                    subject=f"{src_col}/{dst_col} wedge exchange",
-                    implied_cost=int(implied_bytes),
-                    cap=int(cap),
-                    detail=f"refused: {wedge_rows:,} oriented wedges × "
-                    f"{_WEDGE_ROW_BYTES} B/row exceeds {why} — the wedge "
-                    f"shuffle would die ENOSPC mid-stage instead",
+    # the 1-row census is materialized inside the scope: the pricing
+    # pass populates the edge-scale caches unconditionally
+    with cached(und, deg, oriented):
+        if max_spill_bytes is not None:
+            if max_spill_bytes == "auto":
+                free = _local_scratch_free_bytes(edges.sparkSession)
+                cap = int(free * disk_headroom)
+                why = (
+                    f"{disk_headroom:.0%} of {free:,} B free local shuffle "
+                    f"scratch"
                 )
-            oriented.unpersist()
-            und.unpersist()
-            deg.unpersist()
-            raise RuntimeError(
-                f"triangle_count: the wedge exchange would spill "
-                f"~{implied_bytes:,} B ({wedge_rows:,} wedges × "
-                f"{_WEDGE_ROW_BYTES} B/row) > {why}. Free local scratch, "
-                f"run where per-executor scratch is larger, pass a higher "
-                f"max_spill_bytes, or max_spill_bytes=None to opt into "
-                f"the unpriced shuffle."
+            else:
+                cap = int(max_spill_bytes)
+                why = f"max_spill_bytes={cap:,}"
+            # Provable short-circuit: under degree-ordered
+            # orientation, dout(x) ≤ deg(x) trivially, and dout(x) ≤
+            # #{v: (deg(v), v) ≥ (deg(x), x)} ≤ 2E/deg(x) (the handshake
+            # bound — at most 2E/d nodes can have degree ≥ d). So
+            # Σ_x C(min(deg(x), 2E div deg(x)), 2) upper-bounds the wedge
+            # count, computable from the CACHED node-grain degree frame
+            # the orientation needs anyway — one tiny aggregate over
+            # |nodes| rows, vs the exact pricing's edge-grain groupBy. If
+            # even this bound fits under the cap, the exact count can only
+            # be smaller and the pricing pass is skipped (the common path:
+            # for a graph with average degree d̄ the bound is ~Σ C(deg,2),
+            # within a small factor of exact, where the old coarse
+            # E·√(2E)/2 overshot by √(2E)/d̄). The bound is NEVER used to
+            # refuse — only to skip. Integer arithmetic throughout (div,
+            # not /): exact past 2^53.
+            n_edges_early = und.count()  # materializes the reused cache
+            bound_rows = int(
+                deg.agg(
+                    F.expr(
+                        f"sum(least(deg, {2 * n_edges_early} div deg) "
+                        f"* (least(deg, {2 * n_edges_early} div deg) - 1) "
+                        f"div 2)"
+                    ).alias("w")
+                ).first()["w"]
+                or 0
             )
-    # Wedge generation stays the e1 ⋈ e2 self-join (r14: two
-    # alternatives were MEASURED and rejected — (a) groupBy(a) +
-    # collect_set + in-row posexplode/slice pair expansion (the r13
-    # edge-derivation trick) lost to the self-join here because both
-    # self-join sides are the SAME projection of the persisted
-    # oriented frame, so Spark plans a ReusedExchange and the join is
-    # pure codegen over one shuffle, while the adjacency form pays an
-    # ObjectHashAggregate + array materialization + double Generate
-    # (interleaved mins 4.5-4.9 s self-join vs 5.1-6.2 s adjacency at
-    # sf0.1); (b) broadcasting the closing edge list (~900k rows at
-    # sf0.1) serialized a 30-60 MB relation build onto the driver per
-    # run — 6.2-8.4 s vs 5.1-6.2 s shuffled. Keep the planner's
-    # shuffle join; the disk-pricing guard above prices exactly this
-    # plan.
-    e1 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y1"))
-    e2 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y2"))
-    wedges = e1.join(e2, "x").filter(F.col("y1") < F.col("y2"))
-    # close the wedge with an edge between y1,y2 — und IS that edge set
-    # in (lo, hi) form already (r14: the former least/greatest
-    # projection over oriented recomputed what the persisted und holds)
-    closing = und.select(
-        F.col("u").alias("y1"), F.col("v").alias("y2"), F.lit(1).alias("hit")
-    )
-    n_edges_known = (
-        n_edges_early if max_spill_bytes is not None else None
-    )
-    tri = wedges.join(closing, ["y1", "y2"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
-    if n_edges_known is not None:
-        # census scalars as driver literals (both counts already ran
-        # for the guard) — the final job is the wedge count alone,
-        # not three crossJoined aggregates
-        n_nodes_known = deg.count()
-        out = tri.select(
-            F.lit(n_nodes_known).cast("long").alias("n_nodes"),
-            F.lit(n_edges_known).cast("long").alias("n_edges"),
-            "n_triangles",
+            if bound_rows * _WEDGE_ROW_BYTES <= cap:
+                wedge_rows = None  # provably under cap; exact count unneeded
+                implied_bytes = 0
+            else:
+                wedge_rows = _exact_wedge_rows(oriented)
+                implied_bytes = wedge_rows * _WEDGE_ROW_BYTES
+            if implied_bytes > cap:
+                if audit is not None:
+                    from data_migration_tool_spark.audit.log import guard_event
+
+                    guard_event(
+                        audit,
+                        guard="triangle_count",
+                        action="refuse",
+                        subject=f"{src_col}/{dst_col} wedge exchange",
+                        implied_cost=int(implied_bytes),
+                        cap=int(cap),
+                        detail=f"refused: {wedge_rows:,} oriented wedges × "
+                        f"{_WEDGE_ROW_BYTES} B/row exceeds {why} — the wedge "
+                        f"shuffle would die ENOSPC mid-stage instead",
+                    )
+                raise RuntimeError(
+                    f"triangle_count: the wedge exchange would spill "
+                    f"~{implied_bytes:,} B ({wedge_rows:,} wedges × "
+                    f"{_WEDGE_ROW_BYTES} B/row) > {why}. Free local scratch, "
+                    f"run where per-executor scratch is larger, pass a higher "
+                    f"max_spill_bytes, or max_spill_bytes=None to opt into "
+                    f"the unpriced shuffle."
+                )
+        # Wedge generation stays the e1 ⋈ e2 self-join (two alternatives
+        # were MEASURED and rejected — (a) groupBy(a) + collect_set +
+        # in-row posexplode/slice pair expansion (the edge-derivation
+        # trick) lost to the self-join here because both self-join sides
+        # are the SAME projection of the cached
+        # oriented frame, so Spark plans a ReusedExchange and the join is
+        # pure codegen over one shuffle, while the adjacency form pays an
+        # ObjectHashAggregate + array materialization + double Generate
+        # (interleaved mins 4.5-4.9 s self-join vs 5.1-6.2 s adjacency at
+        # sf0.1); (b) broadcasting the closing edge list (~900k rows at
+        # sf0.1) serialized a 30-60 MB relation build onto the driver per
+        # run — 6.2-8.4 s vs 5.1-6.2 s shuffled. Keep the planner's
+        # shuffle join; the disk-pricing guard above prices exactly this
+        # plan.
+        e1 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y1"))
+        e2 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y2"))
+        wedges = e1.join(e2, "x").filter(F.col("y1") < F.col("y2"))
+        # close the wedge with an edge between y1,y2 — und IS that edge set
+        # in (lo, hi) form already (the former least/greatest projection
+        # over oriented recomputed what the cached und holds)
+        closing = und.select(
+            F.col("u").alias("y1"), F.col("v").alias("y2"), F.lit(1).alias("hit")
         )
-    else:
-        stats = und.agg(
-            F.count(F.lit(1)).alias("n_edges"),
-        ).crossJoin(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
-        out = stats.crossJoin(tri).select(
-            "n_nodes", "n_edges", "n_triangles"
+        n_edges_known = (
+            n_edges_early if max_spill_bytes is not None else None
         )
-    # materialize the 1-row census and release the two edge-scale
-    # cached frames NOW — the pricing pass above populates both caches
-    # unconditionally, and a lazy return would park them until GC
-    # (the ADVICE-r11 leak class the containment verify also fixed)
-    out = out.localCheckpoint(eager=True)
-    oriented.unpersist()
-    und.unpersist()
-    deg.unpersist()
-    return out
+        tri = wedges.join(closing, ["y1", "y2"]).agg(
+            F.count(F.lit(1)).alias("n_triangles")
+        )
+        if n_edges_known is not None:
+            # census scalars as driver literals (both counts already ran
+            # for the guard) — the final job is the wedge count alone,
+            # not three crossJoined aggregates
+            n_nodes_known = deg.count()
+            out = tri.select(
+                F.lit(n_nodes_known).cast("long").alias("n_nodes"),
+                F.lit(n_edges_known).cast("long").alias("n_edges"),
+                "n_triangles",
+            )
+        else:
+            stats = und.agg(
+                F.count(F.lit(1)).alias("n_edges"),
+            ).crossJoin(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
+            out = stats.crossJoin(tri).select(
+                "n_nodes", "n_edges", "n_triangles"
+            )
+        return out.localCheckpoint(eager=True)

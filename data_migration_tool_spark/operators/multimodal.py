@@ -55,29 +55,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("content_sha", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def _decode_bytes(content: bytes, kind: str, dim: int = 8) -> list[float]:
-    """STUB embedding: deterministic pseudo-features from the raw bytes.
-
-    Used by :func:`extract_features` for the fixed-width feature-vector
-    path; the REAL header/payload decoders live in :func:`decode_media`.
-    """
-    import hashlib
-
-    h = hashlib.sha256(content or b"").digest()
-    return [b / 255.0 for b in h[:dim]]
-
-
 # ---------------------------------------------------------------------------
 # Real codecs: BMP (24-bit uncompressed) and WAV (PCM16) encode + decode.
 # Encoder and decoder are independent code paths (writer packs headers,
@@ -391,8 +368,7 @@ def spread_for_cpu(df: DataFrame, key: str = "content_sha") -> DataFrame:
 def extract_media_features(media: DataFrame) -> DataFrame:
     """Real decode pipeline: content hashed, distinct blobs parsed ONCE
     (Arrow batches through :func:`decode_media`), scalar decoded fields
-    joined back to every row. Same dedup-before-decode shape as
-    :func:`extract_features` — at 100 TB duplicate media decode cost
+    joined back to every row — at 100 TB duplicate media decode cost
     collapses to one per distinct blob."""
     hashed = media.withColumn("content_sha", F.sha2(F.col("content"), 256))
     distinct_blobs = spread_for_cpu(
@@ -462,49 +438,6 @@ def sample_frames(media: DataFrame) -> DataFrame:
 
     return vids.mapInPandas(
         dec, "media_id long, frame_idx int, frame_ts_ms double, mean_luma double"
-    )
-
-
-def extract_features(
-    media: DataFrame, dim: int = 8, feature_type: str = "float"
-) -> DataFrame:
-    """Arrow-batched feature extraction over binary media columns.
-
-    Pattern: dedup on content hash BEFORE decode (each distinct blob is
-    decoded once), then the cheap features join back to all rows.
-
-    ``feature_type``: ``float`` (storage-friendly) or ``double`` (when
-    downstream compares values bit-exactly — float32 narrowing rounds).
-    """
-    hashed = media.withColumn("content_sha", F.sha2(F.col("content"), 256))
-    distinct_blobs = spread_for_cpu(
-        hashed.select("content_sha", "kind", "content").dropDuplicates(
-            ["content_sha"]
-        )
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _decode_bytes(c, k, dim)
-                for c, k in zip(pdf["content"], pdf["kind"])
-            ]
-            yield pd.DataFrame(
-                {"content_sha": pdf["content_sha"], "features": feats}
-            )
-
-    decoded = distinct_blobs.mapInPandas(
-        decode, f"content_sha string, features array<{feature_type}>"
-    )
-    return (
-        hashed.join(decoded, "content_sha")
-        .select(
-            "media_id",
-            "kind",
-            "content_sha",
-            F.length(F.col("content")).cast("long").alias("n_bytes"),
-            "features",
-        )
     )
 
 

@@ -10,9 +10,9 @@ The codebook is md5-derived (reproducible bit-for-bit in any engine),
 values on a 1/128 grid so every centroid coordinate is an exact double
 — the SQL oracle embeds the identical literals and the whole encode
 pass is value-exact cross-engine. Production would train centroids per
-subspace with k-means (``similarity.kmeans_fit`` — the trained-IVF
-pattern); the encode/scoring mechanics below are unchanged by where
-the codebook comes from.
+subspace with k-means (``similarity.kmeans_fit_exact`` — the
+trained-IVF pattern); the encode/scoring mechanics below are unchanged
+by where the codebook comes from.
 
 Everything is scan-side Catalyst expression work — and deliberately
 higher-order-function work, not unrolled terms: the codebook rides

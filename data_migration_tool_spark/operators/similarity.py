@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_migration_tool_spark.partitioning import spread as _spread
+from data_migration_tool_spark.partitioning import cached, scoped_loop, spread as _spread
 
 
 MAX_BROADCAST_VECTORS = 262_144  # ~128 MB at 64 float64 dims
@@ -572,75 +572,6 @@ def embedding_near_dup_pairs_ivf(
     )
 
 
-def kmeans_fit(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Train IVF centroids with Lloyd's k-means — the missing half of
-    the IVF scale path (``ivf_assign``/``ivf_topk`` consume whatever
-    centroids exist; this produces them from the corpus itself).
-
-    Deterministic throughout: init takes the k corpus rows with the
-    smallest md5(id) (a reproducible pseudo-random sample, no RNG
-    state), and assignment ties break by cell id — reruns converge to
-    identical centroids. Each iteration = one corpus stream through
-    the block mat-mul assignment + one dimension-wise mean at
-    (cell × dim) grain (posexplode → avg → rebuild, map-side
-    combinable). Centroids stay a k×dim broadcast; the corpus is never
-    collected. Empty cells keep their previous centroid. Returns
-    (id_col = cell id 0..k-1, vec_col) ready for ``ivf_assign``.
-
-    At 100 TB: cost is iters × (scan + tiny shuffle); for faster
-    convergence on huge corpora, fit on a hash-sampled fraction
-    (``doc_hash_sample`` pattern) and assign the full corpus once.
-    """
-    from pyspark.sql import Window
-
-    vec_type = dict(corpus.dtypes)[vec_col]
-    cents = (
-        corpus.select(id_col, vec_col)
-        .withColumn("__h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("__h")
-        .limit(k)
-        .withColumn(
-            "__cell", F.row_number().over(Window.orderBy("__h")) - 1
-        )
-        .select(F.col("__cell").alias(id_col), vec_col)
-    )
-    for _ in range(iters):
-        assigned = ivf_assign(corpus, cents, id_col, vec_col)
-        dim_means = (
-            assigned.select("cell_id", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("cell_id", "pos")
-            .agg(F.avg("x").alias("m"))
-        )
-        new_cents = (
-            dim_means.groupBy("cell_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("pairs")
-            )
-            .select(
-                F.col("cell_id").alias(id_col),
-                F.transform("pairs", lambda p: p["m"])
-                .cast(vec_type)
-                .alias(vec_col),
-            )
-        )
-        # empty cells keep their previous centroid
-        kept = cents.join(
-            new_cents.select(F.col(id_col).alias("__seen")),
-            cents[id_col] == F.col("__seen"),
-            "left_anti",
-        )
-        cents = new_cents.unionByName(kept).localCheckpoint()
-    return cents
-
-
 _KMEANS_SCALE = 1_048_576.0  # 2^20
 _KMEANS_OFFSET = 2.0  # shifts [-1, 1]-ish coords non-negative (trunc == floor)
 
@@ -764,32 +695,27 @@ def kmeans_fit_exact(
     are run-stable only per engine).
 
     Semantics: coordinates quantize to floor((x+2)·2^20); init = the k
-    corpus rows with the smallest md5(id) (same reproducible sample as
-    ``kmeans_fit``); assignment = integer squared-L2, ties to the
+    corpus rows with the smallest md5(id) (a reproducible pseudo-random
+    sample, no RNG state); assignment = integer squared-L2, ties to the
     lowest cell; update = per-dimension floor-average (Σ div n — exact
     sums, so order-independent); empty cells keep their previous
     centroid. Returns (cell, q array<long>).
 
-    Scale shape identical to ``kmeans_fit``: iters × (one corpus scan
-    with an in-row k-way compare + one (cell × dim)-grain shuffle).
-    r13: the centroids live on the DRIVER between rounds (k·dim
-    integers — the same O(round-result) transfer as BPE's per-round
-    argmax), so each round is ONE job whose only exchanges are the
-    (cell × dim)-grain means — the per-round broadcast, window sort,
-    empty-cell anti-join, and eager checkpoint of the old loop are
-    gone. The quantized corpus is persisted for the loop's span (iters
-    scans of cache instead of iters parquet+quantize passes); shuffles
-    are scoped to the state grain (cell × dim rows), not the session
-    default."""
-    from data_migration_tool_spark.partitioning import scoped_loop
-
+    Scale shape: iters × (one corpus scan with an in-row k-way compare
+    + one (cell × dim)-grain shuffle). The centroids live on the DRIVER
+    between rounds (k·dim integers — the same O(round-result) transfer
+    as BPE's per-round argmax), so each round is ONE job whose only
+    exchanges are the (cell × dim)-grain means. The quantized corpus is
+    cached for the loop's span (iters scans of cache instead of iters
+    parquet+quantize passes); shuffles are scoped to the state grain
+    (cell × dim rows), not the session default. At 100 TB, fit on a
+    hash-sampled fraction (``doc_hash_sample`` pattern) and assign the
+    full corpus once."""
     spark = corpus.sparkSession
-    qv = (
-        corpus.select(id_col, quantize_vec(vec_col).alias("q"))
-        .withColumnRenamed(id_col, "vec_id")
-        .persist()
+    qv = corpus.select(id_col, quantize_vec(vec_col).alias("q")).withColumnRenamed(
+        id_col, "vec_id"
     )
-    try:
+    with cached(qv):
         # static plans inside the pinned-partition loop (``scoped_loop``):
         # the round plan is fully known (centroids are in-row literals,
         # shuffles pinned to the cell×dim state grain), so AQE only adds
@@ -829,11 +755,9 @@ def kmeans_fit_exact(
                 # empty cells keep their previous centroid
                 newmap = {r["cell"]: list(r["q"]) for r in nc}
                 cents = [(c, newmap.get(c, q)) for c, q in cents]
-    finally:
-        qv.unpersist()
     # as_rows: the centroids ARE driver state between rounds — return
-    # them as-is for callers feeding _assign_exact/ivf_exact_topk (r14:
-    # skips a createDataFrame → collect round trip per chain); the
+    # them as-is for callers feeding _assign_exact/ivf_exact_topk (skips
+    # a createDataFrame → collect round trip per chain); the
     # DataFrame form stays the default public contract.
     if as_rows:
         return [(c, list(q)) for c, q in cents]

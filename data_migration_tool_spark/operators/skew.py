@@ -1,23 +1,17 @@
 """Skew-mitigation operators (prompt-mandated scale path).
 
 AQE's skew-join splitting handles most runtime skew automatically
-(session.py enables it), but two situations still need explicit salting
-at 100 TB:
+(session.py enables it), but a **low-cardinality aggregation** still
+needs explicit salting at 100 TB: ``groupBy(k)`` with a handful of
+distinct keys puts each key's entire partial state behind one reducer.
+Partial aggregation usually saves this — unless the aggregate is
+high-fanout per group (``collect_list``, exact ``countDistinct``
+rewrites) where the reduce side still receives per-row state.
+``salted_agg`` splits each group ``n_salts`` ways, aggregates, then
+merges — two small shuffles instead of one monster reducer. For a
+hot-key join, AQE's skew-join split on a shuffle join is the tool.
 
-1. **Low-cardinality aggregation**: ``groupBy(k)`` with a handful of
-   distinct keys puts each key's entire partial state behind one
-   reducer. Partial aggregation usually saves this — unless the
-   aggregate is high-fanout per group (``collect_list``, exact
-   ``countDistinct`` rewrites) where the reduce side still receives
-   per-row state. ``salted_agg`` splits each group ``n_salts`` ways,
-   aggregates, then merges — two small shuffles instead of one
-   monster reducer.
-2. **Hot-key joins** where the skewed side must stay unshuffled (e.g.
-   streaming) or AQE is unavailable: ``salted_broadcast_join``
-   replicates the small side across a salt range so the hot key's rows
-   spread over ``n_salts`` tasks.
-
-Both are *plan rewrites with identical semantics* — results are
+The rewrite is a *plan rewrite with identical semantics* — results are
 checked equal to the unsalted plan in tests and (for the registry
 query) against the DuckDB oracle.
 """
@@ -56,42 +50,3 @@ def salted_agg(
     salted = with_salt(df, n_salts)
     partial = salted.groupBy(*keys, SALT_COL).agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*merge_aggs)
-
-
-def salted_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where the fact side's ``key`` is heavily skewed: salt
-    the fact rows, explode the (small) dim side across the full salt
-    range, and join on (key, salt). The hot key's rows land on
-    ``n_salts`` different tasks instead of one.
-
-    The dim side grows ``n_salts``× — it must stay broadcastable at the
-    inflated size (that is the operator's contract; for dims too big
-    for that, AQE skew-join on a shuffle join is the right tool).
-
-    Only fact-preserving joins are supported: the rewrite replicates
-    each dim row ``n_salts`` times, which is invisible to inner/left
-    (every fact row carries exactly one salt) but would emit unmatched
-    dim rows once per replica under right/full outer, and inverts
-    semi/anti semantics.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_broadcast_join supports inner/left joins only, got {how!r}: "
-            "dim rows are replicated n_salts times, so right/full outer would "
-            "duplicate unmatched dim rows and semi/anti would be wrong"
-        )
-    salted_fact = with_salt(fact, n_salts)
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias(SALT_COL)
-    salted_dim = dim.select("*", salts)
-    joined = salted_fact.join(
-        F.broadcast(salted_dim),
-        on=[key, SALT_COL],
-        how=how,
-    )
-    return joined.drop(SALT_COL)

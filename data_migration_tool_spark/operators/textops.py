@@ -11,6 +11,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from data_migration_tool_spark.functions import text as TX
+from data_migration_tool_spark.partitioning import cached
 
 
 def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -261,68 +262,64 @@ def fuzzy_name_pairs(
         # and the DuckDB mirror's split_part('') paired them.
         .withColumn("blk", F.coalesce(block_expr, F.lit("")))
         .filter(F.col("blk") != "")
-        # persisted: the guard histogram and BOTH self-join sides read
-        # this frame — without the cache the full input rescans and
-        # re-distincts once per consumer; released before returning
-        # (materialized pair result), containment-verify discipline
-        .persist()
     )
-    if max_comparisons is not None:
-        g = (
-            names.groupBy("blk")
-            .agg(F.count(F.lit(1)).alias("b"))
-            .agg(
-                F.expr("sum(b * (b - 1) div 2)").alias("pairs"),
-                F.sum("b").alias("n"),
-                F.max("b").alias("hot"),
-            )
-            .first()
-        )
-        implied = int(g["pairs"] or 0)
-        n_names = int(g["n"] or 0)
-        if max_comparisons == "auto":
-            cap = linear_budget * max(n_names, 1)
-            why = f"{linear_budget}·n_names = {cap:,}"
-        else:
-            cap = int(max_comparisons)
-            why = f"max_comparisons={cap:,}"
-        if implied > cap:
-            names.unpersist()
-            if audit is not None:
-                from data_migration_tool_spark.audit.log import guard_event
-
-                guard_event(
-                    audit,
-                    guard="fuzzy_name_pairs",
-                    action="refuse",
-                    subject=f"{name_col} blocked Levenshtein self-join",
-                    implied_cost=implied,
-                    cap=cap,
-                    detail=f"refused: Σ C(block,2) = {implied:,} over "
-                    f"{n_names:,} distinct names (hottest block "
-                    f"{int(g['hot'] or 0):,}) — the blocking key is "
-                    f"saturated",
+    # cached: the guard histogram and BOTH self-join sides read this
+    # frame — without the cache the full input rescans and re-distincts
+    # once per consumer
+    with cached(names):
+        if max_comparisons is not None:
+            g = (
+                names.groupBy("blk")
+                .agg(F.count(F.lit(1)).alias("b"))
+                .agg(
+                    F.expr("sum(b * (b - 1) div 2)").alias("pairs"),
+                    F.sum("b").alias("n"),
+                    F.max("b").alias("hot"),
                 )
-            raise RuntimeError(
-                f"fuzzy_name_pairs: the blocked self-join implies "
-                f"{implied:,} Levenshtein comparisons (> {why}; hottest "
-                f"block {int(g['hot'] or 0):,} of {n_names:,} names). "
-                f"Block finer, sample the dictionary deterministically, "
-                f"raise linear_budget, or pass max_comparisons=None to "
-                f"opt into the unpriced join."
+                .first()
             )
-    a = names.select(F.col("name").alias("name_a"), "blk")
-    b = names.select(F.col("name").alias("name_b"), "blk")
-    out = (
-        a.join(b, "blk")
-        .filter(F.col("name_a") < F.col("name_b"))
-        .withColumn("dist", F.levenshtein("name_a", "name_b"))
-        .filter(F.col("dist") <= max_dist)
-        .select("name_a", "name_b", "dist")
-        .localCheckpoint(eager=True)
-    )
-    names.unpersist()
-    return out
+            implied = int(g["pairs"] or 0)
+            n_names = int(g["n"] or 0)
+            if max_comparisons == "auto":
+                cap = linear_budget * max(n_names, 1)
+                why = f"{linear_budget}·n_names = {cap:,}"
+            else:
+                cap = int(max_comparisons)
+                why = f"max_comparisons={cap:,}"
+            if implied > cap:
+                if audit is not None:
+                    from data_migration_tool_spark.audit.log import guard_event
+
+                    guard_event(
+                        audit,
+                        guard="fuzzy_name_pairs",
+                        action="refuse",
+                        subject=f"{name_col} blocked Levenshtein self-join",
+                        implied_cost=implied,
+                        cap=cap,
+                        detail=f"refused: Σ C(block,2) = {implied:,} over "
+                        f"{n_names:,} distinct names (hottest block "
+                        f"{int(g['hot'] or 0):,}) — the blocking key is "
+                        f"saturated",
+                    )
+                raise RuntimeError(
+                    f"fuzzy_name_pairs: the blocked self-join implies "
+                    f"{implied:,} Levenshtein comparisons (> {why}; hottest "
+                    f"block {int(g['hot'] or 0):,} of {n_names:,} names). "
+                    f"Block finer, sample the dictionary deterministically, "
+                    f"raise linear_budget, or pass max_comparisons=None to "
+                    f"opt into the unpriced join."
+                )
+        a = names.select(F.col("name").alias("name_a"), "blk")
+        b = names.select(F.col("name").alias("name_b"), "blk")
+        return (
+            a.join(b, "blk")
+            .filter(F.col("name_a") < F.col("name_b"))
+            .withColumn("dist", F.levenshtein("name_a", "name_b"))
+            .filter(F.col("dist") <= max_dist)
+            .select("name_a", "name_b", "dist")
+            .localCheckpoint(eager=True)
+        )
 
 
 def resolve_entities(
@@ -355,37 +352,34 @@ def resolve_entities(
     # reduce the row-grain input to the name dictionary ONCE and feed
     # that to every downstream consumer: the matcher re-distincts a
     # dictionary instead of re-scanning the full input, and the
-    # survivorship join reads the same cache (code-review r13 — the
-    # previous shape paid the full-input scan+distinct twice, plus
-    # twice more through the sizes self-join's two references)
-    names = df.select(F.col(name_col).alias("name")).distinct().persist()
-    pairs = fuzzy_name_pairs(names, "name", **fuzzy_kwargs)
-    # the CC input is dictionary-grain (fuzzy pairs over distinct
-    # names) — pin the loop and freeze its plans (r14, see dup_clusters)
-    cc = dup_clusters(
-        pairs.select(
-            F.col("name_a").alias("id_a"), F.col("name_b").alias("id_b")
-        ),
-        id_col="name",
-        loop_shuffle_partitions=8,
-    )
-    resolved = names.join(cc, "name", "left_outer").select(
-        "name",
-        F.coalesce(F.col("cluster_id"), F.col("name")).alias(
-            "canonical_name"
-        ),
-    )
-    sizes = resolved.groupBy("canonical_name").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    # materialized return (the fuzzy_name_pairs convention): resolved
-    # feeds both sides of the sizes join, so a lazy return would
-    # re-evaluate the name-grain plan per reference — and the names
-    # cache must not outlive the call
-    out = (
-        resolved.join(sizes, "canonical_name")
-        .select("name", "canonical_name", "cluster_size")
-        .localCheckpoint(eager=True)
-    )
-    names.unpersist()
-    return out
+    # survivorship join reads the same cache (the previous shape paid
+    # the full-input scan+distinct twice, plus twice more through the
+    # sizes self-join's two references)
+    with cached(df.select(F.col(name_col).alias("name")).distinct()) as names:
+        pairs = fuzzy_name_pairs(names, "name", **fuzzy_kwargs)
+        # the CC input is dictionary-grain (fuzzy pairs over distinct
+        # names) — pin the loop and freeze its plans (see dup_clusters)
+        cc = dup_clusters(
+            pairs.select(
+                F.col("name_a").alias("id_a"), F.col("name_b").alias("id_b")
+            ),
+            id_col="name",
+            loop_shuffle_partitions=8,
+        )
+        resolved = names.join(cc, "name", "left_outer").select(
+            "name",
+            F.coalesce(F.col("cluster_id"), F.col("name")).alias(
+                "canonical_name"
+            ),
+        )
+        sizes = resolved.groupBy("canonical_name").agg(
+            F.count(F.lit(1)).alias("cluster_size")
+        )
+        # materialized: resolved feeds both sides of the sizes join, so
+        # a lazy return would re-evaluate the name-grain plan per
+        # reference
+        return (
+            resolved.join(sizes, "canonical_name")
+            .select("name", "canonical_name", "cluster_size")
+            .localCheckpoint(eager=True)
+        )

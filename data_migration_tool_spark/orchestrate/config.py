@@ -18,7 +18,6 @@ from typing import Any
 SECRET_PREFIX = "secret:"
 
 SUPPORTED_TYPES = ("ddl", "sql", "dml", "data")
-SUPPORTED_SOURCES = ("teradata", "oracle", "redshift", "db2", "hive", "hive_inc")
 
 
 class ConfigError(ValueError):

@@ -7,8 +7,9 @@ repartitions such inputs up to cluster parallelism; on genuinely large
 inputs (≥ target partitions already) it is a no-op, so the 100 TB plan
 is unchanged while the small-file plan actually uses the cluster.
 
-The session-conf scopes (``scoped_conf``, ``scoped_loop``) and the
-overlap-jobs helper (``par_jobs``) live here too.
+The session-conf scopes (``scoped_conf``, ``scoped_loop``), the cache
+scope (``cached``) and the overlap-jobs helper (``par_jobs``) live here
+too.
 """
 
 from __future__ import annotations
@@ -71,6 +72,32 @@ def scoped_loop(spark, partitions: int | None):
         "spark.sql.adaptive.enabled": "false",
     }
     return scoped_conf(spark, conf if partitions else {})
+
+
+@contextmanager
+def cached(*frames: DataFrame):
+    """Persist ``frames`` in argument order for the block, yield them
+    (one frame, or a tuple of several), and unpersist them on every exit:
+    return, raise and refusal alike. This is the package's only
+    ``persist``/``unpersist`` site.
+
+    Invariant: every cache is consumed before it is released. A frame
+    that outlives the block must be materialized inside it, by
+    ``localCheckpoint(eager=True)`` or a collect. A lazy frame returned
+    from the block would recompute its cached inputs on every action,
+    and a cache left behind has no reachable ``unpersist`` and pins its
+    blocks for the rest of the session.
+
+    A frame the caller passed in stays the caller's: put only frames
+    this scope's owner built into the scope."""
+    held = []
+    try:
+        for f in frames:
+            held.append(f.persist())
+        yield held[0] if len(held) == 1 else tuple(held)
+    finally:
+        for f in held:
+            f.unpersist()
 
 
 # Threads ``par_jobs`` starts at most: the catalog walk hands it one thunk

@@ -33,6 +33,7 @@ from data_migration_tool_spark.operators.multimodal import (
     frame_sample_plan,
     sample_frames,
 )
+from data_migration_tool_spark.partitioning import cached
 from data_migration_tool_spark.tables import load_table, parquet_schema
 
 def _spread_seed(d: DataFrame) -> DataFrame:
@@ -94,34 +95,16 @@ def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.mapInPandas(enc, "media_id long, kind string, content binary")
 
 
-def _consume_release(out: DataFrame, *caches: DataFrame) -> DataFrame:
-    """persist → consume → unpersist (the house persist discipline): a
-    cache left behind after a builder returns has no reachable
-    unpersist and pins blocks for the whole session — one bench pass
-    over this family measured GBs of leaked blob cache inflating later
-    queries 3-30×. The query output here is always SMALL (per-media
-    scalar rows / pair lists), so one eager ``localCheckpoint``
-    materializes it — consuming every cache exactly once — and the
-    caches release before return. The expensive shared stage (the
-    Python encode each operator references from both join sides) still
-    runs once per query, which is the point of the persists."""
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
-
-
 def _feature_extract_pipeline(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[DataFrame]]:
     """``media_feature_extract``'s frame BEFORE the eager materialize —
-    split out so plan-shape tests can pin the Arrow map nodes that
-    ``_consume_release``'s localCheckpoint hides from the query-level
-    explain (the returned query plan is a Scan ExistingRDD). Returns
-    (out, caches); callers own releasing the caches."""
-    # persist → consume → unpersist (_consume_release): the operator
-    # references the encoded corpus from both join sides
-    media = media_from_documents(spark, sf_dir).persist()
+    split out so plan-shape tests can pin the Arrow map nodes that the
+    lane's localCheckpoint hides from the query-level explain (the
+    returned query plan is a Scan ExistingRDD). Returns (out, caches):
+    the frames the lane caches while it materializes ``out``. The
+    operator references the encoded corpus from both join sides."""
+    media = media_from_documents(spark, sf_dir)
     feats = extract_media_features(media)
     out = feats.select(
         "media_id",
@@ -148,7 +131,8 @@ def media_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole point — duplicate media decode cost collapses to one per
     distinct blob."""
     out, caches = _feature_extract_pipeline(spark, sf_dir)
-    return _consume_release(out, *caches)
+    with cached(*caches):
+        return out.localCheckpoint(eager=True)
 
 
 MEDIA_FEATURES_SQL = """
@@ -263,12 +247,11 @@ def media_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle regenerates the sampled pixel lattice arithmetically from
     the same deterministic pixel function, so dims, exact integer
     pixel sum, and derived mean all hash-match."""
-    media = media_from_documents(spark, sf_dir).filter(
-        F.col("kind") == "image"
-    ).persist()
     from data_migration_tool_spark.operators.multimodal import resize_images
 
-    return _consume_release(resize_images(media, factor=2), media)
+    images = media_from_documents(spark, sf_dir).filter(F.col("kind") == "image")
+    with cached(images) as media:
+        return resize_images(media, factor=2).localCheckpoint(eager=True)
 
 
 MEDIA_RESIZE_SQL = """
@@ -300,12 +283,11 @@ def media_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow pass. Integer sum-of-squares is exact; RMS derives from it,
     so the arithmetic oracle regenerating the synthetic PCM stream
     hash-matches every frame."""
-    media = media_from_documents(spark, sf_dir).filter(
-        F.col("kind") == "audio"
-    ).persist()
     from data_migration_tool_spark.operators.multimodal import frame_audio
 
-    return _consume_release(frame_audio(media, frame_size=8), media)
+    audio = media_from_documents(spark, sf_dir).filter(F.col("kind") == "audio")
+    with cached(audio) as media:
+        return frame_audio(media, frame_size=8).localCheckpoint(eager=True)
 
 
 MEDIA_AUDIO_FRAMES_SQL = """
@@ -338,7 +320,7 @@ def _jpeg_decode_pipeline(
 ) -> tuple[DataFrame, list[DataFrame]]:
     """``media_jpeg_decode``'s frame BEFORE the eager materialize (see
     ``_feature_extract_pipeline`` — same plan-shape-test rationale).
-    Returns (out, caches); callers own releasing the caches."""
+    Returns (out, caches)."""
     from data_migration_tool_spark.operators.jpeg import encode_jpeg
 
     d = _spread_seed(
@@ -368,9 +350,7 @@ def _jpeg_decode_pipeline(
                 {"media_id": ids, "kind": ["image"] * len(ids), "content": blobs}
             )
 
-    media = d.mapInPandas(
-        enc, "media_id long, kind string, content binary"
-    ).persist()
+    media = d.mapInPandas(enc, "media_id long, kind string, content binary")
     feats = extract_media_features(media)
     out = feats.select(
         "media_id",
@@ -403,7 +383,8 @@ def media_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas stages; dedup-before-decode keys on the
     content hash so duplicate blobs decode once."""
     out, caches = _jpeg_decode_pipeline(spark, sf_dir)
-    return _consume_release(out, *caches)
+    with cached(*caches):
+        return out.localCheckpoint(eager=True)
 
 
 MEDIA_JPEG_DECODE_SQL = """
@@ -460,18 +441,15 @@ def media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"media_id": ids, "kind": ["image"] * len(ids), "content": blobs}
             )
 
-    media = d.mapInPandas(
-        enc, "media_id long, kind string, content binary"
-    ).persist()
-    feats = extract_media_features(media)
-    out = feats.select(
-        "media_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("n_channels").cast("long").alias("n_channels"),
-        F.col("mean_luma").cast("double").alias("mean_luma"),
-    )
-    return _consume_release(out, media)
+    encoded = d.mapInPandas(enc, "media_id long, kind string, content binary")
+    with cached(encoded) as media:
+        return extract_media_features(media).select(
+            "media_id",
+            F.col("width").cast("long").alias("width"),
+            F.col("height").cast("long").alias("height"),
+            F.col("n_channels").cast("long").alias("n_channels"),
+            F.col("mean_luma").cast("double").alias("mean_luma"),
+        ).localCheckpoint(eager=True)
 
 
 MEDIA_PNG_DECODE_SQL = """
@@ -521,18 +499,16 @@ def _transcode_chain_pipeline(
                 {"media_id": ids, "kind": ["image"] * len(ids), "content": blobs}
             )
 
-    # both chain stages persist: each is referenced from two join
-    # sides by its consumer, and each reference would otherwise re-run
-    # the full upstream codec chain (before-plan: 7 MapInPandas nodes /
-    # 4 source scans for this query). Released in _consume_release.
-    media = d.mapInPandas(
-        enc, "media_id long, kind string, content binary"
-    ).persist()
+    # both chain stages are cached, in chain order: each is referenced
+    # from two join sides by its consumer, and each reference would
+    # otherwise re-run the full upstream codec chain (before-plan: 7
+    # MapInPandas nodes / 4 source scans for this query).
+    media = d.mapInPandas(enc, "media_id long, kind string, content binary")
     thumbs = transcode_images(media, factor=2, out_format="png").select(
         "media_id",
         F.lit("image").alias("kind"),
         F.col("out_content").alias("content"),
-    ).persist()
+    )
     feats = extract_media_features(thumbs)
     out = feats.select(
         "media_id",
@@ -541,7 +517,7 @@ def _transcode_chain_pipeline(
         F.col("n_channels").cast("long").alias("n_channels"),
         F.col("mean_luma").cast("double").alias("mean_luma"),
     )
-    return out, [thumbs, media]
+    return out, [media, thumbs]
 
 
 def media_transcode_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -562,7 +538,8 @@ def media_transcode_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-before-work hash joins between them; per-distinct-blob cost,
     embarrassingly parallel."""
     out, caches = _transcode_chain_pipeline(spark, sf_dir)
-    return _consume_release(out, *caches)
+    with cached(*caches):
+        return out.localCheckpoint(eager=True)
 
 
 def media_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -708,27 +685,24 @@ def media_transcode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"media_id": ids, "kind": ["image"] * len(ids), "content": blobs}
             )
 
-    # chain persists, as in media_transcode_chain (released below)
-    media = d.mapInPandas(
-        enc, "media_id long, kind string, content binary"
-    ).persist()
-    thumbs = transcode_images(
-        media, factor=2, out_format="jpeg", jpeg_quality=100
-    ).select(
-        "media_id",
-        F.lit("image").alias("kind"),
-        F.col("out_content").alias("content"),
-    )
-    thumbs = thumbs.persist()
-    feats = extract_media_features(thumbs)
-    out = feats.select(
-        "media_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("n_channels").cast("long").alias("n_channels"),
-        F.col("mean_luma").cast("double").alias("mean_luma"),
-    )
-    return _consume_release(out, thumbs, media)
+    # both chain stages cached, as in media_transcode_chain
+    encoded = d.mapInPandas(enc, "media_id long, kind string, content binary")
+    with cached(encoded) as media, cached(
+        transcode_images(
+            media, factor=2, out_format="jpeg", jpeg_quality=100
+        ).select(
+            "media_id",
+            F.lit("image").alias("kind"),
+            F.col("out_content").alias("content"),
+        )
+    ) as thumbs:
+        return extract_media_features(thumbs).select(
+            "media_id",
+            F.col("width").cast("long").alias("width"),
+            F.col("height").cast("long").alias("height"),
+            F.col("n_channels").cast("long").alias("n_channels"),
+            F.col("mean_luma").cast("double").alias("mean_luma"),
+        ).localCheckpoint(eager=True)
 
 
 MEDIA_TRANSCODE_JPEG_SQL = """
@@ -803,26 +777,21 @@ def media_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from data_migration_tool_spark.operators.multimodal import dhash_images
 
-    media = _phash_corpus(spark, sf_dir).persist()
-    # persist → consume → unpersist (the house persist discipline —
-    # a cache left behind after return has no reachable unpersist and
-    # pins blocks for the session): the band self-join references the
-    # signature frame twice, and each reference would otherwise re-run
-    # the whole encode+decode+hash pipeline. The cache is (media_id,
-    # dhash) — 16 bytes per image; the pair output is eagerly
-    # materialized (pair-scale) so the cache can be released here.
-    sigs = dhash_images(media, grid_w=8, grid_h=8).persist()
-    out = hamming_near_dup_pairs(
-        sigs,
-        id_col="media_id",
-        sig_col="dhash",
-        bits=64,
-        bands=4,
-        max_hamming=1,
-    ).localCheckpoint(eager=True)
-    sigs.unpersist()
-    media.unpersist()
-    return out
+    # the band self-join references the signature frame twice, and each
+    # reference would otherwise re-run the whole encode+decode+hash
+    # pipeline. The signature cache is (media_id, dhash), 16 bytes per
+    # image.
+    with cached(_phash_corpus(spark, sf_dir)) as media, cached(
+        dhash_images(media, grid_w=8, grid_h=8)
+    ) as sigs:
+        return hamming_near_dup_pairs(
+            sigs,
+            id_col="media_id",
+            sig_col="dhash",
+            bits=64,
+            bands=4,
+            max_hamming=1,
+        ).localCheckpoint(eager=True)
 
 
 def _phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -882,36 +851,29 @@ def media_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_migration_tool_spark.operators import dedup as DD
     from data_migration_tool_spark.operators.multimodal import dhash_images
 
-    # persist → consume → unpersist: the batch/standing filters are two
-    # references of the same Python encode stage — uncached it would
-    # synthesize every blob twice. The batch signature frame is
-    # likewise referenced twice inside the incremental join (new×index
-    # ∪ new×new). The pair output is eagerly materialized (pair-scale)
-    # so both caches release before return instead of pinning
-    # blob-scale blocks for the session.
-    media = _phash_corpus(spark, sf_dir).persist()
-    batch = media.filter(F.col("media_id") % 7 == 0)
-    standing = media.filter(F.col("media_id") % 7 != 0)
-    idx = DD.hamming_index(
-        dhash_images(standing),
-        id_col="media_id",
-        sig_col="dhash",
-        bits=64,
-        bands=4,
-    )
-    batch_sigs = dhash_images(batch).persist()
-    out = DD.hamming_near_dups_incremental(
-        batch_sigs,
-        idx,
-        id_col="media_id",
-        sig_col="dhash",
-        bits=64,
-        bands=4,
-        max_hamming=1,
-    ).localCheckpoint(eager=True)
-    batch_sigs.unpersist()
-    media.unpersist()
-    return out
+    # the batch/standing filters are two references of the same Python
+    # encode stage — uncached it would synthesize every blob twice. The
+    # batch signature frame is likewise referenced twice inside the
+    # incremental join (new×index ∪ new×new).
+    with cached(_phash_corpus(spark, sf_dir)) as media, cached(
+        dhash_images(media.filter(F.col("media_id") % 7 == 0))
+    ) as batch_sigs:
+        idx = DD.hamming_index(
+            dhash_images(media.filter(F.col("media_id") % 7 != 0)),
+            id_col="media_id",
+            sig_col="dhash",
+            bits=64,
+            bands=4,
+        )
+        return DD.hamming_near_dups_incremental(
+            batch_sigs,
+            idx,
+            id_col="media_id",
+            sig_col="dhash",
+            bits=64,
+            bands=4,
+            max_hamming=1,
+        ).localCheckpoint(eager=True)
 
 
 MEDIA_PHASH_NEAR_DUPS_SQL = """
@@ -1029,13 +991,12 @@ def media_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         vad_segments,
     )
 
-    media = media_from_documents(spark, sf_dir).filter(
-        F.col("kind") == "audio"
-    ).persist()
-    frames = frame_audio(media, frame_size=8)
-    return _consume_release(
-        vad_segments(frames, energy_num=400_000, energy_den=1), media
-    )
+    audio = media_from_documents(spark, sf_dir).filter(F.col("kind") == "audio")
+    with cached(audio) as media:
+        frames = frame_audio(media, frame_size=8)
+        return vad_segments(
+            frames, energy_num=400_000, energy_den=1
+        ).localCheckpoint(eager=True)
 
 
 MEDIA_VAD_SEGMENTS_SQL = """

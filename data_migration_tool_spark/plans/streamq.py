@@ -16,7 +16,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_migration_tool_spark.partitioning import par_jobs
+from data_migration_tool_spark.partitioning import cached, par_jobs
 from data_migration_tool_spark.streaming.file_stream import (
     drain,
     stream_scratch,
@@ -744,9 +744,9 @@ def orders_stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def _apply(batch, _bid):
             # ONE batch⋈lineitem join per trigger: per-op joins
-            # (deletes⋈li, inserts⋈li) would each scan the persisted
-            # lineitem cache when the operator materializes its delta
-            # persists — the fused join runs once into a delta-scale
+            # (deletes⋈li, inserts⋈li) would each scan the cached
+            # lineitem when the operator materializes its delta
+            # caches — the fused join runs once into a delta-scale
             # eager checkpoint (blocks freed with the Python ref) and
             # both op slices are map-side filters of it.
             j = (
@@ -777,22 +777,18 @@ def orders_stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(landing)
         )
-        li_static = li.persist()
-        try:
+        with cached(li) as li_static:
             drain(stream, "orders_stream_join_ivm", work, landing, foreach_batch=_apply)
-            out = (
-                spark.read.parquet(view_path)
-                .groupBy("o_orderstatus")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    F.sum("rev").cast("double").alias("sum_revenue"),
-                )
-                .orderBy("o_orderstatus")
-                .localCheckpoint(eager=True)
+        return (
+            spark.read.parquet(view_path)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.sum("rev").cast("double").alias("sum_revenue"),
             )
-        finally:
-            li_static.unpersist()
-        return out
+            .orderBy("o_orderstatus")
+            .localCheckpoint(eager=True)
+        )
 
 
 ORDERS_STREAM_JOIN_IVM_SQL = """

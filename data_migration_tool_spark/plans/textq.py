@@ -12,6 +12,7 @@ from pyspark.sql import Window as W
 from data_migration_tool_spark.functions import text as TX
 from data_migration_tool_spark.operators import dedup as DD
 from data_migration_tool_spark.operators import textops as TO
+from data_migration_tool_spark.partitioning import cached
 from data_migration_tool_spark.tables import load_table
 
 # Shared SQL fragments — tokenization and shingling twins of
@@ -1450,65 +1451,61 @@ def minhash_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-flips if a banding change degrades recall below the declared
     contract."""
     d = load_table(spark, sf_dir, "documents")
-    # one shingle build for BOTH arms (r13 opt, guide §1.2): the exact
-    # and LSH pipelines consume the identical shingle_set(d); sharing
-    # the persisted frame removes a full corpus explode+shuffle from
-    # the gate (values unchanged — shingle_set is a pure per-row
-    # function, oracle hash-proved). persist → consume → unpersist:
-    # the 1-row gate verdict is materialized eagerly below so the
-    # corpus-scale shingle cache releases before return instead of
-    # pinning blocks for the session.
-    sh = DD.shingle_set(d).persist()
-    # explicit opt-in to the exact quadratic path: this gate EXISTS to
-    # price banding misses against ground truth, so the derived "auto"
-    # guard (which would rightly refuse the exact join at sf0.1) is
-    # overridden with the legacy bounded cap
-    exact = DD.ngram_jaccard_pairs(
-        d, threshold=0.5, max_join_pairs=50_000_000, shingles=sh
-    ).select("id_a", "id_b")
-    # The LSH arm joins the BANDING CANDIDATES, not the verified pairs
-    # (r13, guide §1.2): LSH-verified = candidates ∩ {J ≥ t} and the
-    # exact arm IS {J ≥ t} (same double-division Jaccard), so
-    # exact ⟕ candidates marks exactly the pairs the verified join
-    # marked — while the whole jaccard_verify stage (candidate-id
-    # broadcast prune + two shingle joins + two size joins,
-    # re-deriving intersections the exact arm already computed)
-    # drops out of the gate. What the gate certifies is unchanged:
-    # recall of the (16, 4) banding against ground truth. The verify
-    # arithmetic itself stays oracle-gated by doc_minhash_lsh_dedup.
-    cand = (
-        DD.lsh_candidate_pairs(
-            DD.minhash_signatures(sh, "doc_id", DD.NUM_HASHES, DD.BAND_ROWS),
-            "doc_id",
-        )
-        .withColumn("hit", F.lit(1))
-    )
-    out = (
-        exact.join(cand, ["id_a", "id_b"], "left_outer")
-        .agg(
-            F.lit(DD.NUM_HASHES).alias("num_hashes"),
-            F.lit(DD.BAND_ROWS).alias("band_rows"),
-            F.count(F.lit(1)).cast("long").alias("n_exact_pairs"),
-            # degenerate corpus (zero exact pairs): recall is vacuously
-            # 1.0 — there is nothing for the banding to miss.  Without
-            # the guard Spark yields NULL (sum-over-empty / 0) while
-            # DuckDB's 0/0 double division can yield NaN, flapping the
-            # gate hash on that input class.
-            F.when(F.count(F.lit(1)) == 0, F.lit(1.0))
-            .otherwise(
-                F.round(
-                    F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                    / F.count(F.lit(1)).cast("double"),
-                    6,
-                )
+    # one cached shingle build for BOTH arms (guide §1.2): the exact and
+    # LSH pipelines consume the identical shingle_set(d); sharing it
+    # removes a full corpus explode+shuffle from the gate (values
+    # unchanged — shingle_set is a pure per-row function, oracle
+    # hash-proved).
+    sh = DD.shingle_set(d)
+    with cached(sh):
+        # explicit opt-in to the exact quadratic path: this gate EXISTS to
+        # price banding misses against ground truth, so the derived "auto"
+        # guard (which would rightly refuse the exact join at sf0.1) is
+        # overridden with the legacy bounded cap
+        exact = DD.ngram_jaccard_pairs(
+            d, threshold=0.5, max_join_pairs=50_000_000, shingles=sh
+        ).select("id_a", "id_b")
+        # The LSH arm joins the BANDING CANDIDATES, not the verified pairs
+        # (guide §1.2): LSH-verified = candidates ∩ {J ≥ t} and the
+        # exact arm IS {J ≥ t} (same double-division Jaccard), so
+        # exact ⟕ candidates marks exactly the pairs the verified join
+        # marked — while the whole jaccard_verify stage (candidate-id
+        # broadcast prune + two shingle joins + two size joins,
+        # re-deriving intersections the exact arm already computed)
+        # drops out of the gate. What the gate certifies is unchanged:
+        # recall of the (16, 4) banding against ground truth. The verify
+        # arithmetic itself stays oracle-gated by doc_minhash_lsh_dedup.
+        cand = (
+            DD.lsh_candidate_pairs(
+                DD.minhash_signatures(sh, "doc_id", DD.NUM_HASHES, DD.BAND_ROWS),
+                "doc_id",
             )
-            .alias("recall"),
+            .withColumn("hit", F.lit(1))
         )
-        .withColumn("meets_bound", F.col("recall") >= 0.70)
-        .localCheckpoint(eager=True)
-    )
-    sh.unpersist()
-    return out
+        return (
+            exact.join(cand, ["id_a", "id_b"], "left_outer")
+            .agg(
+                F.lit(DD.NUM_HASHES).alias("num_hashes"),
+                F.lit(DD.BAND_ROWS).alias("band_rows"),
+                F.count(F.lit(1)).cast("long").alias("n_exact_pairs"),
+                # degenerate corpus (zero exact pairs): recall is vacuously
+                # 1.0 — there is nothing for the banding to miss.  Without
+                # the guard Spark yields NULL (sum-over-empty / 0) while
+                # DuckDB's 0/0 double division can yield NaN, flapping the
+                # gate hash on that input class.
+                F.when(F.count(F.lit(1)) == 0, F.lit(1.0))
+                .otherwise(
+                    F.round(
+                        F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
+                        / F.count(F.lit(1)).cast("double"),
+                        6,
+                    )
+                )
+                .alias("recall"),
+            )
+            .withColumn("meets_bound", F.col("recall") >= 0.70)
+            .localCheckpoint(eager=True)
+        )
 
 
 MINHASH_RECALL_SQL = f"""
@@ -1554,57 +1551,55 @@ def minhash_recall_gate_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure banding misses, same as the full gate."""
     d = load_table(spark, sf_dir, "documents")
     sample = d.filter(F.col("doc_id") % 5 == 0)
-    # one shingle build for both arms (r13 opt, guide §1.2):
-    # shingle_set is per-row, so the sample's shingles are exactly the
-    # full frame filtered on doc_id — the exact arm reuses the LSH
-    # arm's persisted corpus shingles instead of re-exploding the
-    # sample (oracle hash-proved). persist → consume → unpersist, same
-    # as the full gate: the verdict materializes eagerly below.
-    sh = DD.shingle_set(d).persist()
-    exact = DD.ngram_jaccard_pairs(
-        sample,
-        threshold=0.5,
-        max_join_pairs=50_000_000,
-        shingles=sh.filter(F.col("doc_id") % 5 == 0),
-    ).select("id_a", "id_b")
-    # banding candidates instead of verified pairs, restricted to
-    # sampled endpoints BEFORE the comparison join (see the full
-    # gate): hits are identical (verified = candidates ∩ exact, and
-    # the exact arm is the sample's ground truth), and the full-corpus
-    # verify stage — the most expensive part of the old LSH arm —
-    # drops out entirely.
-    cand = (
-        DD.lsh_candidate_pairs(
-            DD.minhash_signatures(sh, "doc_id", DD.NUM_HASHES, DD.BAND_ROWS),
-            "doc_id",
-        )
-        .filter((F.col("id_a") % 5 == 0) & (F.col("id_b") % 5 == 0))
-        .withColumn("hit", F.lit(1))
-    )
-    out = (
-        exact.join(cand, ["id_a", "id_b"], "left_outer")
-        .agg(
-            F.lit(5).alias("sample_mod"),
-            F.count(F.lit(1)).cast("long").alias("n_exact_pairs"),
-            # zero exact pairs in the sample (possible on a tiny or
-            # duplicate-free corpus): recall is vacuously 1.0 on both
-            # engines instead of Spark-NULL vs DuckDB-NaN (see the full
-            # gate's guard)
-            F.when(F.count(F.lit(1)) == 0, F.lit(1.0))
-            .otherwise(
-                F.round(
-                    F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                    / F.count(F.lit(1)).cast("double"),
-                    6,
-                )
+    # one cached shingle build for both arms (guide §1.2): shingle_set
+    # is per-row, so the sample's shingles are exactly the full frame
+    # filtered on doc_id — the exact arm reuses the LSH arm's cached
+    # corpus shingles instead of re-exploding the sample (oracle
+    # hash-proved).
+    sh = DD.shingle_set(d)
+    with cached(sh):
+        exact = DD.ngram_jaccard_pairs(
+            sample,
+            threshold=0.5,
+            max_join_pairs=50_000_000,
+            shingles=sh.filter(F.col("doc_id") % 5 == 0),
+        ).select("id_a", "id_b")
+        # banding candidates instead of verified pairs, restricted to
+        # sampled endpoints BEFORE the comparison join (see the full
+        # gate): hits are identical (verified = candidates ∩ exact, and
+        # the exact arm is the sample's ground truth), and the full-corpus
+        # verify stage — the most expensive part of the old LSH arm —
+        # drops out entirely.
+        cand = (
+            DD.lsh_candidate_pairs(
+                DD.minhash_signatures(sh, "doc_id", DD.NUM_HASHES, DD.BAND_ROWS),
+                "doc_id",
             )
-            .alias("recall"),
+            .filter((F.col("id_a") % 5 == 0) & (F.col("id_b") % 5 == 0))
+            .withColumn("hit", F.lit(1))
         )
-        .withColumn("meets_bound", F.col("recall") >= 0.70)
-        .localCheckpoint(eager=True)
-    )
-    sh.unpersist()
-    return out
+        return (
+            exact.join(cand, ["id_a", "id_b"], "left_outer")
+            .agg(
+                F.lit(5).alias("sample_mod"),
+                F.count(F.lit(1)).cast("long").alias("n_exact_pairs"),
+                # zero exact pairs in the sample (possible on a tiny or
+                # duplicate-free corpus): recall is vacuously 1.0 on both
+                # engines instead of Spark-NULL vs DuckDB-NaN (see the full
+                # gate's guard)
+                F.when(F.count(F.lit(1)) == 0, F.lit(1.0))
+                .otherwise(
+                    F.round(
+                        F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
+                        / F.count(F.lit(1)).cast("double"),
+                        6,
+                    )
+                )
+                .alias("recall"),
+            )
+            .withColumn("meets_bound", F.col("recall") >= 0.70)
+            .localCheckpoint(eager=True)
+        )
 
 
 MINHASH_RECALL_SAMPLED_SQL = f"""
@@ -2608,19 +2603,13 @@ def split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = F.when(pref < "e6", "train").when(pref < "f3", "val").otherwise(
         "test"
     )
-    # persist → consume → unpersist: ss feeds three branches (totals +
-    # both join sides) — the distinct (split, shingle) set would
-    # otherwise recompute the corpus-scale explode per branch. The
-    # 3-row matrix materializes eagerly below so the cache releases
-    # before return.
-    ss = (
-        d.select(
-            split.alias("split"),
-            F.explode(TX.word_shingles("text", 3)).alias("shingle"),
-        )
-        .distinct()
-        .persist()
-    )
+    # ss is cached: it feeds three branches (totals + both join sides)
+    # — the distinct (split, shingle) set would otherwise recompute the
+    # corpus-scale explode per branch.
+    ss = d.select(
+        split.alias("split"),
+        F.explode(TX.word_shingles("text", 3)).alias("shingle"),
+    ).distinct()
     tot = ss.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
     a = ss.select(F.col("split").alias("split_a"), "shingle")
     b = ss.select(F.col("split").alias("split_b"), "shingle")
@@ -2632,24 +2621,23 @@ def split_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ta = F.broadcast(tot.select(F.col("split").alias("split_a"), F.col("n").alias("n_a")))
     tb = F.broadcast(tot.select(F.col("split").alias("split_b"), F.col("n").alias("n_b")))
-    out = (
-        shared.join(ta, "split_a")
-        .join(tb, "split_b")
-        .select(
-            "split_a",
-            "split_b",
-            "n_shared",
-            "n_a",
-            "n_b",
-            (
-                F.col("n_shared").cast("double")
-                / F.least("n_a", "n_b").cast("double")
-            ).alias("containment"),
+    with cached(ss):
+        return (
+            shared.join(ta, "split_a")
+            .join(tb, "split_b")
+            .select(
+                "split_a",
+                "split_b",
+                "n_shared",
+                "n_a",
+                "n_b",
+                (
+                    F.col("n_shared").cast("double")
+                    / F.least("n_a", "n_b").cast("double")
+                ).alias("containment"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    ss.unpersist()
-    return out
 
 
 SPLIT_LEAKAGE_SQL = f"""
@@ -3093,22 +3081,20 @@ def doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via 32-bit SimHash, 4 bit-bands, Hamming <= 3.
     Band blocking is EXACT here (pigeonhole: 3 flipped bits leave one
     of 4 bands intact), so this is a no-recall-loss sub-quadratic
-    companion to ``doc_minhash_lsh_dedup``; see
-    operators.dedup.simhash_near_dups for the scale shape."""
+    companion to ``doc_minhash_lsh_dedup``.
+
+    Scale shape: the signature is one tokenize+vote pass per document;
+    band blocking turns the pair search into equi-joins on (band,
+    value), so cost is Σ bucket² rather than n²."""
     d = load_table(spark, sf_dir, "documents")
-    # composed from the two public operators rather than the
-    # simhash_near_dups wrapper so the signature frame can persist per
-    # the hamming_near_dup_pairs caller contract: the band self-join
-    # references it twice, and uncached each reference re-runs the
-    # full tokenize+vote pipeline. The cache is (doc_id, simhash) —
-    # 16 bytes per document. persist → consume → unpersist: the pair
-    # output materializes eagerly so the cache releases before return.
-    sig = DD.simhash(d, bits=32).persist()
-    out = DD.hamming_near_dup_pairs(
-        sig, sig_col="simhash", bits=32, bands=4, max_hamming=3
-    ).localCheckpoint(eager=True)
-    sig.unpersist()
-    return out
+    # the signature frame is cached per the hamming_near_dup_pairs
+    # caller contract: the band self-join references it twice, and
+    # uncached each reference re-runs the full tokenize+vote pipeline.
+    # The cache is (doc_id, simhash) — 16 bytes per document.
+    with cached(DD.simhash(d, bits=32)) as sig:
+        return DD.hamming_near_dup_pairs(
+            sig, sig_col="simhash", bits=32, bands=4, max_hamming=3
+        ).localCheckpoint(eager=True)
 
 
 _SIMHASH32_VOTES = ",\n".join(

@@ -19,6 +19,7 @@ from data_migration_tool_spark.functions.vectors import (
 )
 from data_migration_tool_spark.operators import dedup as DD
 from data_migration_tool_spark.operators import similarity as SIM
+from data_migration_tool_spark.partitioning import cached
 from data_migration_tool_spark.tables import load_table
 
 
@@ -350,14 +351,13 @@ def ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means fits 8 cells on the embedding corpus (deterministic hash
     init, 3 Lloyd iterations — operators/similarity.kmeans_fit_exact),
     then queries search only their own cell, ranked by integer
-    squared-L2. Every quantity is an int64, so since round 5 this sits
-    in the exact-hash oracle lane: the DuckDB twin unrolls the same 3
-    Lloyd rounds over the same quantized coordinates (float k-means
-    sums in partition order and could never be cross-engine exact —
-    that lane remains ``kmeans_fit``, unit-tested on separated blobs)."""
+    squared-L2. Every quantity is an int64, so this sits in the
+    exact-hash oracle lane: the DuckDB twin unrolls the same 3 Lloyd
+    rounds over the same quantized coordinates (float k-means sums in
+    partition order and could never be cross-engine exact)."""
     e = load_table(spark, sf_dir, "embeddings")
     # as_rows: the trained centroids are already driver state — skip
-    # the createDataFrame → collect round trip (r14, VERDICT r13 #5)
+    # the createDataFrame → collect round trip
     cents = SIM.kmeans_fit_exact(e, k=8, iters=3, as_rows=True)
     queries = e.filter(F.col("vec_id") < 10)
     return SIM.ivf_exact_topk(queries, e, cents, k=3)
@@ -488,15 +488,12 @@ def emb_lsh_near_dups(
     signs = SIM.hyperplane_signs(n_bits=SIM.LSH_MAX_BITS, dim=64)
     stats = e.agg(F.count(F.lit(1)).alias("n_vecs"))
     mask_expr = _lsh_mask_expr()
-    # persist → consume → unpersist: the frame feeds both self-join
-    # sides, and uncached each side re-runs the 16x64 hyperplane
-    # dot-product expression over the corpus (guide §1.2). The cache
-    # is (vec_id, embedding, bucket) — the same bytes the bucket-keyed
-    # join shuffles anyway — and releases before return (the pair
-    # output materializes eagerly; a cache left behind has no
-    # reachable unpersist and would pin corpus-scale blocks for the
-    # session).
-    bk = (
+    # the bucketed frame is cached: it feeds both self-join sides, and
+    # uncached each side re-runs the 16x64 hyperplane dot-product
+    # expression over the corpus (guide §1.2). The cache is (vec_id,
+    # embedding, bucket) — the same bytes the bucket-keyed join
+    # shuffles anyway.
+    bucketed = (
         e.select(
             "vec_id",
             "embedding",
@@ -508,28 +505,25 @@ def emb_lsh_near_dups(
             "embedding",
             F.col("b_full").bitwiseAND(F.col("mask")).alias("bucket"),
         )
-        .persist()
     )
-    b = bk
-    if max_bucket_size is not None:
-        # hot-bucket valve (default OFF: exact LSH semantics, matching
-        # the SQL oracle) — see similarity.cap_bucket_size
-        b = SIM.cap_bucket_size(b, "bucket", max_bucket_size)
-    a = b.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"), "bucket"
-    )
-    c = b.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"), "bucket"
-    )
-    out = (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine_similarity("v_a", "v_b") >= 0.45)
-        .select("id_a", "id_b", "bucket")
-        .localCheckpoint(eager=True)
-    )
-    bk.unpersist()
-    return out
+    with cached(bucketed) as b:
+        if max_bucket_size is not None:
+            # hot-bucket valve (default OFF: exact LSH semantics,
+            # matching the SQL oracle) — see similarity.cap_bucket_size
+            b = SIM.cap_bucket_size(b, "bucket", max_bucket_size)
+        a = b.select(
+            F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"), "bucket"
+        )
+        c = b.select(
+            F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"), "bucket"
+        )
+        return (
+            a.join(c, "bucket")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .filter(cosine_similarity("v_a", "v_b") >= 0.45)
+            .select("id_a", "id_b", "bucket")
+            .localCheckpoint(eager=True)
+        )
 
 
 def _lsh_pair_ctes() -> str:
@@ -645,9 +639,9 @@ def emb_lsh_hot_bucket_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot break the Σ bucket² contract at 100 TB; the exact lane's
     groupBy is linear in hot-bucket rows. The two route branches
     recompute the sized bucketing (one extra 16-dot-product scan —
-    see the inline note for why neither persist nor localCheckpoint
-    wins here); a materializing cluster pipeline would share it via
-    persist → consume → unpersist."""
+    see the inline note for why neither a cache nor a localCheckpoint
+    wins here); a materializing cluster pipeline would share it through
+    ``partitioning.cached``."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     bounds = e.agg(
         F.min("vec_id").alias("mn"), F.max("vec_id").alias("mx")
@@ -678,13 +672,11 @@ def emb_lsh_hot_bucket_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # the two route branches recompute the sized bucketing rather than
-    # persist it: a CacheManager persist has no reachable unpersist
-    # after this function returns (it would pin corpus-scale blocks for
-    # the session), and a lazy localCheckpoint measured pathological at
-    # gate SF (139 s vs 11 s at sf0.01 — the checkpoint write dominates
-    # tiny inputs). The recompute costs one extra scan (3.3 s vs 2.2 s
-    # at sf0.1); a materializing cluster pipeline would wrap this in
-    # persist → consume → unpersist instead.
+    # cache it: this lane returns a lazy frame, so a cache could not be
+    # consumed before its release, and a lazy localCheckpoint measured
+    # pathological at gate SF (139 s vs 11 s at sf0.01 — the checkpoint
+    # write dominates tiny inputs). The recompute costs one extra scan
+    # (3.3 s vs 2.2 s at sf0.1).
     sized = SIM.bucket_sizes(b, "bucket")
     cold = sized.filter(F.col("__bsz") <= HOT_BUCKET_CAP).drop("__bsz")
     hot = sized.filter(F.col("__bsz") > HOT_BUCKET_CAP).drop("__bsz")
@@ -1403,43 +1395,7 @@ def embedding_pca_power_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     n and max|q|), so crossing it refuses loudly instead of silently
     wrapping."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qrow = emb.select(
-        "vec_id",
-        F.expr(
-            f"transform(embedding, v -> "
-            f"CAST(FLOOR(CAST(v AS DOUBLE) * {_PCA_Q}) AS BIGINT))"
-        ).alias("qs"),
-    ).persist()
-    n = emb.count()
-    _stats = (
-        qrow.select(F.posexplode("qs").alias("pos", "q"))
-        .groupBy("pos")
-        .agg(
-            F.sum("q").cast("long").alias("s"),
-            F.max(F.abs(F.col("q"))).alias("qm"),
-        )
-        .collect()
-    )
-    s = {r["pos"]: r["s"] for r in _stats}
-    _pca_int64_guard(
-        n,
-        max((r["qm"] for r in _stats), default=0),
-        "embedding_pca_power_exact family",
-    )
-    g = {
-        (r["i"], r["j"]): r["g"]
-        for r in qrow.select(F.posexplode("qs").alias("i", "qi"), "qs")
-        .select("i", "qi", F.posexplode("qs").alias("j", "qj"))
-        .groupBy("i", "j")
-        .agg(F.sum(F.col("qi") * F.col("qj")).cast("long").alias("g"))
-        .collect()
-    }
-    d = len(s)
-    m = {
-        (i, j): _tdiv(n * g[(i, j)] - s[i] * s[j], _PCA_D)
-        for i in range(d)
-        for j in range(d)
-    }
+    qrow, d, m = _pca_scatter(emb)
     x = [_pca_x0(i) for i in range(d)]
     for _ in range(_PCA_ROUNDS):
         y = [sum(m[(i, j)] * x[j] for j in range(d)) for i in range(d)]
@@ -1453,8 +1409,55 @@ def embedding_pca_power_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"0L, (acc, t) -> acc + t) AS BIGINT)"
         ).alias("pc1_raw"),
     )
-    qrow.unpersist()
     return out
+
+
+def _pca_scatter(emb: DataFrame):
+    """``(qrow, d, m)`` for the exact PCA lanes: the quantized rows
+    ``qrow`` (vec_id, qs), the dimension and the integer scatter matrix
+    ``m[(i, j)]`` from the row count, per-dimension sums and Gramian,
+    with the int64 bound enforced. ``qrow`` is cached while the two
+    moment aggregates collect; the caller's projection over it is a
+    pure map."""
+    qs = emb.select(
+        "vec_id",
+        F.expr(
+            f"transform(embedding, v -> "
+            f"CAST(FLOOR(CAST(v AS DOUBLE) * {_PCA_Q}) AS BIGINT))"
+        ).alias("qs"),
+    )
+    with cached(qs) as qrow:
+        n = emb.count()
+        stats = (
+            qrow.select(F.posexplode("qs").alias("pos", "q"))
+            .groupBy("pos")
+            .agg(
+                F.sum("q").cast("long").alias("s"),
+                F.max(F.abs(F.col("q"))).alias("qm"),
+            )
+            .collect()
+        )
+        _pca_int64_guard(
+            n,
+            max((r["qm"] for r in stats), default=0),
+            "embedding_pca_power_exact family",
+        )
+        g = {
+            (r["i"], r["j"]): r["g"]
+            for r in qrow.select(F.posexplode("qs").alias("i", "qi"), "qs")
+            .select("i", "qi", F.posexplode("qs").alias("j", "qj"))
+            .groupBy("i", "j")
+            .agg(F.sum(F.col("qi") * F.col("qj")).cast("long").alias("g"))
+            .collect()
+        }
+    s = {r["pos"]: r["s"] for r in stats}
+    d = len(s)
+    m = {
+        (i, j): _tdiv(n * g[(i, j)] - s[i] * s[j], _PCA_D)
+        for i in range(d)
+        for j in range(d)
+    }
+    return qrow, d, m
 
 
 def _pca_round_ctes(k: int) -> str:
@@ -1528,43 +1531,7 @@ def embedding_pca_power2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection against the two parsed literal direction arrays (zero
     joins/exchanges in the final plan)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qrow = emb.select(
-        "vec_id",
-        F.expr(
-            f"transform(embedding, v -> "
-            f"CAST(FLOOR(CAST(v AS DOUBLE) * {_PCA_Q}) AS BIGINT))"
-        ).alias("qs"),
-    ).persist()
-    n = emb.count()
-    _stats = (
-        qrow.select(F.posexplode("qs").alias("pos", "q"))
-        .groupBy("pos")
-        .agg(
-            F.sum("q").cast("long").alias("s"),
-            F.max(F.abs(F.col("q"))).alias("qm"),
-        )
-        .collect()
-    )
-    s = {r["pos"]: r["s"] for r in _stats}
-    _pca_int64_guard(
-        n,
-        max((r["qm"] for r in _stats), default=0),
-        "embedding_pca_power_exact family",
-    )
-    g = {
-        (r["i"], r["j"]): r["g"]
-        for r in qrow.select(F.posexplode("qs").alias("i", "qi"), "qs")
-        .select("i", "qi", F.posexplode("qs").alias("j", "qj"))
-        .groupBy("i", "j")
-        .agg(F.sum(F.col("qi") * F.col("qj")).cast("long").alias("g"))
-        .collect()
-    }
-    d = len(s)
-    m = {
-        (i, j): _tdiv(n * g[(i, j)] - s[i] * s[j], _PCA_D)
-        for i in range(d)
-        for j in range(d)
-    }
+    qrow, d, m = _pca_scatter(emb)
     # phase 1: identical recurrence to embedding_pca_power_exact
     x = [_pca_x0(i) for i in range(d)]
     for _ in range(_PCA2_P1_ROUNDS):
@@ -1595,7 +1562,6 @@ def embedding_pca_power2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"0L, (acc, t) -> acc + t) AS BIGINT)"
         ).alias("pc2_raw"),
     )
-    qrow.unpersist()
     return out
 
 

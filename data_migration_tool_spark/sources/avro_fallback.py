@@ -292,7 +292,7 @@ def _check_codec(codec: str) -> None:
 
 def decode_blocks(data: bytes, schema: dict, codec: str, sync: bytes) -> list[dict]:
     """Decode a byte range that starts on a block boundary and ends
-    right after a sync marker — the per-task unit of the split read."""
+    right after a sync marker."""
     r = _Reader(data)
     rows: list[dict] = []
     while not r.at_end():
@@ -325,8 +325,8 @@ def write_avro(
 ) -> None:
     """Driver-side OCF writer (test fixtures / small staging hand-offs;
     big writes belong to the connector or parquet). ``block_rows``
-    frames the output into multiple sync-delimited blocks — the unit
-    the split reader parallelizes over (default: one block)."""
+    frames the output into multiple sync-delimited blocks (default:
+    one block)."""
     w = _Writer()
     w.write(MAGIC)
     meta = {
@@ -496,93 +496,3 @@ def _rows_to_pdf(pd, rows: list[dict], cols: list[str], ts_cols: list[str]):
     for c in ts_cols:
         pdf[c] = pd.to_datetime(pdf[c])
     return pdf
-
-
-# ------------------------------------------------------- split read path
-
-def _read_zigzag_varint(fh) -> int:
-    acc = shift = 0
-    while True:
-        b = fh.read(1)
-        if not b:
-            raise EOFError("truncated avro block header")
-        acc |= (b[0] & 0x7F) << shift
-        if not b[0] & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
-
-
-def scan_block_index(path: str) -> tuple[dict, str, bytes, list[tuple[int, int, int]]]:
-    """Driver-side block index of ONE OCF file: walk the sync-framed
-    blocks by seeking — each step reads only the two varint headers
-    (~20 bytes) and skips the data, so indexing costs I/O proportional
-    to the BLOCK COUNT, not the byte size. Returns
-    (schema, codec, sync, [(start_offset, end_offset, row_count)]).
-    The header is parsed from the first 1 MB (any sane metadata fits)."""
-    size = os.path.getsize(path)
-    with open(path, "rb") as fh:
-        head = fh.read(min(size, 1 << 20))
-        schema, codec, sync, pos = parse_header(head)
-        _check_codec(codec)
-        fh.seek(pos)
-        blocks: list[tuple[int, int, int]] = []
-        while fh.tell() < size:
-            start = fh.tell()
-            count = _read_zigzag_varint(fh)
-            bsize = _read_zigzag_varint(fh)
-            fh.seek(bsize + 16, os.SEEK_CUR)  # data + sync marker
-            blocks.append((start, fh.tell(), count))
-    return schema, codec, sync, blocks
-
-
-def read_avro_split(
-    spark: SparkSession, path: str, target_split_bytes: int = 32 << 20
-) -> DataFrame:
-    """Parallel fallback read of ONE oversized OCF file: the driver
-    indexes the sync-framed blocks (``scan_block_index``), coalesces
-    contiguous blocks into ~``target_split_bytes`` ranges, and each
-    task seeks + decodes its own range — so a single multi-GB agent
-    hand-off file no longer serializes on one Python decode task the
-    way ``read_avro``'s one-task-per-file shape does. Same
-    DRIVER-LOCAL path constraint as ``read_avro`` (tasks re-open the
-    path, so the file must be visible where executors run — true in
-    local mode and on shared filesystems)."""
-    avro_schema, codec, sync, blocks = scan_block_index(path)
-    out_schema = spark_schema(avro_schema)
-    cols = [f.name for f in out_schema.fields]
-    ts_cols = _timestamp_cols(out_schema)
-
-    splits: list[tuple[int, int]] = []
-    cur_start = cur_end = None
-    for s, e, _count in blocks:
-        if cur_start is None:
-            cur_start, cur_end = s, e
-        elif cur_end - cur_start >= target_split_bytes:
-            splits.append((cur_start, cur_end))
-            cur_start, cur_end = s, e
-        else:
-            cur_end = e
-    if cur_start is not None:
-        splits.append((cur_start, cur_end))
-    if not splits:
-        return spark.createDataFrame([], out_schema)
-
-    schema_json = json.dumps(avro_schema)
-
-    def decode_ranges(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        schema = json.loads(schema_json)
-        for pdf in batches:
-            for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                with open(p, "rb") as fh:
-                    fh.seek(int(s))
-                    data = fh.read(int(e) - int(s))
-                rows = decode_blocks(data, schema, codec, sync)
-                yield _rows_to_pdf(pd, rows, cols, ts_cols)
-
-    sdf = spark.createDataFrame(
-        [(path, s, e) for s, e in splits], "path string, start long, end long"
-    ).repartition(len(splits))
-    return sdf.mapInPandas(decode_ranges, out_schema)

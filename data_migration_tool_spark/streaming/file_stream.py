@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_migration_tool_spark.partitioning import scoped_conf
-from data_migration_tool_spark.tables import stream_table
 
 # How long an AvailableNow drain may run before it is stopped and refused.
 DRAIN_TIMEOUT_S = 300
@@ -212,19 +211,3 @@ def deduped_stream(
         df = df.withWatermark(ts_col, watermark)
         return df.dropDuplicatesWithinWatermark(key_cols)
     return df.dropDuplicates(key_cols)
-
-
-def run_events_stream_demo(
-    spark: SparkSession,
-    source_parquet: str,
-    work_dir: str,
-) -> list:
-    """End-to-end Structured Streaming run over the events table: copy
-    the parquet in as a 'landed file', stream it with AvailableNow,
-    window-aggregate into a memory sink, return the rows."""
-    landing = os.path.join(work_dir, "landing")
-    os.makedirs(landing, exist_ok=True)
-    shutil.copy(source_parquet, os.path.join(landing, "events.parquet"))
-    agg = windowed_event_counts(stream_table(spark, landing))
-    rows = drain(agg, "events_windows", work_dir, landing, output_mode="complete")
-    return rows.orderBy("window_start", "event_type").collect()

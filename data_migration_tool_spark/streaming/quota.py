@@ -8,22 +8,13 @@ micro-batch (update mode) — with a single AvailableNow drain the
 emission is final and equals the batch window-cumsum definition, which
 is exactly what the SQL oracle replicates.
 
-Two implementations, same contract:
+``quota_stream`` implements it on ``applyInPandasWithState``, which
+works everywhere this engine runs; the gated registry query uses it.
+Spark 4's State-V2 processor (``transformWithStateInPandas``) needs
+``google.protobuf`` for its Python state protocol, which this container
+does not ship.
 
-- ``quota_stream`` — ``applyInPandasWithState`` (works everywhere this
-  engine runs; used by the gated registry query).
-- ``quota_stream_v2`` — ``transformWithStateInPandas``, Spark 4's
-  State-V2 arbitrary-state processor (SPARK-49564). **Environment
-  block, attempt recorded 2026-08-14:** the State-V2 Python protocol
-  needs ``google.protobuf`` (``pyspark/sql/streaming/proto/
-  StateMessage_pb2.py``), which this container does not ship and pip
-  installs are unavailable; the driver worker dies at init with
-  ``ModuleNotFoundError: No module named 'google'``. The probe below
-  raises the same loud, named error at call time. On a cluster with
-  protobuf present the V2 path runs unchanged (pytest covers it
-  conditionally).
-
-100 TB state argument (both paths): state per key is THREE integers
+100 TB state argument: state per key is THREE integers
 (running cents, event count, throttled count) — no event retention;
 the state store scales with |active users|, not stream volume. Cents
 arithmetic keeps the running sum integer-exact so parallelism never
@@ -107,70 +98,5 @@ def quota_stream(events_stream: DataFrame) -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _state_v2_available() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def quota_stream_v2(events_stream: DataFrame) -> DataFrame:
-    """Same contract on ``transformWithStateInPandas`` (State V2)."""
-    if not _state_v2_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf for its "
-            "state protocol (pyspark/sql/streaming/proto); this "
-            "environment does not provide it — use quota_stream "
-            "(applyInPandasWithState) instead, or install protobuf."
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class QuotaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(
-            self,
-            key: tuple[Any, ...],
-            rows: Iterator[pd.DataFrame],
-            timerValues: Any,
-        ) -> Iterator[pd.DataFrame]:
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if pdf.empty:
-                return
-            prior = self._state.get() if self._state.exists() else None
-            cum, n, thr = _accumulate(
-                tuple(prior) if prior is not None else (0, 0, 0), pdf
-            )
-            self._state.update((int(cum), int(n), int(thr)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "n_throttled": [thr],
-                    "sum_cents": [cum],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events_stream.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=QuotaProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )

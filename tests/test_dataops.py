@@ -251,16 +251,11 @@ def test_token_stats_and_quality(spark):
 
 def test_multimodal_feature_extract(spark):
     media = MM.synthetic_media(spark, n=30)
-    feats = MM.extract_features(media).collect()
+    feats = {r["media_id"]: tuple(r) for r in MM.extract_media_features(media).collect()}
     assert len(feats) == 30
-    by_id = {r["media_id"]: r for r in feats}
-    assert len(by_id[0]["features"]) == 8
-    assert all(0.0 <= x <= 1.0 for x in by_id[0]["features"])
-    # deterministic: same content → same sha and features
-    f2 = MM.extract_features(media).collect()
-    assert {r["media_id"]: r["content_sha"] for r in f2} == {
-        r["media_id"]: r["content_sha"] for r in feats
-    }
+    # deterministic: same content → same sha and decoded fields
+    again = {r["media_id"]: tuple(r) for r in MM.extract_media_features(media).collect()}
+    assert again == feats
 
 
 def test_media_codec_round_trip():
@@ -364,20 +359,6 @@ def test_salted_agg_equals_plain(spark, tables):
         F.count(F.lit(1)).alias("n"), F.sum(qty).cast("double").alias("s")
     )
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_broadcast_join_equals_plain(spark, tables):
-    from data_migration_tool_spark.operators.skew import salted_broadcast_join
-
-    l = tables["lineitem"].withColumnRenamed("l_suppkey", "s_suppkey")
-    s = tables["supplier"]
-    salted = salted_broadcast_join(l, s, "s_suppkey", n_salts=8)
-    plain = l.join(s, "s_suppkey")
-    assert salted.count() == plain.count()
-    key = lambda r: (r["l_orderkey"], r["l_linenumber"])  # noqa: E731
-    a = sorted((key(r), r["s_name"]) for r in salted.collect())
-    b = sorted((key(r), r["s_name"]) for r in plain.collect())
-    assert a == b
 
 
 def test_upsert_latest_semantics(spark):
@@ -524,45 +505,6 @@ def test_scd2_history_semantics(spark):
         (1, 4, "b", 4, None, True),
         (2, 1, "x", 1, None, True),
     ]
-
-
-def test_kmeans_recovers_separated_clusters(spark):
-    """Three well-separated blobs → 3 trained centroids, one per blob,
-    and assignment routes every point to its own blob's centroid.
-    Determinism: two runs produce identical centroids."""
-    import numpy as np
-
-    from data_migration_tool_spark.operators.similarity import (
-        ivf_assign,
-        kmeans_fit,
-    )
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for b, base in enumerate([[10, 0, 0], [0, 10, 0], [0, 0, 10]]):
-        for i in range(20):
-            v = (np.array(base, dtype=float) + rng.normal(0, 0.3, 3)).tolist()
-            rows.append((b * 100 + i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    cents = kmeans_fit(df, k=3, iters=4)
-    assert cents.count() == 3
-
-    assigned = ivf_assign(df, cents)
-    cells_per_blob = (
-        assigned.withColumn("blob", (F.col("vec_id") / 100).cast("int"))
-        .groupBy("blob")
-        .agg(F.countDistinct("cell_id").alias("n_cells"))
-        .collect()
-    )
-    assert all(r["n_cells"] == 1 for r in cells_per_blob)
-    blobs_per_cell = assigned.select("cell_id").distinct().count()
-    assert blobs_per_cell == 3
-
-    again = kmeans_fit(df, k=3, iters=4)
-    a = sorted(map(tuple, cents.collect()))
-    b = sorted(map(tuple, again.collect()))
-    assert a == b
 
 
 def test_kmeans_fit_exact_matches_python_integer_reference(spark):
@@ -1732,14 +1674,15 @@ def test_simhash_near_dups_exact_vs_bruteforce(spark):
         rows.append((i, " ".join(toks)))
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
+    sig = DD.simhash(df, bits=32)
     got = {
         (r.id_a, r.id_b): r.hamming
-        for r in DD.simhash_near_dups(df, bits=32, bands=4, max_hamming=3).collect()
+        for r in DD.hamming_near_dup_pairs(
+            sig, sig_col="simhash", bits=32, bands=4, max_hamming=3
+        ).collect()
     }
 
-    sigs = {
-        r.doc_id: r.simhash for r in DD.simhash(df, bits=32).collect()
-    }
+    sigs = {r.doc_id: r.simhash for r in sig.collect()}
     want = {}
     ids = sorted(sigs)
     for x in ids:

@@ -26,7 +26,12 @@ def test_all_queries_run_sf0001(spark):
     """Every lane runs at sf0.001, and every oracle-backed lane matches
     its DuckDB oracle on rows, columns and the order-insensitive digest:
     the gate of ``tools/check_correctness.py``, through its own
-    ``table_digest`` and ``oracle_rows_via_pandas``."""
+    ``table_digest`` and ``oracle_rows_via_pandas``.
+
+    No lane leaves a DataFrame cache behind: after each lane's
+    ``builder()`` and ``collect()``, raised or not, Spark's cache
+    manager is empty. A leak is recorded and cleared, so one leak cannot
+    hide the next."""
     import duckdb
 
     from data_migration_tool_spark.tables import TPCH_TABLES, table_path
@@ -36,6 +41,8 @@ def test_all_queries_run_sf0001(spark):
     con = duckdb.connect()
     for t in TPCH_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(SF_DIR, t)}'")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     bad = []
     for name, builder in ent.queries().items():
         try:
@@ -45,6 +52,10 @@ def test_all_queries_run_sf0001(spark):
         except Exception as exc:  # noqa: BLE001
             bad.append((name, f"spark error: {str(exc)[:200]}"))
             continue
+        finally:
+            if not cache.isEmpty():
+                bad.append((name, "left a DataFrame cache behind"))
+                spark.catalog.clearCache()
         if name not in oracles:
             continue
         rel = con.sql(oracles[name])

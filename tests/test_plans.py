@@ -110,17 +110,31 @@ def test_q1_single_shuffle_with_map_side_combine(spark):
 
 def _pipeline_plan(spark, pipeline_fn, mode: str = "formatted") -> str:
     """Explain a builder's PRE-materialization frame. The media
-    builders return an eager localCheckpoint (the r13 persist→consume→
-    release discipline), so their query-level plan is a Scan
+    builders return an eager localCheckpoint taken inside their
+    ``partitioning.cached`` scope, so their query-level plan is a Scan
     ExistingRDD; the plan-shape pins live on the pipeline frame the
-    checkpoint consumed. Unpersists the pipeline's (unmaterialized)
-    caches before returning."""
-    out, caches = pipeline_fn(spark, SF_DIR)
+    checkpoint consumed. The pipeline's caches are returned uncached."""
+    out, _ = pipeline_fn(spark, SF_DIR)
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-    plan = out._jdf.queryExecution().explainString(jmode)
-    for c in caches:
-        c.unpersist()
-    return plan
+    return out._jdf.queryExecution().explainString(jmode)
+
+
+def test_media_builder_releases_its_cache_when_the_kernel_raises(spark, monkeypatch):
+    """A builder that raises after caching its blob corpus still leaves
+    Spark's cache manager empty: the cache scope releases on the raise
+    path, not only on return."""
+    from data_migration_tool_spark.operators import multimodal
+    from data_migration_tool_spark.plans import mediaq
+
+    def boom(*_a, **_k):
+        raise RuntimeError("kernel failed")
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    monkeypatch.setattr(multimodal, "resize_images", boom)
+    with pytest.raises(RuntimeError, match="kernel failed"):
+        mediaq.media_image_resize(spark, SF_DIR)
+    assert cache.isEmpty()
 
 
 def test_arrow_kernels_where_intended(spark):

@@ -439,39 +439,6 @@ def test_avro_fallback_aware_datetime_normalized_to_utc(tmp_path):
     assert rows[0]["ts"] == rows[1]["ts"] == naive_utc
 
 
-def test_avro_fallback_block_split_read(spark, tmp_path):
-    """An oversized single OCF file must parallelize: the driver walks
-    the sync-framed block index by seeking (bytes read ∝ block count),
-    coalesces blocks into byte-targeted splits, and tasks decode their
-    own ranges. Values must equal the serial whole-file decode."""
-    from data_migration_tool_spark.sources import avro_fallback as AF
-
-    schema = {
-        "type": "record",
-        "name": "r",
-        "fields": [{"name": "id", "type": "long"}, {"name": "s", "type": "string"}],
-    }
-    rows = [{"id": i, "s": f"row-{i:04d}" * 8} for i in range(1000)]
-    p = str(tmp_path / "big.avro")
-    AF.write_avro(rows, schema, p, block_rows=50)  # 20 blocks
-
-    _, _, _, blocks = AF.scan_block_index(p)
-    assert len(blocks) == 20
-    assert sum(c for _, _, c in blocks) == 1000
-    # block ranges tile the body contiguously
-    for (s0, e0, _), (s1, _, _) in zip(blocks, blocks[1:]):
-        assert e0 == s1
-
-    df = AF.read_avro_split(spark, p, target_split_bytes=4096)
-    got = sorted((r["id"], r["s"]) for r in df.collect())
-    assert got == [(r["id"], r["s"]) for r in rows]
-    assert df.rdd.getNumPartitions() > 1  # actually split, not one task
-
-    # serial decode agrees
-    _, serial = AF.decode_file(open(p, "rb").read())
-    assert [r["id"] for r in serial] == list(range(1000))
-
-
 def test_avro_fallback_rejects_unsupported(spark, tmp_path):
     import pytest
 

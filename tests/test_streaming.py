@@ -2,15 +2,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
+from conftest import SF_DIR
 
 from data_migration_tool_spark.streaming.file_stream import (
     deduped_stream,
-    run_events_stream_demo,
+    drain,
     watch_config_dir,
     windowed_event_counts,
 )
+from data_migration_tool_spark.tables import stream_table, table_path
 
 
 def test_windowed_event_counts_batch(spark, tables):
@@ -29,9 +32,15 @@ def test_deduped_stream_batch(spark):
 
 
 def test_events_streaming_end_to_end(spark, tmp_path):
-    rows = run_events_stream_demo(
-        spark, "/root/testdata/sf0.001/events.parquet", str(tmp_path)
-    )
+    """Copy the events parquet in as a landed file, stream it with
+    AvailableNow through ``drain``, window-aggregate into a memory sink."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    shutil.copy(table_path(SF_DIR, "events"), landing / "events.parquet")
+    agg = windowed_event_counts(stream_table(spark, str(landing)))
+    rows = drain(
+        agg, "events_windows", str(tmp_path), str(landing), output_mode="complete"
+    ).collect()
     assert len(rows) > 0
     # streaming result must equal the batch computation
     from data_migration_tool_spark.tables import load_table
@@ -185,60 +194,6 @@ def test_cdc_stream_upsert_across_batches(spark, tmp_path):
     assert {tuple(r) for r in spark.read.parquet(target).collect()} == {
         (1, "a1", 2), (2, "b0", 1), (3, "c0", 1)
     }
-
-
-def test_quota_stream_v2_gate_or_run(spark, tmp_path):
-    """State-V2 (transformWithStateInPandas) needs google.protobuf for
-    its state protocol. Without it the wrapper must raise a loud, named
-    error BEFORE any stream starts; with it, the V2 path must produce
-    the same totals as the gated V1 query."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    from data_migration_tool_spark.streaming.quota import (
-        _state_v2_available,
-        quota_stream_v2,
-    )
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    shutil.copy(
-        "/root/testdata/sf0.001/events.parquet",
-        os.path.join(landing, "events.parquet"),
-    )
-
-    if not _state_v2_available():
-        with _pytest.raises(RuntimeError, match="protobuf"):
-            quota_stream_v2(
-                spark.readStream.schema(
-                    spark.read.parquet(landing).schema
-                ).parquet(landing)
-            )
-        return
-
-    from data_migration_tool_spark.plans.streamq import events_stream_user_quota
-
-    schema = spark.read.parquet(landing).schema
-    stream = spark.readStream.schema(schema).parquet(landing)
-    sink = "quota_v2_test"
-    q = (
-        quota_stream_v2(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    v2 = {tuple(r) for r in spark.table(sink).collect()}
-    v1 = {
-        tuple(r)
-        for r in events_stream_user_quota(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert v2 == v1
 
 
 def test_stream_dedup_across_two_microbatches(spark, tmp_path):
