@@ -1083,39 +1083,41 @@ def dmt_guard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_migration_tool_spark.operators import similarity as SIM
 
     root = tempfile.mkdtemp(prefix="dmt_guardaudit_")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    )
-
-    older = AuditLog(spark, root, run_id="run-001")
-    SIM.cap_bucket_size(
-        docs.select("doc_id", (F.col("doc_id") % 3).alias("bucket")),
-        "bucket", 1, audit=older, context="doc_id%3",
-    )
-
-    latest = AuditLog(spark, root, run_id="run-002")
-    for mod in (8, 4):
-        SIM.cap_bucket_size(
-            docs.select("doc_id", (F.col("doc_id") % mod).alias("bucket")),
-            "bucket", 1, audit=latest, context=f"doc_id%{mod}",
-        )
-    tiny = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"),
-         (3, "alpha beta gamma")],
-        "doc_id long, text string",
-    )
     try:
-        DD.ngram_jaccard_pairs(tiny, max_join_pairs=1, audit=latest)
-    except RuntimeError:
-        pass  # the refusal IS the result — its guard row is the point
-    DD.ngram_jaccard_pairs(
-        tiny, max_join_pairs=1, auto_candidates=True, audit=latest
-    )
+        docs = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("long").alias("doc_id")
+        )
 
-    # the audit read is driver-resident (AuditLog.table), so the plan
-    # holds the rows, not the files: the scratch dir goes right away
-    ev = AuditLog(spark, root).table("dmt_guard_events")
-    shutil.rmtree(root, ignore_errors=True)
+        older = AuditLog(spark, root, run_id="run-001")
+        SIM.cap_bucket_size(
+            docs.select("doc_id", (F.col("doc_id") % 3).alias("bucket")),
+            "bucket", 1, audit=older, context="doc_id%3",
+        )
+
+        latest = AuditLog(spark, root, run_id="run-002")
+        for mod in (8, 4):
+            SIM.cap_bucket_size(
+                docs.select("doc_id", (F.col("doc_id") % mod).alias("bucket")),
+                "bucket", 1, audit=latest, context=f"doc_id%{mod}",
+            )
+        tiny = spark.createDataFrame(
+            [(1, "alpha beta gamma"), (2, "alpha beta gamma"),
+             (3, "alpha beta gamma")],
+            "doc_id long, text string",
+        )
+        try:
+            DD.ngram_jaccard_pairs(tiny, max_join_pairs=1, audit=latest)
+        except RuntimeError:
+            pass  # the refusal IS the result — its guard row is the point
+        DD.ngram_jaccard_pairs(
+            tiny, max_join_pairs=1, auto_candidates=True, audit=latest
+        )
+
+        # the audit read is driver-resident (AuditLog.table), so the plan
+        # holds the rows, not the files: the scratch dir goes on every exit
+        ev = AuditLog(spark, root).table("dmt_guard_events")
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     mx = ev.agg(F.max("run_id").alias("run_id"))
     return (
         ev.join(F.broadcast(mx), "run_id")

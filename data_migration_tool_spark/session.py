@@ -12,13 +12,66 @@ the warehouse. Config notes (scale rationale):
 - Arrow enabled for every pandas interchange (Pandas UDFs are the only
   sanctioned Python-side path; row-at-a-time UDFs are banned in this
   codebase).
+
+Two fixed costs are removed here, because this module is
+imported in every process that runs package code: the driver, and each
+Python worker (unpickling a package kernel imports the package, whose
+``__init__`` imports this module).
+
+- A Python task re-reads no zip archive that has not changed.
+  PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+  of every task; on a CPython whose ``zipimport`` reads eagerly, each
+  ``zipimporter`` then re-reads its whole archive directory (pyspark.zip
+  and spark-core's jar lead a worker's ``sys.path``: ~0.12 s per task).
+  ``_install_zip_guard`` makes an importer re-read its archive only
+  when the archive's ``(st_mtime_ns, st_size)`` differs from the last
+  read, so every change to an archive is still seen. CPython's lazy
+  zipimport (3.13+, ``zipimporter._get_files``) needs no guard.
+- A PySpark Column or ``functions`` call captures no call site on the
+  driver: ``spark.python.sql.dataFrameDebugging.enabled`` is ``false``
+  in ``_BASE_CONF``. With it on, each call pays 4-5 py4j round trips
+  (active session, JVM class lookup, conf read, origin set and clear) so
+  that an analysis error can name the Python line that built the
+  expression. Pass it as ``"true"`` through ``extra`` to get that
+  context back while debugging.
 """
 
 from __future__ import annotations
 
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _install_zip_guard() -> None:
+    """Wrap ``zipimporter.invalidate_caches`` so that an importer re-reads
+    its archive only when the archive's ``(st_mtime_ns, st_size)``
+    changed since that importer last read it. Idempotent; a no-op where
+    zipimport is already lazy."""
+    cls = zipimport.zipimporter
+    if hasattr(cls, "_get_files") or hasattr(cls, "_dmt_eager_invalidate"):
+        return
+    eager = cls.invalidate_caches
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        # stat before the read: a change racing the read shows up as a
+        # new stamp on the next call, never as a missed one
+        if stamp is not None and getattr(self, "_dmt_read_stamp", None) == stamp:
+            return
+        eager(self)
+        self._dmt_read_stamp = stamp
+
+    cls._dmt_eager_invalidate = eager
+    cls.invalidate_caches = invalidate_caches
+
+
+_install_zip_guard()
 
 # Defaults chosen for local[32] testing; override any of them via the
 # ``extra`` dict or real spark-submit conf on a cluster.
@@ -42,6 +95,8 @@ _BASE_CONF: dict[str, str] = {
     # storage tracks live state, not allocation history (see SCALE.md)
     "spark.cleaner.periodicGC.interval": "5min",
     "spark.ui.enabled": "false",
+    # no call-site capture per Column/functions call (see module docstring)
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.sql.warehouse.dir": "/tmp/dmt-spark-warehouse",
 }
 

@@ -3,6 +3,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 
 import pytest
 from conftest import SF_DIR
@@ -429,11 +430,23 @@ STREAM_BUILDERS = [
 ]
 
 
+# the temp dir every process shares unless it is pinned
+SHARED_TMP = tempfile.gettempdir()
+
+
+@pytest.fixture
+def own_tempdir(tmp_path, monkeypatch):
+    """Pin Python's temp dir to the test's own ``tmp_path``: scratch dirs
+    (``stream_scratch`` uses ``mkdtemp``) then stage only where
+    ``_session_state`` looks, so a stream that another Spark process
+    stages meanwhile cannot show up in the ``dmt_*`` check."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+
 def _session_state(spark):
     """What a stream builder must leave as it found it: temp views,
     active streams, ``dmt_*`` scratch dirs and session conf."""
     import glob
-    import tempfile
 
     return {
         "temp_views": sorted(
@@ -447,8 +460,20 @@ def _session_state(spark):
     }
 
 
+def test_session_state_ignores_other_processes_scratch(spark, own_tempdir):
+    """A ``dmt_stream_*`` dir that another process stages in the shared
+    temp dir while a hygiene check runs is not part of this test's
+    state."""
+    before = _session_state(spark)
+    foreign = tempfile.mkdtemp(prefix="dmt_stream_", dir=SHARED_TMP)
+    try:
+        assert _session_state(spark) == before
+    finally:
+        os.rmdir(foreign)
+
+
 @pytest.mark.parametrize("name", STREAM_BUILDERS)
-def test_stream_builder_leaves_session_clean(spark, name):
+def test_stream_builder_leaves_session_clean(spark, own_tempdir, name):
     """Each stream builder, consumed with ``collect()``, drops its memory
     sink view, stops its query, removes its scratch dir and restores
     the conf its drain scoped."""
@@ -483,7 +508,7 @@ def _raise_batch(_df, _bid):
 
 
 @pytest.mark.parametrize("case", ["timeout", "raising_batch", "raising_sink"])
-def test_drain_refusal_paths_leave_session_clean(spark, monkeypatch, case):
+def test_drain_refusal_paths_leave_session_clean(spark, own_tempdir, monkeypatch, case):
     """The harness's refusal paths clean up like its success path: a
     drain past the timeout (stopped, then refused), a ``foreachBatch``
     that raises, and a memory-sink stream whose task raises. The
@@ -509,7 +534,7 @@ def test_drain_refusal_paths_leave_session_clean(spark, monkeypatch, case):
     assert _session_state(spark) == before
 
 
-def test_stream_scratch_removed_when_staging_raises(spark, tmp_path):
+def test_stream_scratch_removed_when_staging_raises(spark, own_tempdir, tmp_path):
     """A setup that raises before any stream starts still removes the
     scratch dir: here the stager finds no part files to land."""
     from data_migration_tool_spark.plans.streamq import _stage_events
@@ -561,7 +586,9 @@ def test_orders_stream_join_ivm_equals_direct_join(spark):
     assert got == want and len(got) > 0
 
 
-def test_orders_stream_join_ivm_refusal_releases_cached_lineitem(spark, monkeypatch):
+def test_orders_stream_join_ivm_refusal_releases_cached_lineitem(
+    spark, own_tempdir, monkeypatch
+):
     """A drain that raises (here every micro-batch's view apply) after
     the cached lineitem was read must still release it: after a JVM GC
     ``getPersistentRDDs()`` holds no RDD the builder persisted, and the
@@ -577,7 +604,11 @@ def test_orders_stream_join_ivm_refusal_releases_cached_lineitem(spark, monkeypa
     from data_migration_tool_spark.plans import streamq
 
     def persistent_ids() -> set[int]:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        # ids as one string: ``getPersistentRDDs()`` returns JavaRDD
+        # wrappers that py4j keeps bound until its asynchronous finalizer
+        # runs, so each poll through it would pin the RDD polled for
+        ids = spark.sparkContext._jsc.sc().persistentRdds().keySet().mkString(",")
+        return {int(i) for i in ids.split(",") if i}
 
     def raising_apply(*_args, **_kwargs):
         raise ValueError("planted view-apply failure")

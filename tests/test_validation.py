@@ -455,6 +455,29 @@ def test_guard_audit_latest_run_scope(spark):
         assert (g.engagements, g.implied_cost, g.cap) == (1, 3, 1)
 
 
+def test_guard_audit_removes_its_scratch_dir_when_seeding_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A seeding step that raises still removes the builder's
+    ``dmt_guardaudit_*`` scratch dir."""
+    import tempfile
+
+    import pytest
+    from conftest import SF_DIR
+
+    from data_migration_tool_spark.operators import similarity as SIM
+    from data_migration_tool_spark.plans.validationq import dmt_guard_audit
+
+    def failing_cap(*_args, **_kwargs):
+        raise RuntimeError("planted seeding failure")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(SIM, "cap_bucket_size", failing_cap)
+    with pytest.raises(RuntimeError, match="planted seeding failure"):
+        dmt_guard_audit(spark, SF_DIR)
+    assert list(tmp_path.glob("dmt_guardaudit_*")) == []
+
+
 def test_guard_event_run_id_default_null(spark, tmp_path):
     """guard_event stamps the AuditLog's run_id; logs constructed
     without one write NULL (backward compatible with every existing
